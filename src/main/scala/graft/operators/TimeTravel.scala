@@ -391,30 +391,45 @@ object TimeTravel {
     * minimal (a no-op commit would be noise, not an operation). */
   def downgradeProtocol(spark: SparkSession, baseDir: String): Int = {
     val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits")
-    while (true) {
+    commitMetadata(spark, baseDir, "protocol", ratchet = false) {
+      (snap, meta) =>
+        val cur = protocolOfRecord(fs, baseDir, snap.version).getOrElse((1, 1))
+        require(cur != protocolNeededBy(meta.colmap, meta.coldrop, snap.dvs),
+          s"$baseDir's protocol requirement $cur is already the minimum " +
+            "its current content needs — nothing to downgrade")
+        meta
+    }
+  }
+
+  /** The ONE commit loop of the metadata-only operations (constraints,
+    * bloom policy, column evolution and mapping, protocol downgrade):
+    * resolve the tip, run the caller's checks and policy `transform`
+    * against its snapshot and recorded [[TableMeta]], and land a
+    * data-free record through [[logCommit]] — so a metadata commit
+    * writes its cadence checkpoint like any other. A lost version race
+    * re-runs checks and transform against the NEW tip: a concurrent
+    * commit must never slip in under a policy it was not checked
+    * against. `ratchet = false` declares exactly what the content needs
+    * (the downgrade). Returns the committed version. */
+  private[operators] def commitMetadata(spark: SparkSession, baseDir: String,
+      op: String, ratchet: Boolean = true)(
+      transform: (Snapshot, TableMeta) => TableMeta): Int = {
+    val fs = hadoopFs(spark, baseDir)
+    @annotation.tailrec def attempt(prev: Int): Int = {
       val snap = resolveFull(spark, baseDir, prev)
-      val needed = protocolNeededBy(snap.colmap, snap.dropped, snap.dvs)
-      val cur = protocolOfRecord(fs, baseDir, prev).getOrElse((1, 1))
-      require(cur != needed,
-        s"$baseDir's protocol requirement $cur is already the minimum " +
-          "its current content needs — nothing to downgrade")
-      try {
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None,
-          schemaOfRecord(fs, baseDir, prev), Some("protocol"),
-          constraints = activeConstraints(fs, baseDir, prev),
-          colmap = snap.colmap, coldrop = snap.dropped,
-          bloomIdx = activeBloomIdx(fs, baseDir, prev),
-          protocolOverride = Some(needed))
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
+      val meta = transform(snap, metaOfRecord(fs, baseDir, prev))
+      val landed =
+        try Some(logCommit(spark, fs, baseDir, prev + 1, Set.empty, Nil, Nil,
+          Map.empty, () => snap, None, meta, op, ratchet = ratchet))
+        catch { case _: CommitConflict => None }
+      landed match {
+        case Some(v) => v
+        case None => attempt(latestVersion(spark, baseDir))
       }
     }
-    -1 // unreachable
+    val tip = latestVersion(spark, baseDir)
+    require(tip >= 1, s"$baseDir has no commits — init the table first")
+    attempt(tip)
   }
 
   private def readLinesUngated(fs: FileSystem, p: Path): List[String] = {
@@ -498,17 +513,8 @@ object TimeTravel {
   /** The active constraint set recorded at `version` — one record read
     * (every record carries the full set). Empty on pre-constraint logs. */
   def constraintsAt(spark: SparkSession, baseDir: String,
-      version: Int): Map[String, String] = {
-    val fs = hadoopFs(spark, baseDir)
-    activeConstraints(fs, baseDir, version)
-  }
-
-  private def activeConstraints(fs: FileSystem, baseDir: String,
       version: Int): Map[String, String] =
-    Seq(deltaPath(baseDir, version), manifestPath(baseDir, version))
-      .iterator.filter(fs.exists(_))
-      .map(p => constraintsFrom(readRawLines(fs, p)))
-      .nextOption().getOrElse(Map.empty)
+    metaOfRecord(hadoopFs(spark, baseDir), baseDir, version).constraints
 
   /** Refuse `batch` rows that violate any active constraint — ONE
     * combined pass (violations OR'd, limit-1 probe); only the failure
@@ -538,59 +544,28 @@ object TimeTravel {
       sqlExpr: String): Int = {
     require(name.nonEmpty && sqlExpr.nonEmpty,
       "constraint name and expression are required")
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — init the table first")
-    while (true) {
-      val cs = activeConstraints(fs, baseDir, prev)
+    commitMetadata(spark, baseDir, "constraint") { (snap, meta) =>
+      val cs = meta.constraints
       require(!cs.contains(name),
         s"constraint '$name' already exists (${cs(name)}) — drop it first")
       // existing data must satisfy the new invariant, loudly checked
-      enforceConstraints(readVersion(spark, baseDir, prev),
+      enforceConstraints(readVersion(spark, baseDir, snap.version),
         Map(name -> sqlExpr), s"ADD CONSTRAINT $name: existing version " +
-          s"$prev")
-      try {
-        val (cm, cd) = activeColmap(fs, baseDir, prev)
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None,
-          schemaOfRecord(fs, baseDir, prev), Some("constraint"),
-          constraints = cs + (name -> sqlExpr), colmap = cm, coldrop = cd,
-          bloomIdx = activeBloomIdx(fs, baseDir, prev))
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+          s"${snap.version}")
+      meta.copy(constraints = cs + (name -> sqlExpr))
     }
-    -1 // unreachable
   }
 
   /** DROP CONSTRAINT: the shrunken set lands in a metadata-only commit.
     * Dropping an unknown name is a loud error, not a silent no-op. */
   def dropConstraint(spark: SparkSession, baseDir: String,
-      name: String): Int = {
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits")
-    while (true) {
-      val cs = activeConstraints(fs, baseDir, prev)
+      name: String): Int =
+    commitMetadata(spark, baseDir, "constraint") { (_, meta) =>
+      val cs = meta.constraints
       require(cs.contains(name), s"no constraint named '$name' " +
         s"(active: ${cs.keys.toSeq.sorted.mkString(", ")})")
-      try {
-        val (cm, cd) = activeColmap(fs, baseDir, prev)
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None,
-          schemaOfRecord(fs, baseDir, prev), Some("constraint"),
-          constraints = cs - name, colmap = cm, coldrop = cd,
-          bloomIdx = activeBloomIdx(fs, baseDir, prev))
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      meta.copy(constraints = cs - name)
     }
-    -1 // unreachable
-  }
 
   /** CREATE BLOOMFILTER INDEX (Delta's
     * `CREATE BLOOMFILTER INDEX ... ON TABLE` essentials): a
@@ -611,14 +586,10 @@ object TimeTravel {
       expectedItemsPerFile: Long = 100000L, fpp: Double = 0.01): Int = {
     require(expectedItemsPerFile > 0, "expectedItemsPerFile must be > 0")
     require(fpp > 0.0 && fpp < 1.0, "fpp must be in (0, 1)")
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — init the table first")
-    while (true) {
-      val idx = activeBloomIdx(fs, baseDir, prev)
-      require(!idx.contains(column),
+    commitMetadata(spark, baseDir, "bloomidx") { (snap, meta) =>
+      require(!meta.bloomIdx.contains(column),
         s"'$column' is already bloom-indexed — drop the index first")
-      val schema = schemaOfRecord(fs, baseDir, prev).getOrElse(
+      val schema = meta.schema.getOrElse(
         throw new IllegalArgumentException(
           s"$baseDir's log records no schema — pre-metadata tables " +
             "cannot be bloom-indexed"))
@@ -631,26 +602,13 @@ object TimeTravel {
           s"bloom index on '$column' ($other): only STRING and " +
             "integral columns hash into the filter")
       }
-      val snap = resolveFull(spark, baseDir, prev)
       require(snap.files.isEmpty ||
           !partColsLogical(snap.files, snap.colmap).contains(column),
         s"'$column' is a partition column — directory pruning " +
           "already answers equality on it exactly")
-      try {
-        val (cm, cd) = activeColmap(fs, baseDir, prev)
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None,
-          Some(schema), Some("bloomidx"),
-          constraints = activeConstraints(fs, baseDir, prev),
-          colmap = cm, coldrop = cd,
-          bloomIdx = idx + (column -> ((expectedItemsPerFile, fpp))))
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      meta.copy(bloomIdx =
+        meta.bloomIdx + (column -> ((expectedItemsPerFile, fpp))))
     }
-    -1 // unreachable
   }
 
   /** DROP BLOOMFILTER INDEX: stop building filters for `column`.
@@ -658,29 +616,13 @@ object TimeTravel {
     * filter over an unchanged file never goes stale — until rewrites
     * retire the files. Unknown column is a loud error. */
   def dropBloomIndex(spark: SparkSession, baseDir: String,
-      column: String): Int = {
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits")
-    while (true) {
-      val idx = activeBloomIdx(fs, baseDir, prev)
+      column: String): Int =
+    commitMetadata(spark, baseDir, "bloomidx") { (_, meta) =>
+      val idx = meta.bloomIdx
       require(idx.contains(column), s"no bloom index on '$column' " +
         s"(indexed: ${idx.keys.toSeq.sorted.mkString(", ")})")
-      try {
-        val (cm, cd) = activeColmap(fs, baseDir, prev)
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None,
-          schemaOfRecord(fs, baseDir, prev), Some("bloomidx"),
-          constraints = activeConstraints(fs, baseDir, prev),
-          colmap = cm, coldrop = cd, bloomIdx = idx - column)
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      meta.copy(bloomIdx = idx - column)
     }
-    -1 // unreachable
-  }
 
   // ---------------------------------------------------------------------
   // COLUMN MAPPING — rename/drop as METADATA-ONLY commits (Delta's
@@ -717,19 +659,11 @@ object TimeTravel {
       dec(l.stripPrefix("#coldrop=")) }.toSet
 
   /** The column mapping recorded at `version` — one record read (every
-    * record carries the full mapping). Identity on pre-mapping logs. */
-  private def activeColmap(fs: FileSystem, baseDir: String,
-      version: Int): (Map[String, String], Set[String]) =
-    Seq(deltaPath(baseDir, version), manifestPath(baseDir, version))
-      .iterator.filter(fs.exists(_))
-      .map(readRawLines(fs, _))
-      .map(ls => (colmapFrom(ls), coldropFrom(ls)))
-      .nextOption().getOrElse((Map.empty, Set.empty))
-
-  /** Public view of [[activeColmap]]: logical → physical at `version`. */
+    * record carries the full mapping): logical → physical, identity on
+    * pre-mapping logs. */
   def columnMappingAt(spark: SparkSession, baseDir: String,
       version: Int): Map[String, String] =
-    activeColmap(hadoopFs(spark, baseDir), baseDir, version)._1
+    metaOfRecord(hadoopFs(spark, baseDir), baseDir, version).colmap
 
   /** Physical (file-side) names a new logical column may not take:
     * every mapped physical plus every tombstone. */
@@ -779,44 +713,27 @@ object TimeTravel {
   def addColumns(spark: SparkSession, baseDir: String,
       cols: Seq[org.apache.spark.sql.types.StructField]): Int = {
     require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — init the table first")
     cols.foreach(f => require(f.nullable,
       s"ADD COLUMN ${f.name} NOT NULL is unsatisfiable: every " +
         "pre-evolution row reads the new column as NULL — add it " +
         "nullable, backfill, then ADD CONSTRAINT"))
     require(cols.map(_.name).distinct.size == cols.size,
       s"duplicate names in ADD COLUMNS (${cols.map(_.name).mkString(", ")})")
-    while (true) {
-      val snap = resolveFull(spark, baseDir, prev)
+    commitMetadata(spark, baseDir, "evolve") { (snap, meta) =>
       val schema = snap.schema.getOrElse(throw new IllegalArgumentException(
         s"$baseDir records no schema — pre-metadata tables cannot evolve"))
       cols.foreach { f =>
         require(!schema.fieldNames.contains(f.name),
           s"column '${f.name}' already exists " +
             s"(columns: ${schema.fieldNames.mkString(", ")})")
-        require(!reservedPhysical(snap.colmap, snap.dropped)(f.name),
+        require(!reservedPhysical(meta.colmap, meta.coldrop)(f.name),
           s"'${f.name}' is a reserved physical name (a renamed or " +
             "dropped column's file-side name) — old files' orphaned " +
             "values would silently resurface; pick a different name")
       }
-      val newSchema = org.apache.spark.sql.types.StructType(
-        schema.fields ++ cols)
-      try {
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None, Some(newSchema),
-          Some("evolve"),
-          constraints = activeConstraints(fs, baseDir, prev),
-          colmap = snap.colmap, coldrop = snap.dropped,
-          bloomIdx = activeBloomIdx(fs, baseDir, prev))
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      meta.copy(schema = Some(org.apache.spark.sql.types.StructType(
+        schema.fields ++ cols)))
     }
-    -1 // unreachable
   }
 
   /** RENAME COLUMN as a metadata-only commit: the schema takes the new
@@ -830,54 +747,38 @@ object TimeTravel {
   def renameColumn(spark: SparkSession, baseDir: String,
       from: String, to: String): Int = {
     require(from != to, "rename to the same name is a no-op — refusing")
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — init the table first")
-    while (true) {
-      val snap = resolveFull(spark, baseDir, prev)
+    commitMetadata(spark, baseDir, "colmap") { (snap, meta) =>
       val schema = snap.schema.getOrElse(throw new IllegalArgumentException(
         s"$baseDir records no schema — pre-metadata tables cannot rename"))
       require(schema.fieldNames.contains(from),
         s"no column '$from' (columns: ${schema.fieldNames.mkString(", ")})")
       require(!schema.fieldNames.contains(to),
         s"column '$to' already exists")
-      require(!activePartCols(spark, baseDir, snap, prev)
+      require(!activePartCols(spark, baseDir, snap)
           .getOrElse(Nil).contains(from),
         s"'$from' is a partition column — its name IS the directory " +
           "layout; repartitioning is a rewrite, not a rename")
-      require(!reservedPhysical(snap.colmap, snap.dropped)(to) ||
-        snap.colmap.get(from).contains(to),
+      require(!reservedPhysical(meta.colmap, meta.coldrop)(to) ||
+        meta.colmap.get(from).contains(to),
         s"'$to' is a reserved physical name (a renamed or dropped " +
           "column's file-side name) — pick a different name")
-      val cs = activeConstraints(fs, baseDir, prev)
-      constraintMentions(cs, from).foreach(n =>
+      constraintMentions(meta.constraints, from).foreach(n =>
         throw new IllegalArgumentException(
           s"CHECK constraint '$n' mentions '$from' — drop the " +
             "constraint first, rename, then re-add it under the new name"))
-      val bloomIdx = activeBloomIdx(fs, baseDir, prev)
-      require(!bloomIdx.contains(from),
+      require(!meta.bloomIdx.contains(from),
         s"'$from' is bloom-indexed — drop the index first, rename, " +
           "then re-create it under the new name (the policy and the " +
           "recorded filters key the logical name)")
-      val physical = snap.colmap.getOrElse(from, from)
-      val newSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.map(f =>
-          if (f.name == from) f.copy(name = to) else f))
-      val newMap =
-        if (physical == to) snap.colmap - from // renamed BACK: identity
-        else snap.colmap - from + (to -> physical)
-      try {
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None, Some(newSchema),
-          Some("colmap"), constraints = cs,
-          colmap = newMap, coldrop = snap.dropped, bloomIdx = bloomIdx)
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
-      }
+      val physical = meta.colmap.getOrElse(from, from)
+      meta.copy(
+        schema = Some(org.apache.spark.sql.types.StructType(
+          schema.fields.map(f =>
+            if (f.name == from) f.copy(name = to) else f))),
+        colmap =
+          if (physical == to) meta.colmap - from // renamed BACK: identity
+          else meta.colmap - from + (to -> physical))
     }
-    -1 // unreachable
   }
 
   /** DROP COLUMN as a metadata-only commit: the schema loses the
@@ -887,48 +788,39 @@ object TimeTravel {
     * for the partition column and while a CHECK constraint mentions
     * the column. */
   def dropColumn(spark: SparkSession, baseDir: String,
-      name: String): Int = {
-    val fs = hadoopFs(spark, baseDir)
-    var prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits")
-    while (true) {
-      val snap = resolveFull(spark, baseDir, prev)
-      val schema = snap.schema.getOrElse(throw new IllegalArgumentException(
-        s"$baseDir records no schema — pre-metadata tables cannot drop"))
-      require(schema.fieldNames.contains(name),
-        s"no column '$name' (columns: ${schema.fieldNames.mkString(", ")})")
-      require(!activePartCols(spark, baseDir, snap, prev)
-          .getOrElse(Nil).contains(name),
-        s"'$name' is a partition column — dropping it is a " +
-          "repartition (a rewrite), not a metadata drop")
-      require(schema.fields.length > 2,
-        "dropping would leave fewer than two columns (partition + one " +
-          "data column) — drop the table instead")
-      val cs = activeConstraints(fs, baseDir, prev)
-      constraintMentions(cs, name).foreach(n =>
-        throw new IllegalArgumentException(
-          s"CHECK constraint '$n' mentions '$name' — drop the " +
-            "constraint first"))
-      val bloomIdx = activeBloomIdx(fs, baseDir, prev)
-      require(!bloomIdx.contains(name),
-        s"'$name' is bloom-indexed — drop the index first")
-      val physical = snap.colmap.getOrElse(name, name)
-      val newSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.filterNot(_.name == name))
-      try {
-        writeDelta(fs, baseDir, prev + 1, Nil, Nil, None, Some(newSchema),
-          Some("colmap"), constraints = cs,
-          colmap = snap.colmap - name, coldrop = snap.dropped + physical,
-          bloomIdx = bloomIdx)
-        commitStats.put(baseDir, CommitStats(prev + 1, Set.empty, 0, 0,
-          checkpointed = false))
-        return prev + 1
-      } catch {
-        case _: CommitConflict => prev = latestVersion(spark, baseDir)
+      name: String): Int =
+    dropColumns(spark, baseDir, Seq(name))
+
+  /** [[dropColumn]] for several columns in ONE commit: each name is
+    * checked against the schema the earlier drops leave, and any
+    * refusal refuses the whole statement — nothing lands. */
+  private[graft] def dropColumns(spark: SparkSession, baseDir: String,
+      names: Seq[String]): Int =
+    commitMetadata(spark, baseDir, "colmap") { (snap, meta) =>
+      val partCols = activePartCols(spark, baseDir, snap).getOrElse(Nil)
+      names.foldLeft(meta.copy(schema = snap.schema)) { (m, name) =>
+        val schema = m.schema.getOrElse(throw new IllegalArgumentException(
+          s"$baseDir records no schema — pre-metadata tables cannot drop"))
+        require(schema.fieldNames.contains(name),
+          s"no column '$name' (columns: ${schema.fieldNames.mkString(", ")})")
+        require(!partCols.contains(name),
+          s"'$name' is a partition column — dropping it is a " +
+            "repartition (a rewrite), not a metadata drop")
+        require(schema.fields.length > 2,
+          "dropping would leave fewer than two columns (partition + one " +
+            "data column) — drop the table instead")
+        constraintMentions(m.constraints, name).foreach(n =>
+          throw new IllegalArgumentException(
+            s"CHECK constraint '$n' mentions '$name' — drop the " +
+              "constraint first"))
+        require(!m.bloomIdx.contains(name),
+          s"'$name' is bloom-indexed — drop the index first")
+        m.copy(schema = Some(org.apache.spark.sql.types.StructType(
+            schema.fields.filterNot(_.name == name))),
+          colmap = m.colmap - name,
+          coldrop = m.coldrop + m.colmap.getOrElse(name, name))
       }
     }
-    -1 // unreachable
-  }
 
   /** Commit-kind and wall-clock metadata lines. The `#op=` kind is what
     * lets a log CONSUMER reason about a commit without reading its data:
@@ -1061,20 +953,11 @@ object TimeTravel {
       dec(parts(0)) -> ((parts(1).toLong, parts(2).toDouble))
     }.toMap
 
-  /** The bloom-index policy active AS OF version `v` — one record
-    * read, like [[activeConstraints]]. */
-  private def activeBloomIdx(fs: FileSystem, baseDir: String,
-      v: Int): Map[String, (Long, Double)] = {
-    val p = Seq(deltaPath(baseDir, v), manifestPath(baseDir, v))
-      .find(fs.exists(_))
-    p.map(path => bloomIdxFrom(readRawLines(fs, path)))
-      .getOrElse(Map.empty)
-  }
-
-  /** The bloom-index policy as of `version` — public observability. */
+  /** The bloom-index policy as of `version` — one record read, public
+    * observability. */
   def bloomIndexAt(spark: SparkSession, baseDir: String,
       version: Int): Map[String, (Long, Double)] =
-    activeBloomIdx(hadoopFs(spark, baseDir), baseDir, version)
+    metaOfRecord(hadoopFs(spark, baseDir), baseDir, version).bloomIdx
 
   /** One file's per-column (min, max) as canonical strings — decimal
     * text for every numeric-ish column (dates as epoch days), raw text
@@ -1337,19 +1220,8 @@ object TimeTravel {
   private[graft] def schemaOfRecordFast(spark: SparkSession,
       baseDir: String, version: Int)
       : Option[org.apache.spark.sql.types.StructType] =
-    schemaOfRecord(hadoopFs(spark, baseDir), baseDir, version)
+    metaOfRecord(hadoopFs(spark, baseDir), baseDir, version).schema
       .orElse(schemaAt(spark, baseDir, version))
-
-  /** Fast path for the commit-time schema check: every commit record
-    * carries its own `#schema=`, so `version`'s schema is ONE record
-    * read — no log walk. (None only on pre-schema-line logs, where the
-    * check degrades to unchecked, matching their read behavior.) */
-  private def schemaOfRecord(fs: FileSystem, baseDir: String,
-      version: Int): Option[org.apache.spark.sql.types.StructType] =
-    Seq(deltaPath(baseDir, version), manifestPath(baseDir, version))
-      .iterator.filter(fs.exists(_))
-      .flatMap(p => schemaFrom(readRawLines(fs, p)))
-      .nextOption()
 
   private def parseTxn(l: String): (String, Long) = {
     val body = l.stripPrefix("#txn=")
@@ -1404,10 +1276,54 @@ object TimeTravel {
           .asInstanceOf[org.apache.spark.sql.types.StructType]
     }
 
+  /** The table POLICY every commit record carries in full: committed
+    * schema (None only on pre-schema-line logs), CHECK constraints,
+    * column mapping (logical → physical, identity entries omitted) with
+    * the dropped columns' physical tombstones, and the bloom-index
+    * policy. Reading one record answers all of it with no log walk;
+    * [[metaOfRecord]] reads it and [[headerLines]] writes it. */
+  private[operators] final case class TableMeta(
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      constraints: Map[String, String] = Map.empty,
+      colmap: Map[String, String] = Map.empty,
+      coldrop: Set[String] = Set.empty,
+      bloomIdx: Map[String, (Long, Double)] = Map.empty) {
+    /** The policy kinds (schema aside) on which `other` differs. */
+    def changedIn(other: TableMeta): Seq[String] =
+      Seq("constraint" -> (constraints != other.constraints),
+        "column-mapping" ->
+          (colmap != other.colmap || coldrop != other.coldrop),
+        "bloom-index" -> (bloomIdx != other.bloomIdx))
+        .collect { case (kind, true) => kind }
+  }
+
+  private def metaFrom(lines: Seq[String]): TableMeta =
+    TableMeta(schemaFrom(lines), constraintsFrom(lines), colmapFrom(lines),
+      coldropFrom(lines), bloomIdxFrom(lines))
+
+  /** The policy recorded at `version` — ONE record read: its delta (the
+    * authoritative commit record) when it exists, else its checkpoint
+    * manifest. A delta without a `#schema=` line (pre-schema history)
+    * takes the schema from a manifest at the same version. Empty when
+    * no record of `version` survives. */
+  private def metaOfRecord(fs: FileSystem, baseDir: String,
+      version: Int): TableMeta = {
+    val records = Seq(deltaPath(baseDir, version),
+      manifestPath(baseDir, version)).iterator.filter(fs.exists(_))
+    if (!records.hasNext) TableMeta()
+    else {
+      val meta = metaFrom(readRawLines(fs, records.next()))
+      if (meta.schema.isDefined) meta
+      else meta.copy(schema = records.nextOption()
+        .flatMap(p => schemaFrom(readRawLines(fs, p))))
+    }
+  }
+
   /** A version fully resolved from the log: its file set, committed
     * schema, and per-file data-skipping stats (files with none recorded
     * are simply absent from `stats`). */
-  private final case class Snapshot(files: Seq[String],
+  private[operators] final case class Snapshot(version: Int,
+      files: Seq[String],
       schema: Option[org.apache.spark.sql.types.StructType],
       stats: Map[String, String],
       colmap: Map[String, String] = Map.empty,
@@ -1461,26 +1377,25 @@ object TimeTravel {
       blooms = blooms -- removes ++ bloomsFrom(lines)
       lastLines = lines
     }
-    Snapshot(files.toSeq.sorted, schema,
+    Snapshot(version, files.toSeq.sorted, schema,
       stats.filter { case (f, _) => files(f) },
       colmapFrom(lastLines), coldropFrom(lastLines),
       dvs.filter { case (f, _) => files(f) },
       blooms.filter { case (f, _) => files(f) })
   }
 
-  /** Full checkpoint for `version`. Exclusive install for commit
-    * records (init's v1); vacuum may re-materialize a floor checkpoint,
-    * which skips the write when one already exists. */
-  /** The requirement a record at `version` must declare: what its own
-    * content needs, ratcheted against any surviving record at the same
-    * version (a checkpoint written next to its delta) and the previous
-    * one — requirements never decrease without an explicit downgrade. */
+  /** The requirement a checkpoint at `version` must declare: what its
+    * own content needs, ratcheted against the record already at
+    * `version` (the delta it is written next to — which already carries
+    * the ratchet, or a downgrade's lowered requirement), else against
+    * the previous record — requirements never decrease without an
+    * explicit downgrade. */
   private def ratchetedProtocol(fs: FileSystem, baseDir: String,
-      version: Int, colmap: Map[String, String], coldrop: Set[String],
-      dvs: Map[String, String]): (Int, Int) =
-    (Seq(protocolNeededBy(colmap, coldrop, dvs)) ++
-      protocolOfRecord(fs, baseDir, version) ++
-      protocolOfRecord(fs, baseDir, version - 1)).reduce(maxProtocol)
+      version: Int, meta: TableMeta, dvs: Map[String, String]): (Int, Int) =
+    (Seq(protocolNeededBy(meta.colmap, meta.coldrop, dvs)) ++
+      protocolOfRecord(fs, baseDir, version)
+        .orElse(protocolOfRecord(fs, baseDir, version - 1)))
+      .reduce(maxProtocol)
 
   /** `#partcols=` — the table's partition layout, recorded explicitly
     * ONLY where the file layout cannot answer it: a record whose
@@ -1495,49 +1410,46 @@ object TimeTravel {
     lines.collectFirst { case l if l.startsWith("#partcols=") =>
       splitCols(l.stripPrefix("#partcols=")).map(dec) }
 
+  /** The metadata header every record kind opens with, in its fixed
+    * order: protocol, txn marks, the table policy ([[TableMeta]]; an
+    * empty v1's `#partcols=` right after its schema), commit kind,
+    * change-capture token, wall-clock (`ts` None = now). */
+  private def headerLines(proto: (Int, Int), txns: Seq[(String, Long)],
+      meta: TableMeta, op: Option[String], ts: Option[Long],
+      cdc: Option[String] = None,
+      partCols: Option[Seq[String]] = None): Seq[String] =
+    Seq(protocolLine(proto._1, proto._2)) ++ txns.map(txnLine) ++
+      meta.schema.map(schemaLine) ++ partCols.map(partColsLine) ++
+      constraintLines(meta.constraints) ++
+      colmapLines(meta.colmap, meta.coldrop) ++
+      bloomIdxLines(meta.bloomIdx) ++ op.map(opLine) ++ cdc.map(cdcLine) :+
+      ts.fold(tsLine())(t => s"#ts=$t")
+
+  /** Full TEXT checkpoint for `version`: header, then every file's
+    * stats and bindings, then the file list. Exclusive install.
+    * `ts`: pass the ORIGINAL commit's wall-clock when re-materializing
+    * an existing version's checkpoint (vacuum's floor) — stamping a
+    * fresh time would rewrite history under [[versionAsOf]]. */
   private def manifestContent(proto: (Int, Int), files: Seq[String],
-      txns: Seq[(String, Long)],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      op: Option[String], ts: Option[Long],
-      stats: Map[String, String],
-      constraints: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
-      dvs: Map[String, String] = Map.empty,
-      blooms: Map[String, String] = Map.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty,
+      txns: Seq[(String, Long)], meta: TableMeta, op: Option[String],
+      ts: Option[Long], stats: Map[String, String],
+      dvs: Map[String, String], blooms: Map[String, String],
       partCols: Option[Seq[String]] = None): Array[Byte] =
-    (Seq(protocolLine(proto._1, proto._2)) ++
-      txns.map(txnLine) ++ schema.map(schemaLine).toSeq ++
-      partCols.map(partColsLine).toSeq ++
-      constraintLines(constraints) ++ colmapLines(colmap, coldrop) ++
-      bloomIdxLines(bloomIdx) ++
-      op.map(opLine).toSeq ++ Seq(ts.fold(tsLine())(t => s"#ts=$t")) ++
+    (headerLines(proto, txns, meta, op, ts, partCols = partCols) ++
       statsLinesFor(files, stats) ++ dvLinesFor(dvs) ++
       bloomLinesFor(blooms) ++
       files.sorted).mkString("\n").getBytes("UTF-8")
 
-  /** `ts`: pass the ORIGINAL commit's wall-clock when re-materializing
-    * an existing version's checkpoint (vacuum's floor) — stamping a
-    * fresh time would rewrite history under [[versionAsOf]]. */
   private def writeManifest(fs: FileSystem, baseDir: String, version: Int,
-      files: Seq[String], txns: Seq[(String, Long)] = Nil,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      op: Option[String] = None, ts: Option[Long] = None,
+      files: Seq[String], txns: Seq[(String, Long)], meta: TableMeta,
+      op: Option[String], ts: Option[Long] = None,
       stats: Map[String, String] = Map.empty,
-      constraints: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
       dvs: Map[String, String] = Map.empty,
       blooms: Map[String, String] = Map.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty,
-      partCols: Option[Seq[String]] = None): Unit = {
+      partCols: Option[Seq[String]] = None): Unit =
     installExclusive(fs, manifestPath(baseDir, version),
-      manifestContent(
-        ratchetedProtocol(fs, baseDir, version, colmap, coldrop, dvs),
-        files, txns, schema, op, ts, stats, constraints,
-        colmap, coldrop, dvs, blooms, bloomIdx, partCols))
-  }
+      manifestContent(ratchetedProtocol(fs, baseDir, version, meta, dvs),
+        files, txns, meta, op, ts, stats, dvs, blooms, partCols))
 
   /** Header-only checkpoint manifest: the metadata lines (txns, schema,
     * constraints, op, ts) plus the file COUNT and the parquet-body
@@ -1546,19 +1458,9 @@ object TimeTravel {
     * The body order (metadata first) keeps [[commitTimestamp]]'s
     * header-only read contract intact. */
   private def checkpointHeaderContent(proto: (Int, Int), token: String,
-      nFiles: Int,
-      txns: Seq[(String, Long)],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      op: Option[String], ts: Option[Long],
-      constraints: Map[String, String],
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty): Array[Byte] =
-    (Seq(protocolLine(proto._1, proto._2)) ++
-      txns.map(txnLine) ++ schema.map(schemaLine).toSeq ++
-      constraintLines(constraints) ++ colmapLines(colmap, coldrop) ++
-      bloomIdxLines(bloomIdx) ++
-      op.map(opLine).toSeq ++ Seq(ts.fold(tsLine())(t => s"#ts=$t")) ++
+      nFiles: Int, txns: Seq[(String, Long)], meta: TableMeta,
+      op: Option[String], ts: Option[Long]): Array[Byte] =
+    (headerLines(proto, txns, meta, op, ts) ++
       Seq(s"#nfiles=$nFiles", s"#filesbody=parquet:$token"))
       .mkString("\n").getBytes("UTF-8")
 
@@ -1680,28 +1582,20 @@ object TimeTravel {
     * way (the manifest is what makes the checkpoint visible). */
   private def writeManifestCheckpoint(spark: SparkSession, fs: FileSystem,
       baseDir: String, version: Int, files: Seq[String],
-      txns: Seq[(String, Long)] = Nil,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      op: Option[String] = None, ts: Option[Long] = None,
-      stats: Map[String, String] = Map.empty,
-      constraints: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
-      dvs: Map[String, String] = Map.empty,
-      blooms: Map[String, String] = Map.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty): Unit =
+      txns: Seq[(String, Long)], meta: TableMeta, op: Option[String],
+      ts: Option[Long], stats: Map[String, String],
+      dvs: Map[String, String], blooms: Map[String, String]): Unit =
     if (!parquetCheckpoints)
-      writeManifest(fs, baseDir, version, files, txns, schema, op, ts,
-        stats, constraints, colmap, coldrop, dvs, blooms, bloomIdx)
+      writeManifest(fs, baseDir, version, files, txns, meta, op, ts,
+        stats, dvs, blooms)
     else {
       val token = newToken()
       writeCheckpointSidecar(fs, baseDir, version, token, files, stats,
         dvs, blooms)
       installExclusive(fs, manifestPath(baseDir, version),
         checkpointHeaderContent(
-          ratchetedProtocol(fs, baseDir, version, colmap, coldrop, dvs),
-          token, files.size, txns, schema, op, ts,
-          constraints, colmap, coldrop, bloomIdx))
+          ratchetedProtocol(fs, baseDir, version, meta, dvs),
+          token, files.size, txns, meta, op, ts))
     }
 
   /** The losing writer of a commit race — version `version` was
@@ -1711,58 +1605,6 @@ object TimeTravel {
     * `ConcurrentModificationException`. */
   private final class CommitConflict(val version: Int)
     extends Exception(s"version $version was committed concurrently")
-
-  /** Commit record for `version` — optional txn marker, then adds and
-    * removes, each sorted. Exclusive create: committing an
-    * already-committed version throws [[CommitConflict]] (the losing
-    * writer of a race gets this, and may rebase). */
-  private def writeDelta(fs: FileSystem, baseDir: String, version: Int,
-      adds: Seq[String], removes: Seq[String],
-      txn: Option[(String, Long)] = None,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      op: Option[String] = None,
-      stats: Map[String, String] = Map.empty,
-      cdc: Option[String] = None,
-      constraints: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
-      dvs: Map[String, String] = Map.empty,
-      blooms: Map[String, String] = Map.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty,
-      protocolOverride: Option[(Int, Int)] = None): Unit = {
-    // the table's current requirement gates the WRITE, and the new
-    // record carries the ratcheted requirement forward —
-    // protocolOverride ([[downgradeProtocol]]) replaces the ratchet
-    // but may never understate what the record's own content needs
-    gateWriter(fs, baseDir, version - 1)
-    val needed = protocolNeededBy(colmap, coldrop, dvs)
-    protocolOverride.foreach(p => require(
-      maxProtocol(p, needed) == p,
-      s"protocol override $p understates the record's own content " +
-        s"(needs $needed)"))
-    val proto = protocolOverride.getOrElse(
-      (protocolOfRecord(fs, baseDir, version - 1) ++
-        Seq(needed)).reduce(maxProtocol))
-    val bytes =
-      (Seq(protocolLine(proto._1, proto._2)) ++
-        txn.map(txnLine).toSeq ++ schema.map(schemaLine).toSeq ++
-        constraintLines(constraints) ++ colmapLines(colmap, coldrop) ++
-        bloomIdxLines(bloomIdx) ++
-        op.map(opLine).toSeq ++ cdc.map(cdcLine).toSeq ++ Seq(tsLine()) ++
-        statsLinesFor(adds, stats) ++ dvLinesFor(dvs) ++
-        bloomLinesFor(blooms) ++
-        adds.sorted.map("+" + _) ++ removes.sorted.map("-" + _))
-        .mkString("\n").getBytes("UTF-8")
-    try installExclusive(fs, deltaPath(baseDir, version), bytes)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new CommitConflict(version)
-      case e: java.io.IOException =>
-        if (fs.exists(deltaPath(baseDir, version)))
-          throw new CommitConflict(version)
-        else throw e
-    }
-  }
 
   /** ATOMIC all-or-nothing exclusive install — delegated to the
     * scheme's [[LogStore]] (local hard-link, HDFS atomic rename, or a
@@ -1905,7 +1747,8 @@ object TimeTravel {
     // let one column-list INSERT permute the committed order — and
     // that order is load-bearing (DESCRIBE, SELECT *, positional
     // INSERT binding, the streaming source's ordered-name pin)
-    val schema = schemaOfRecord(fs, baseDir, prev) match {
+    val tableMeta = metaOfRecord(fs, baseDir, prev)
+    val schema = tableMeta.schema match {
       case Some(t) =>
         val byName = batchSchema.fields.map(f => f.name -> f).toMap
         val committed = t.fieldNames.toSet
@@ -1928,20 +1771,16 @@ object TimeTravel {
       statsOverride
     val isRewrite = removes.nonEmpty || op == "upsert" || op == "delete" ||
       op == "compact" || op == "merge" || op == "update"
-    // the active policy the batch was ENFORCED under (one record read);
-    // carried forward in this commit's record, re-checked on rebase
-    val constraints = activeConstraints(fs, baseDir, prev)
-    // the column mapping the staged files were WRITTEN under — carried
-    // forward, and a concurrent rename/drop refuses the rebase (the
-    // staged files' physical names would be stale)
-    val (colmap, coldrop) = activeColmap(fs, baseDir, prev)
-    requireNoPhysicalCollision(schema, colmap, coldrop, op)
+    // the policy the batch was ENFORCED, WRITTEN (column mapping) and
+    // INDEXED under: carried forward in this commit's record, and any
+    // concurrent change to it refuses the rebase
+    val meta = tableMeta.copy(schema = Some(schema))
+    requireNoPhysicalCollision(schema, meta.colmap, meta.coldrop, op)
     // per-file bloom filters for the GENUINELY new files, when a bloom
     // index is active: one column-pruned scan of the just-staged adds,
     // written to a token-named `_bloom` artifact before the record.
     // bloomCarry re-binds unchanged files (DV re-adds) to their old
     // artifacts — a shrunk value set keeps the filter sound.
-    val bloomIdx = activeBloomIdx(fs, baseDir, prev)
     val builtBlooms = {
       // genuinely NEW files only: dvTouched (and, redundantly, a
       // statsOverride or bloomCarry entry) marks byte-unchanged
@@ -1952,17 +1791,16 @@ object TimeTravel {
       val fresh = adds.filterNot(f =>
         bloomCarry.contains(f) || statsOverride.contains(f) ||
           dvTouched(f))
-      if (bloomIdx.isEmpty || fresh.isEmpty) Map.empty[String, String]
-      else buildBloomArtifact(spark, baseDir, fresh, schema, colmap,
-        bloomIdx)
+      if (meta.bloomIdx.isEmpty || fresh.isEmpty) Map.empty[String, String]
+      else buildBloomArtifact(spark, baseDir, fresh, schema, meta.colmap,
+        meta.bloomIdx)
     }
     val bloomBind = bloomCarry ++ builtBlooms
     var base = prev
     while (true) {
       try return logCommit(spark, fs, baseDir, base + 1, dirs, adds,
         removes, addStats, () => resolveFull(spark, baseDir, base),
-        txn, Some(schema), op, cdc, constraints, colmap, coldrop, dvs,
-        bloomBind, bloomIdx)
+        txn, meta, op, cdc, dvs, bloomBind)
       catch { case c: CommitConflict =>
         val latest = latestVersion(spark, baseDir)
         if (isRewrite)
@@ -1996,29 +1834,18 @@ object TimeTravel {
           }
         }
         // schema may have evolved under us: re-check against the tip
-        checkSchema(schema, schemaOfRecord(fs, baseDir, latest),
-          evolveSchema, op)
-        // a constraint change landed concurrently: this batch was
-        // enforced under the OLD policy — rebasing would slip
-        // unvalidated rows under the new one. Surface loudly; the
-        // caller re-runs (re-enforcing against the new tip).
-        if (activeConstraints(fs, baseDir, latest) != constraints)
+        val tip = metaOfRecord(fs, baseDir, latest)
+        checkSchema(schema, tip.schema, evolveSchema, op)
+        // a policy change landed concurrently: rebasing would slip rows
+        // validated under the old constraints, files staged under the
+        // old physical names, or filters built under the old bloom
+        // policy into the new one. Surface loudly; the caller re-runs
+        // against the new tip.
+        val raced = meta.changedIn(tip)
+        if (raced.nonEmpty)
           throw new java.util.ConcurrentModificationException(
-            s"$op of $baseDir raced a constraint change (version " +
-              s"$latest): the batch was validated under the old " +
-              "policy — re-run against the current version")
-        if (activeColmap(fs, baseDir, latest) != ((colmap, coldrop)))
-          throw new java.util.ConcurrentModificationException(
-            s"$op of $baseDir raced a column rename/drop (version " +
-              s"$latest): the staged files were written under the old " +
-              "physical names — re-run against the current version")
-        // a bloom-policy change landed concurrently: this commit's
-        // filters were built under the OLD policy — rebasing would
-        // record stale-policy filters (or none) under the new one
-        if (activeBloomIdx(fs, baseDir, latest) != bloomIdx)
-          throw new java.util.ConcurrentModificationException(
-            s"$op of $baseDir raced a bloom-index change (version " +
-              s"$latest): the batch's filters were built under the old " +
+            s"$op of $baseDir raced a ${raced.mkString(" and ")} change " +
+              s"(version $latest): the batch was prepared under the old " +
               "policy — re-run against the current version")
         base = latest
       }
@@ -2814,8 +2641,9 @@ object TimeTravel {
     require(files.nonEmpty, "init with an EMPTY DataFrame — an empty v1 " +
       "is not representable on plain parquet and would brick every " +
       "later commit; create the table from its first real batch instead")
-    writeManifest(fs, baseDir, 1, files, txn.toSeq, Some(df.schema),
-      Some("init"), stats = computeAddStats(spark, fs, baseDir, files))
+    writeManifest(fs, baseDir, 1, files, txn.toSeq,
+      TableMeta(Some(df.schema)), Some("init"),
+      stats = computeAddStats(spark, fs, baseDir, files))
     commitStats.put(baseDir, CommitStats(1, Set.empty, files.size, 0,
       checkpointed = true))
     1
@@ -2838,7 +2666,7 @@ object TimeTravel {
     requirePartCols(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
       partCols)
-    writeManifest(fs, baseDir, 1, Nil, Nil, Some(schema),
+    writeManifest(fs, baseDir, 1, Nil, Nil, TableMeta(Some(schema)),
       Some("init"), partCols = Some(partCols))
     commitStats.put(baseDir, CommitStats(1, Set.empty, 0, 0,
       checkpointed = true))
@@ -2850,7 +2678,7 @@ object TimeTravel {
     * newest retained record's `#partcols=` declaration (an empty
     * table); None when neither answers (a legacy empty state). */
   private def activePartCols(spark: SparkSession, baseDir: String,
-      snap: Snapshot, version: Int): Option[Seq[String]] =
+      snap: Snapshot): Option[Seq[String]] =
     if (snap.files.nonEmpty)
       Some(partColsLogical(snap.files, snap.colmap))
     else {
@@ -2859,7 +2687,7 @@ object TimeTravel {
       // the empty v1 leaves the layout recoverable from the history
       // in between)
       val fs = hadoopFs(spark, baseDir)
-      (version to 1 by -1).iterator
+      (snap.version to 1 by -1).iterator
         .flatMap(v => layoutOfRecord(fs, baseDir, v))
         .nextOption()
     }
@@ -2982,36 +2810,54 @@ object TimeTravel {
   }
 
   /** Land the commit record for `version` (delta always; checkpoint on
-    * cadence) and publish [[commitStats]]. `prevSnap` is only forced
-    * when a cadence checkpoint is due. The delta carries its adds'
-    * data-skipping stats; the cadence checkpoint carries the stats of
-    * every retained file. */
+    * cadence) and publish [[commitStats]] — the one writer of `<N>.delta`.
+    * The delta is the [[headerLines]] header, its adds' data-skipping
+    * stats and bindings, then adds and removes, each sorted; the cadence
+    * checkpoint carries the stats of every retained file. `prevSnap` is
+    * only forced when a cadence checkpoint is due (or to size a
+    * downgrade). Exclusive create: committing an already-committed
+    * version throws [[CommitConflict]] (the losing writer of a race gets
+    * this, and may rebase). The table's current requirement gates the
+    * WRITE; the record carries the ratcheted requirement forward, or
+    * with `ratchet = false` ([[downgradeProtocol]]) exactly what the
+    * resulting snapshot's content needs. */
   private def logCommit(spark: SparkSession, fs: FileSystem,
       baseDir: String, version: Int, dirs: Set[String],
       adds: Seq[String], removes: Seq[String],
       addStats: Map[String, String],
       prevSnap: () => Snapshot,
-      txn: Option[(String, Long)],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      op: String, cdc: Option[String],
-      constraints: Map[String, String] = Map.empty,
-      colmap: Map[String, String] = Map.empty,
-      coldrop: Set[String] = Set.empty,
+      txn: Option[(String, Long)], meta: TableMeta,
+      op: String, cdc: Option[String] = None,
       dvs: Map[String, String] = Map.empty,
       blooms: Map[String, String] = Map.empty,
-      bloomIdx: Map[String, (Long, Double)] = Map.empty): Int = {
-    writeDelta(fs, baseDir, version, adds, removes, txn, schema, Some(op),
-      addStats, cdc, constraints, colmap, coldrop, dvs, blooms, bloomIdx)
+      ratchet: Boolean = true): Int = {
+    gateWriter(fs, baseDir, version - 1)
+    val proto =
+      if (ratchet) (protocolOfRecord(fs, baseDir, version - 1) ++
+        Seq(protocolNeededBy(meta.colmap, meta.coldrop, dvs)))
+        .reduce(maxProtocol)
+      else protocolNeededBy(meta.colmap, meta.coldrop,
+        prevSnap().dvs -- removes ++ dvs)
+    val record = headerLines(proto, txn.toSeq, meta, Some(op), None, cdc) ++
+      statsLinesFor(adds, addStats) ++ dvLinesFor(dvs) ++
+      bloomLinesFor(blooms) ++
+      adds.sorted.map("+" + _) ++ removes.sorted.map("-" + _)
+    val delta = deltaPath(baseDir, version)
+    try installExclusive(fs, delta, record.mkString("\n").getBytes("UTF-8"))
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new CommitConflict(version)
+      case e: java.io.IOException =>
+        if (fs.exists(delta)) throw new CommitConflict(version) else throw e
+    }
     val checkpoint = version % checkpointEvery == 0
     if (checkpoint) {
       val removed = removes.toSet
       val s = prevSnap()
       writeManifestCheckpoint(spark, fs, baseDir, version,
-        s.files.filterNot(removed) ++ adds, Nil, schema, Some(op),
-        stats = s.stats -- removes ++ addStats,
-        constraints = constraints, colmap = colmap, coldrop = coldrop,
-        dvs = s.dvs -- removes ++ dvs,
-        blooms = s.blooms -- removes ++ blooms, bloomIdx = bloomIdx)
+        s.files.filterNot(removed) ++ adds, Nil, meta, Some(op), None,
+        s.stats -- removes ++ addStats, s.dvs -- removes ++ dvs,
+        s.blooms -- removes ++ blooms)
     }
     commitStats.put(baseDir, CommitStats(version, dirs, adds.size,
       removes.size, checkpoint))
@@ -3054,18 +2900,18 @@ object TimeTravel {
       (prev to 1 by -1).iterator
         .flatMap(v => layoutOfRecord(fs, baseDir, v)).nextOption(),
       "append")
-    checkSchema(rows.schema, schemaOfRecord(fs, baseDir, prev),
-      evolveSchema, "append")
+    val meta = metaOfRecord(fs, baseDir, prev)
+    checkSchema(rows.schema, meta.schema, evolveSchema, "append")
     val batch = rows.localCheckpoint() // distinct-collect + write: 2 actions
-    enforceConstraints(batch, activeConstraints(fs, baseDir, prev),
+    enforceConstraints(batch, meta.constraints, "append")
+    requireNoPhysicalCollision(batch.schema, meta.colmap, meta.coldrop,
       "append")
-    val (colmap, coldrop) = activeColmap(fs, baseDir, prev)
-    requireNoPhysicalCollision(batch.schema, colmap, coldrop, "append")
     val affected = affectedTuples(batch, partCols)
     Merge.requireNoNullPartitionTuple(affected, partCols)
     if (affected.isEmpty) return prev
     val dirs = affectedDirs(partCols, affected)
-    val adds = stageWrite(spark, baseDir, batch, partCols, colmap = colmap)
+    val adds = stageWrite(spark, baseDir, batch, partCols,
+      colmap = meta.colmap)
     commitWithRebase(spark, fs, baseDir, prev, dirs, adds, Nil,
       txn, batch.schema, "append", evolveSchema)
   }
@@ -3147,7 +2993,7 @@ object TimeTravel {
     val latest = latestVersion(spark, baseDir)
     require(latest >= 1, s"$baseDir has no commits")
     val snap = resolveFull(spark, baseDir, latest)
-    activePartCols(spark, baseDir, snap, latest).getOrElse(
+    activePartCols(spark, baseDir, snap).getOrElse(
       throw new IllegalStateException(
         s"$baseDir records neither files nor a partition-layout " +
           "declaration — the layout is unknowable"))
@@ -3172,13 +3018,12 @@ object TimeTravel {
     val partCols = splitCols(partCol)
     requirePartCols(rows, partCols)
     val fs = hadoopFs(spark, baseDir)
-    checkSchema(rows.schema, schemaOfRecord(fs, baseDir, prev),
-      evolveSchema, "overwrite")
+    val meta = metaOfRecord(fs, baseDir, prev)
+    checkSchema(rows.schema, meta.schema, evolveSchema, "overwrite")
     val batch = rows.localCheckpoint()
-    enforceConstraints(batch, activeConstraints(fs, baseDir, prev),
+    enforceConstraints(batch, meta.constraints, "overwrite")
+    requireNoPhysicalCollision(batch.schema, meta.colmap, meta.coldrop,
       "overwrite")
-    val (colmap, coldrop) = activeColmap(fs, baseDir, prev)
-    requireNoPhysicalCollision(batch.schema, colmap, coldrop, "overwrite")
     val affected = affectedTuples(batch, partCols)
     Merge.requireNoNullPartitionTuple(affected, partCols)
     require(affected.nonEmpty,
@@ -3187,8 +3032,9 @@ object TimeTravel {
         "instead")
     val prevSnap = resolveFull(spark, baseDir, prev)
     requireLayoutMatch(partCols,
-      activePartCols(spark, baseDir, prevSnap, prev), "overwrite")
-    val adds = stageWrite(spark, baseDir, batch, partCols, colmap = colmap)
+      activePartCols(spark, baseDir, prevSnap), "overwrite")
+    val adds = stageWrite(spark, baseDir, batch, partCols,
+      colmap = meta.colmap)
     val dirs = affectedDirs(partCols, affected) ++
       prevSnap.files.map(dirOf)
     commitWithRebase(spark, fs, baseDir, prev, dirs, adds,
@@ -3320,15 +3166,14 @@ object TimeTravel {
     // resolved ONCE per commit: file set, committed schema, and stats
     val prevSnap = resolveFull(spark, baseDir, prev)
     requireLayoutMatch(partCols,
-      activePartCols(spark, baseDir, prevSnap, prev), "upsert")
+      activePartCols(spark, baseDir, prevSnap), "upsert")
     val prevSchema = prevSnap.schema
     checkSchema(updates.schema, prevSchema, evolveSchema, "upsert")
     // reuse a caller-materialized checkpoint (the streaming sinks pin
     // their micro-batch before the emptiness gate) instead of copying
     // every row into a second block set per commit
     val ups = Merge.ensureCheckpointed(updates)
-    enforceConstraints(ups,
-      activeConstraints(hadoopFs(spark, baseDir), baseDir, prev), "upsert")
+    enforceConstraints(ups, constraintsAt(spark, baseDir, prev), "upsert")
     // ONE action serves the broadcast gate, the discovery envelope (the
     // envelope prunes on the LEADING key column) AND the batch's distinct
     // partition tuples: group by the partition columns and reduce the
@@ -3514,7 +3359,7 @@ object TimeTravel {
     val fs = hadoopFs(spark, baseDir)
     val prevSnap = resolveFull(spark, baseDir, prev)
     requireLayoutMatch(partCols,
-      activePartCols(spark, baseDir, prevSnap, prev), "merge")
+      activePartCols(spark, baseDir, prevSnap), "merge")
     checkSchema(source.schema, prevSnap.schema, evolve = false, "merge")
     val fields = prevSnap.schema.getOrElse(source.schema)
     def checkSet(set: Map[String, Column], kind: String): Unit =
@@ -3754,7 +3599,7 @@ object TimeTravel {
     val isInserted = !isMatched && !isTgtOnly && col(insActCol) >= 0
     enforceConstraints(
       j.filter(isUpdated || isInserted || isBsUpdated).select(outCols: _*),
-      activeConstraints(fs, baseDir, prev), "merge")
+      constraintsAt(spark, baseDir, prev), "merge")
     val cdcToken = if (changeFeed) Some(newToken()) else None
     cdcToken.foreach { tok =>
       writeChanges(spark, baseDir, tok, Seq(
@@ -3928,7 +3773,7 @@ object TimeTravel {
       val u = matched.select(schema.fieldNames.map(c =>
         s.get(c).fold(col(c))(e => e.cast(schema(c).dataType).as(c)))
         .toSeq: _*)
-      enforceConstraints(u, activeConstraints(fs, baseDir, prev), op)
+      enforceConstraints(u, constraintsAt(spark, baseDir, prev), op)
       u
     }
     val token = newToken()
@@ -4059,7 +3904,7 @@ object TimeTravel {
     // updated rows must still satisfy the active CHECK policy
     set.foreach(_ => enforceConstraints(
       rewrittenMarked.filter(col(hit)).drop(hit),
-      activeConstraints(fs, baseDir, prev), op))
+      constraintsAt(spark, baseDir, prev), op))
     val cdcToken = if (changeFeed) Some(newToken()) else None
     cdcToken.foreach { tok =>
       val images = set match {
@@ -4268,7 +4113,7 @@ object TimeTravel {
           "repartition"))
     newCols.foreach(c => require(schema.fieldNames.contains(c),
       s"no column '$c' (columns: ${schema.fieldNames.mkString(", ")})"))
-    val oldCols = activePartCols(spark, baseDir, prevSnap, prev)
+    val oldCols = activePartCols(spark, baseDir, prevSnap)
       .getOrElse(Nil)
     require(newCols != oldCols,
       s"the table is already partitioned by (${oldCols.mkString(", ")})")
@@ -4339,13 +4184,12 @@ object TimeTravel {
     val addStats = target.stats.filter { case (f, _) => addSet(f) }
     val addDvs = target.dvs.filter { case (f, _) => addSet(f) }
     val addBlooms = target.blooms.filter { case (f, _) => addSet(f) }
-    // constraints and the bloom policy are table POLICY restored with
-    // the content, like the schema: the commit carries toVersion's set
+    // the whole table POLICY is restored with the content: the commit
+    // carries toVersion's schema, constraints, mapping and bloom policy
     try logCommit(spark, fs, baseDir, prev + 1, dirs, adds, removes,
-      addStats, () => cur, None, target.schema, "restore", None,
-      activeConstraints(fs, baseDir, toVersion),
-      target.colmap, target.dropped, addDvs, addBlooms,
-      activeBloomIdx(fs, baseDir, toVersion))
+      addStats, () => cur, None,
+      metaOfRecord(fs, baseDir, toVersion).copy(schema = target.schema),
+      "restore", None, addDvs, addBlooms)
     catch {
       case _: CommitConflict =>
         throw new java.util.ConcurrentModificationException(
@@ -4413,8 +4257,7 @@ object TimeTravel {
     require(keepFrom >= 1 && keepFrom <= latest,
       s"keepFrom=$keepFrom out of [1, $latest]")
     val floorSnap = resolveFull(spark, baseDir, keepFrom)
-    val (floorFiles, floorSchema) = (floorSnap.files, floorSnap.schema)
-    val floor = floorFiles.toSet
+    val floor = floorSnap.files.toSet
     val laterAdds = ((keepFrom + 1) to latest)
       .flatMap(v => readDelta(fs, baseDir, v)._1)
     val kept = floor ++ laterAdds
@@ -4432,14 +4275,13 @@ object TimeTravel {
     val origLines =
       Seq(deltaPath(baseDir, keepFrom), manifestPath(baseDir, keepFrom))
         .find(fs.exists(_)).map(readRawLines(fs, _)).getOrElse(Nil)
+    val floorMeta = metaFrom(origLines).copy(schema = floorSnap.schema)
     val mPath = manifestPath(baseDir, keepFrom)
     if (dryRun) () // a report must not self-contain the floor either
     else if (!fs.exists(mPath))
       writeManifestCheckpoint(spark, fs, baseDir, keepFrom, floor.toSeq,
-        carried, floorSchema, opFrom(origLines).orElse(Some("floor")),
-        tsFrom(origLines), floorSnap.stats, constraintsFrom(origLines),
-        floorSnap.colmap, floorSnap.dropped, floorSnap.dvs,
-        floorSnap.blooms, bloomIdxFrom(origLines))
+        carried, floorMeta, opFrom(origLines).orElse(Some("floor")),
+        tsFrom(origLines), floorSnap.stats, floorSnap.dvs, floorSnap.blooms)
     else {
       // the floor may already have a CADENCE checkpoint — written at
       // commit time with no txn marks. The marks living only in the
@@ -4458,15 +4300,13 @@ object TimeTravel {
         // requirement (origLines carries it), raised if the floor
         // snapshot's own content needs more
         val floorProto = maxProtocol(protocolFrom(origLines),
-          protocolNeededBy(floorSnap.colmap, floorSnap.dropped,
+          protocolNeededBy(floorMeta.colmap, floorMeta.coldrop,
             floorSnap.dvs))
         val bytes =
           if (!parquetCheckpoints)
             manifestContent(floorProto, floor.toSeq.sorted, carried,
-              floorSchema, opFrom(origLines), tsFrom(origLines),
-              floorSnap.stats, constraintsFrom(origLines),
-              floorSnap.colmap, floorSnap.dropped, floorSnap.dvs,
-              floorSnap.blooms, bloomIdxFrom(origLines))
+              floorMeta, opFrom(origLines), tsFrom(origLines),
+              floorSnap.stats, floorSnap.dvs, floorSnap.blooms)
           else {
             // new sidecar first (derived, token-named — the old one
             // stays referenced until the header rename lands, so a
@@ -4478,11 +4318,7 @@ object TimeTravel {
               floor.toSeq.sorted, floorSnap.stats, floorSnap.dvs,
               floorSnap.blooms)
             checkpointHeaderContent(floorProto, token, floor.size,
-              carried,
-              floorSchema, opFrom(origLines), tsFrom(origLines),
-              constraintsFrom(origLines),
-              floorSnap.colmap, floorSnap.dropped,
-              bloomIdxFrom(origLines))
+              carried, floorMeta, opFrom(origLines), tsFrom(origLines))
           }
         val out = fs.create(tmp, true)
         try out.write(bytes)
@@ -4730,6 +4566,7 @@ object TimeTravel {
     require(latest >= 1, s"$baseDir has no commits")
     val fs = hadoopFs(spark, baseDir)
     val snap = resolveFull(spark, baseDir, latest)
+    val meta = metaOfRecord(fs, baseDir, latest)
     val sizeBytes = snap.files.groupBy(dirOf)
       .iterator.map { case (dir, fls) =>
         val wanted = fls.map(baseName).toSet
@@ -4741,8 +4578,7 @@ object TimeTravel {
       }.sum
     TableDetail(latest, snap.files.size, sizeBytes,
       partColsLogical(snap.files, snap.colmap).mkString(","), snap.schema,
-      activeConstraints(fs, baseDir, latest),
-      activeBloomIdx(fs, baseDir, latest), snap.colmap,
+      meta.constraints, meta.bloomIdx, snap.colmap,
       snap.dvs.size, snap.blooms.size)
   }
 
@@ -4794,13 +4630,9 @@ object TimeTravel {
           .toSeq
         linkOrCopyAll(spark, fs, arts)
     }
-    writeManifestCheckpoint(spark, dstFs, dstDir, 1, snap.files,
-      txns = Nil, schema = snap.schema, op = Some("clone"),
-      stats = snap.stats,
-      constraints = activeConstraints(fs, baseDir, v),
-      colmap = snap.colmap, coldrop = snap.dropped,
-      dvs = snap.dvs, blooms = snap.blooms,
-      bloomIdx = activeBloomIdx(fs, baseDir, v))
+    writeManifestCheckpoint(spark, dstFs, dstDir, 1, snap.files, Nil,
+      metaOfRecord(fs, baseDir, v).copy(schema = snap.schema),
+      Some("clone"), None, snap.stats, snap.dvs, snap.blooms)
     commitStats.put(dstDir, CommitStats(1, Set.empty, snap.files.size, 0,
       checkpointed = true))
     1
@@ -5065,7 +4897,7 @@ object TimeTravel {
     // deliver swapped column values
     val pinned = pinnedNames.toSeq
     (fromVersion to 1 by -1).find(v =>
-      schemaOfRecord(fs, baseDir, v)
+      metaOfRecord(fs, baseDir, v).schema
         .exists(_.fieldNames.toSeq == pinned))
       .getOrElse(throw new IllegalStateException(
         s"no retained version of $baseDir carries this stream's pinned " +
@@ -5080,13 +4912,13 @@ object TimeTravel {
       files: Seq[String], schemaVersion: Int,
       emptyMsg: String): DataFrame = {
     val fs = hadoopFs(spark, baseDir)
-    val schema = schemaOfRecord(fs, baseDir, schemaVersion)
+    val meta = metaOfRecord(fs, baseDir, schemaVersion)
     if (files.isEmpty) {
-      val s = schema.getOrElse(throw new IllegalArgumentException(emptyMsg))
+      val s = meta.schema.getOrElse(
+        throw new IllegalArgumentException(emptyMsg))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    } else readFiles(spark, baseDir, files.sorted, schema,
-      activeColmap(fs, baseDir, schemaVersion)._1)
+    } else readFiles(spark, baseDir, files.sorted, meta.schema, meta.colmap)
   }
 
   /** Row-level change-type column every CDC row carries:
@@ -5202,11 +5034,12 @@ object TimeTravel {
       unitsByVersion: Seq[(Int, Seq[CdcUnit])],
       schemaVersion: Int): DataFrame = {
     val fs = hadoopFs(spark, baseDir)
-    val schema = schemaOfRecord(fs, baseDir, schemaVersion).getOrElse(
+    val delivery = metaOfRecord(fs, baseDir, schemaVersion)
+    val schema = delivery.schema.getOrElse(
       throw new IllegalArgumentException(
         s"$baseDir's log records no schema — pre-metadata tables have " +
           "no change feed"))
-    val deliveryColmap = activeColmap(fs, baseDir, schemaVersion)._1
+    val deliveryColmap = delivery.colmap
     val frames = unitsByVersion.flatMap { case (v, units) =>
       if (units.isEmpty) None
       else {
@@ -5299,11 +5132,12 @@ object TimeTravel {
     // window crosses, since files and captures project through stable
     // physical names
     val deliveryV = consumerPinnedAt.getOrElse(end)
-    val schema = schemaOfRecord(fs, baseDir, deliveryV).getOrElse(
+    val delivery = metaOfRecord(fs, baseDir, deliveryV)
+    val schema = delivery.schema.getOrElse(
       throw new IllegalArgumentException(
         s"$baseDir's log records no schema — pre-metadata tables have " +
           "no change feed"))
-    val deliveryColmap = activeColmap(fs, baseDir, deliveryV)._1
+    val deliveryColmap = delivery.colmap
     val frames = ((sinceVersion + 1) to end).flatMap { v =>
       require(entries.get(v).exists(_._2),
         s"version $v of $baseDir has no commit record (vacuumed away): " +

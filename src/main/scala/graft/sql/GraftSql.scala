@@ -381,9 +381,10 @@ object GraftSql {
   }
 
   /** ALTER TABLE ... DROP COLUMN(S) — [[TimeTravel.dropColumn]]'s
-    * metadata-only tombstone per column (multi-column drops land as a
-    * commit per column, each independently time-travelable). IF EXISTS
-    * skips absent names instead of refusing. */
+    * metadata-only tombstone for every named column in ONE commit: a
+    * refusal on any column (absent, partition, constrained, indexed)
+    * drops none. IF EXISTS skips names absent at the tip instead of
+    * refusing, and commits nothing when none remain. */
   private def dropColumnsCmd(spark: SparkSession, d: DropColumns): Int = {
     val path = resolved(spark, alterTablePath(d.table, "DROP COLUMN"))
     val names = d.columnsToDrop.map {
@@ -397,15 +398,13 @@ object GraftSql {
       case other => throw new IllegalArgumentException(
         s"unsupported DROP COLUMN operand: $other")
     }
-    var v = TimeTravel.latestVersion(spark, path)
-    names.foreach { n =>
-      val present = TimeTravel.schemaAt(spark, path, v)
-        .exists(_.fieldNames.contains(n))
-      if (present) v = TimeTravel.dropColumn(spark, path, n)
-      else if (!d.ifExists) v = TimeTravel.dropColumn(spark, path, n)
-      // IF EXISTS + absent: skip (dropColumn would refuse loudly)
-    }
-    v
+    val tip = TimeTravel.latestVersion(spark, path)
+    val dropped =
+      if (!d.ifExists) names
+      else names.distinct.filter(n => TimeTravel.schemaAt(spark, path, tip)
+        .exists(_.fieldNames.contains(n)))
+    if (dropped.isEmpty) tip
+    else TimeTravel.dropColumns(spark, path, dropped)
   }
 
   /** SQL QUERY surface over versioned tables — `spark.sql` semantics

@@ -149,6 +149,27 @@ class ConcurrencySpec extends SparkSpec {
     assert(TimeTravel.latestVersion(spark, dir) === vIdx)
   }
 
+  test("a metadata commit that lost the version race re-runs against the new tip") {
+    val dir = stage()
+    var attempts = 0
+    // setBloomIndex's transform, with a concurrent ADD CONSTRAINT
+    // landing the target version during the first attempt
+    val v = TimeTravel.commitMetadata(spark, dir, "bloomidx") { (_, meta) =>
+      attempts += 1
+      if (attempts == 1) TimeTravel.addConstraint(spark, dir, "pos", "id > 0")
+      meta.copy(bloomIdx = meta.bloomIdx + ("id" -> ((1000L, 0.01))))
+    }
+    val tip = 2 // the constraint's version
+    assert(attempts === 2)
+    assert(v === tip + 1)
+    assert(TimeTravel.latestVersion(spark, dir) === v)
+    // the retry saw the winner's policy and carries both forward
+    assert(TimeTravel.constraintsAt(spark, dir, v) === Map("pos" -> "id > 0"))
+    assert(TimeTravel.bloomIndexAt(spark, dir, v) ===
+      Map("id" -> ((1000L, 0.01))))
+    assert(TimeTravel.bloomIndexAt(spark, dir, tip).isEmpty)
+  }
+
   test("staged writes: adds are exactly the commit's own files, token-prefixed") {
     val dir = stage()
     TimeTravel.append(spark, dir,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField}
 
 import graft.SparkSpec
 
@@ -137,6 +138,78 @@ class ProtocolSpec extends SparkSpec {
     TimeTravel.compact(spark, t2, "p", maxFilesPerDir = 16)
     val vD2 = TimeTravel.downgradeProtocol(spark, t2)
     assert(protoOf(t2, vD2) === "2/2")
+  }
+
+  test("metadata commits landing on the checkpoint cadence write the checkpoint; a downgrade's survives") {
+    def appendUntil(t: String, v: Int): Unit =
+      while (TimeTravel.latestVersion(spark, t) < v)
+        TimeTravel.append(spark, t,
+          Seq((9L, "a", 9.0)).toDF("k", "p", "x"), "p")
+    def manifestOf(t: String, v: Int): List[String] = {
+      val src = scala.io.Source.fromFile(s"$t/_graft_log/$v.manifest", "UTF-8")
+      try src.getLines().toList finally src.close()
+    }
+    val t = stage()
+    appendUntil(t, 9)
+    assert(TimeTravel.addConstraint(spark, t, "pos", "k > 0") === 10)
+    assert(TimeTravel.lastCommitStats(t).get.checkpointed)
+    assert(manifestOf(t, 10).contains("#constraint=pos|k+%3E+0"))
+    // the downgrade's lowered requirement reaches its checkpoint too:
+    // nothing at v10 re-raises the requirement the next commit inherits
+    val t2 = stage()
+    TimeTravel.renameColumn(spark, t2, "x", "y")
+    TimeTravel.renameColumn(spark, t2, "y", "x") // identity again, still 2/2
+    appendUntil(t2, 9)
+    assert(protoOf(t2, 9) === "2/2")
+    assert(TimeTravel.downgradeProtocol(spark, t2) === 10)
+    assert(manifestOf(t2, 10).contains("#protocol=1/1"))
+    val v11 = TimeTravel.append(spark, t2,
+      Seq((10L, "b", 10.0)).toDF("k", "p", "x"), "p")
+    assert(protoOf(t2, v11) === "1/1")
+    assert(TimeTravel.readVersion(spark, t2, v11).count() === 9)
+  }
+
+  /** v1's manifest, then every delta in version order, each minus its
+    * `#ts=` wall-clock and with the per-write random names normalized:
+    * a staged file's token and Spark's job UUID (`T-<i>-part-<n>-U`),
+    * and artifact tokens (`T`). */
+  private def normalizedRecords(t: String): Seq[String] = {
+    val log = new java.io.File(s"$t/_graft_log")
+    val deltas = log.list().filter(_.endsWith(".delta"))
+      .sortBy(_.stripSuffix(".delta").toInt)
+    val file = "[0-9a-f]{12}-(\\d+)-part-(\\d+)-[0-9a-f-]{36}".r
+    val token = "\\b[0-9a-f]{12}\\b".r
+    ("1.manifest" +: deltas).toSeq.flatMap { n =>
+      val src = scala.io.Source.fromFile(new java.io.File(log, n), "UTF-8")
+      try s"== $n" +: src.getLines().filterNot(_.startsWith("#ts="))
+        .map(l => token.replaceAllIn(file.replaceAllIn(l, "T-$1-part-$2-U"),
+          "T")).toList
+      finally src.close()
+    }
+  }
+
+  test("log records stay line-identical across metadata, data and restore commits") {
+    val t = stage()                                                   // v1
+    TimeTravel.addConstraint(spark, t, "pos", "k > 0")                // v2
+    TimeTravel.setBloomIndex(spark, t, "k", 1000L, 0.05)              // v3
+    TimeTravel.append(spark, t,
+      Seq((3L, "c", 3.0)).toDF("k", "p", "x"), "p")                   // v4
+    TimeTravel.addColumns(spark, t, Seq(StructField("y", StringType))) // v5
+    TimeTravel.renameColumn(spark, t, "x", "z")                       // v6
+    TimeTravel.renameColumn(spark, t, "z", "x")                       // v7
+    TimeTravel.downgradeProtocol(spark, t)                            // v8
+    TimeTravel.upsert(spark, t,
+      Seq((1L, "a", 10.0, "u")).toDF("k", "p", "x", "y"), "k", "p")   // v9
+    TimeTravel.dropConstraint(spark, t, "pos")                        // v10
+    TimeTravel.dropBloomIndex(spark, t, "k")                          // v11
+    TimeTravel.dropColumn(spark, t, "y")                              // v12
+    assert(TimeTravel.restore(spark, t, 4) === 13)
+    // the pinned records: a writer change must reproduce them exactly
+    val pinned = scala.io.Source.fromResource("log_format_pin.txt",
+      getClass.getClassLoader)
+    try assert(normalizedRecords(t).mkString("\n") ===
+      pinned.getLines().mkString("\n"))
+    finally pinned.close()
   }
 
   test("an unparsable protocol declaration fails closed") {

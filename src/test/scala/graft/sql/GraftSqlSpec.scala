@@ -343,6 +343,23 @@ class GraftSqlSpec extends SparkSpec {
     assert(eCons.getMessage.contains("cx"))
   }
 
+  test("ALTER TABLE DROP COLUMNS (a, b) is one commit: a refused name drops none") {
+    val t = stage() // v1: (k, p, x)
+    GraftSql.exec(spark,
+      s"ALTER TABLE graft.`$t` ADD COLUMNS (a STRING, b DOUBLE)")
+    val v0 = TimeTravel.latestVersion(spark, t)
+    val e = intercept[IllegalArgumentException](GraftSql.exec(spark,
+      s"ALTER TABLE graft.`$t` DROP COLUMNS (a, nosuch)"))
+    assert(e.getMessage.contains("nosuch"))
+    assert(TimeTravel.latestVersion(spark, t) === v0)
+    assert(readTip(t).columns.toSeq === Seq("k", "p", "x", "a", "b"))
+    GraftSql.exec(spark, s"ALTER TABLE graft.`$t` DROP COLUMNS (a, b)")
+    assert(TimeTravel.latestVersion(spark, t) === v0 + 1)
+    assert(readTip(t).columns.toSeq === Seq("k", "p", "x"))
+    assert(TimeTravel.readVersion(spark, t, v0).columns.toSeq ===
+      Seq("k", "p", "x", "a", "b"))
+  }
+
   test("managed names: CREATE TABLE graft.<name> auto-locates under the warehouse and registers durably; SHOW TABLES lists; DROP TABLE unbinds, files survive") {
     import graft.GraftSession
     val cat = tmpDir("sqlcat") + "/catalog"
