@@ -13,20 +13,14 @@ object PlanAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.drop(1).headOption.getOrElse("PLANS.md")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
+    // audit the plans Bench's tuned session runs, with AQE off (set
+    // AFTER tuned, which turns it on): the static plan shows codegen
+    // spans and the worst-case exchange count (AQE only ever removes
+    // work at runtime)
+    val spark = GraftSession.tuned(SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      // AQE off for the audit: the static plan shows codegen spans and the
-      // worst-case exchange count (AQE only ever removes work at runtime)
+      .config("spark.sql.shuffle.partitions", cpus))
       .config("spark.sql.adaptive.enabled", "false")
-      // audit the plans the tuned sessions run: the MOR splice included
-      .config("spark.graft.mor.rewrite", "true")
-      // the full extension surface too — the graft.<name> resolution
-      // rule (q205 reads a durable-catalog name from plain spark.sql)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     GraftSession.installOptimizations(spark)
     spark.sparkContext.setLogLevel("ERROR")

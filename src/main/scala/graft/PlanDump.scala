@@ -7,22 +7,23 @@ import org.apache.spark.sql.SparkSession
 /** Dev tool: write `.explain("formatted")` for named queries to
   * `<outDir>/<query><suffix>.txt` — the before/after plan evidence an
   * optimization round commits (plans/rNN/). Session shape mirrors
-  * [[PlanAudit]] (tuned confs, AQE off so the static plan shows codegen
-  * spans and the worst-case exchange count).
+  * [[PlanAudit]]: Bench's tuned session, then AQE off (after `tuned`,
+  * which turns it on) so the static plan shows codegen spans and the
+  * worst-case exchange count.
   *
   * Args: sfDir outDir suffix query [query...]. Extra confs can be set
   * via SPARK_GRAFT_PLANDUMP_CONFS="k=v;k=v" — how the "before" shape of
-  * conf-gated optimizations (spark.graft.text.widen=false,
-  * spark.graft.clusters.localEdgeLimit=0) is dumped from one build. */
+  * a conf-gated path (spark.graft.clusters.localEdgeLimit=0) is dumped
+  * from one build. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names @ _*) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val builder = GraftSession.tuned(SparkSession.builder()
+    val spark = GraftSession.tuned(SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false"))
-    val spark = builder.getOrCreate()
+      .config("spark.sql.shuffle.partitions", cpus))
+      .config("spark.sql.adaptive.enabled", "false")
+      .getOrCreate()
     GraftSession.installOptimizations(spark)
     sys.env.get("SPARK_GRAFT_PLANDUMP_CONFS").foreach(_.split(';')
       .filter(_.contains('=')).foreach { kv =>

@@ -745,24 +745,6 @@ object Corpus {
     * 0 (it runs no distributed pair-count rounds at all). */
   @volatile private[graft] var lastBpeTrainRounds: Int = 0
 
-  /** Distinct-word ceiling under which [[bpeTrain]] runs its merge loop
-    * ON THE DRIVER over the collected (symbol-sequence, freq) relation —
-    * the same trade the cluster operators make for connected components
-    * (and [[Graph]] for triangles): BPE training is vocab-bounded by
-    * construction (the corpus is only touched by [[bpeWordFreqs]]'s one
-    * token shuffle), and below broadcast scale a driver loop beats
-    * launching 2 vocab-wide Spark jobs per merge round. Above the limit
-    * — a 100 TB corpus's tens-of-millions vocabulary — the distributed
-    * batched loop runs unchanged. The learned table is BIT-IDENTICAL to
-    * sequential distributed greedy (BpeSpec pins local ≡ distributed):
-    * same pair counting, same (n desc, l asc, r asc) argmax under
-    * UTF8-binary string order, same left-to-right non-overlapping merge.
-    * `spark.graft.bpe.localVocabLimit` tunes it, 0 disables. */
-  private def localVocabLimit(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.bpe.localVocabLimit")
-      .map(_.toLong).getOrElse(1000000L)
-
   private def utf8Less(a: String, b: String): Boolean =
     org.apache.spark.unsafe.types.UTF8String.fromString(a).compareTo(
       org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0
@@ -875,23 +857,25 @@ object Corpus {
     val spark = words.sparkSession
     val base = words.select(bpeSeq(col("word")).as("s"), col("freq"))
       .localCheckpoint()
-    val limit = localVocabLimit(spark)
-    if (limit > 0 && base.count() <= limit) {
-      // sub-broadcast-scale vocabulary: train on the driver (exact
-      // greedy; see [[localVocabLimit]]). Parse the SAME symbolization
-      // the distributed loop reads — strip the invariant's single edge
-      // spaces (space chars only, like Spark's trim — never other
-      // control characters a token may legally contain), split on the
-      // double-space symbol separator.
-      val collected = base.select(col("s"), col("freq").cast("long"))
-        .collect().map { r =>
+    DriverLocal.collectUnder(base.select(col("s"), col("freq").cast("long")),
+        DriverLocal.BpeKey, DriverLocal.BpeCap) match {
+      case Right(rows) =>
+        // sub-broadcast-scale vocabulary (see [[DriverLocal]]): exact
+        // greedy on the driver, BIT-IDENTICAL to the distributed loop
+        // (BpeSpec pins it). Parse the SAME symbolization that loop
+        // reads — strip the invariant's single edge spaces (space chars
+        // only, like Spark's trim — never other control characters a
+        // token may legally contain), split on the double-space symbol
+        // separator.
+        val collected = rows.map { r =>
           val t = r.getString(0).stripPrefix(" ").stripSuffix(" ")
           (if (t.isEmpty) Array.empty[String] else t.split("  "),
             r.getLong(1))
         }
-      lastBpeTrainRounds = 0
-      return spark.createDataFrame(bpeTrainLocal(collected, nMerges))
-        .toDF("rank", "left_sym", "right_sym", "pair_n")
+        lastBpeTrainRounds = 0
+        return spark.createDataFrame(bpeTrainLocal(collected, nMerges))
+          .toDF("rank", "left_sym", "right_sym", "pair_n")
+      case Left(_) =>
     }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     // every output string a prior merge created: the ONLY way a merge's

@@ -23,22 +23,6 @@ object Dedup {
     docs.groupBy(md5(col("text")).as("text_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Edge-count ceiling below which component labeling runs DRIVER-SIDE
-    * (one collect + union-find) instead of the distributed contraction
-    * loops — the same collect-the-small-side trade a broadcast join
-    * makes. Near-dup edge sets are tiny relative to the corpus (pairs,
-    * not rows), and under the limit the loops' per-round fixed cost
-    * (several exchanges, an eager checkpoint, and a convergence probe
-    * per round) dwarfs the actual labeling work. Above the limit, or
-    * for non-integral id types, the distributed rounds run unchanged —
-    * at 100 TB that is the only shape that works. Default 4M edges
-    * (≈64 MB of long pairs on the driver) mirrors
-    * [[Merge.DefaultBroadcastKeyLimit]]'s sizing contract;
-    * `spark.graft.clusters.localEdgeLimit` tunes it, 0 disables. */
-  private def localEdgeLimit(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.clusters.localEdgeLimit")
-      .map(_.toLong).getOrElse(4000000L)
-
   private def integralIdType(dt: org.apache.spark.sql.types.DataType): Boolean =
     dt match {
       case LongType | IntegerType | ShortType | ByteType => true
@@ -83,18 +67,12 @@ object Dedup {
     out
   }
 
-  /** The (doc_id, cluster) label relation for an oriented-edge frame
-    * whose count is already known to clear [[localEdgeLimit]]: collect,
-    * union-find, re-create with the ids' ORIGINAL type so the output
-    * schema is bit-identical to the distributed path's. */
-  private def localLabels(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val spark = edges.sparkSession
-    val idt = edges.schema(srcCol).dataType
-    val arr = edges
-      .select(col(srcCol).cast(LongType), col(dstCol).cast(LongType))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val rows = unionFindLabels(arr)
+  /** The (doc_id, cluster) label relation for collected (long, long)
+    * edge rows: union-find, re-created with the ids' ORIGINAL type `idt` so
+    * the output schema is bit-identical to the distributed path's. */
+  private def localLabels(spark: org.apache.spark.sql.SparkSession,
+      edges: Array[org.apache.spark.sql.Row], idt: DataType): DataFrame = {
+    val rows = unionFindLabels(edges.map(r => (r.getLong(0), r.getLong(1))))
       .map(t => org.apache.spark.sql.Row(t._1, t._2))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toSeq,
@@ -104,6 +82,13 @@ object Dedup {
     df.select(col("doc_id").cast(idt).as("doc_id"),
       col("cluster").cast(idt).as("cluster"))
   }
+
+  /** Every doc with its component label; docs in no edge are their own
+    * singleton cluster. */
+  private def labeled(docs: DataFrame, labels: DataFrame): DataFrame =
+    docs.select(col("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
 
   /** Duplicate clusters: connected components over an undirected near-dup
     * pair relation, as min-label propagation to a fixpoint — every doc gets
@@ -129,14 +114,17 @@ object Dedup {
     // whole (expensive) pair-detection pipeline once per reference.
     val p = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
     // small-edge-set fast path: one collect + union-find replaces
-    // diameter-many driver-loop rounds (see [[localEdgeLimit]]); the
+    // diameter-many driver-loop rounds (see [[DriverLocal]]); the
     // distributed propagation below is the at-scale shape
-    if (integralIdType(p.schema("doc_a").dataType) &&
-        p.count() <= localEdgeLimit(docs.sparkSession)) {
-      return docs.select(col("doc_id"))
-        .join(localLabels(p, "doc_a", "doc_b"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster"), col("doc_id")).as("cluster"))
+    val idt = p.schema("doc_a").dataType
+    if (integralIdType(idt)) {
+      DriverLocal.collectUnder(
+          p.select(col("doc_a").cast(LongType), col("doc_b").cast(LongType)),
+          DriverLocal.ClustersKey, DriverLocal.ClustersCap) match {
+        case Right(rows) =>
+          return labeled(docs, localLabels(docs.sparkSession, rows, idt))
+        case Left(_) =>
+      }
     }
     val fwd = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val edges = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
@@ -176,9 +164,7 @@ object Dedup {
     // meaningful count — phrase the failure as a boolean state)
     require(changed == 0,
       s"dupClusters did not converge in $maxRounds rounds (labels were still changing); raise maxRounds")
-    docs.select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
+    labeled(docs, labels)
   }
 
   /** Connected components via alternating large-star / small-star
@@ -228,18 +214,20 @@ object Dedup {
     var round = 0
     var done = false
     // |e| is carried across rounds: this round's |next| is next round's
-    // |e|, so only the first round pays a count job for the old side
-    var eCount = e.count()
-    // small-edge-set fast path: one collect + union-find replaces
-    // O(log n) contraction rounds of several exchanges + an eager
-    // checkpoint + a convergence probe each (see [[localEdgeLimit]])
-    if (integralIdType(e.schema("src").dataType) &&
-        eCount <= localEdgeLimit(docs.sparkSession)) {
-      return docs.select(col("doc_id"))
-        .join(localLabels(e, "src", "dst"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster"), col("doc_id")).as("cluster"))
-    }
+    // |e|, so only the first round pays a count job for the old side:
+    // the small-edge-set gate's (see [[DriverLocal]]). Under the cap, one
+    // collect + union-find replaces O(log n) contraction rounds of
+    // several exchanges + an eager checkpoint + a convergence probe each
+    val idt = e.schema("src").dataType
+    var eCount =
+      if (!integralIdType(idt)) e.count()
+      else DriverLocal.collectUnder(
+          e.select(col("src").cast(LongType), col("dst").cast(LongType)),
+          DriverLocal.ClustersKey, DriverLocal.ClustersCap) match {
+        case Right(rows) =>
+          return labeled(docs, localLabels(docs.sparkSession, rows, idt))
+        case Left(n) => n
+      }
     while (!done && round < maxRounds) {
       val next = smallStar(largeStar(e)).localCheckpoint(true)
       // fixpoint = edge set unchanged over a full round (the converged
@@ -261,20 +249,9 @@ object Dedup {
     }
     require(done,
       s"dupClustersStar did not converge in $maxRounds rounds; raise maxRounds")
-    val labels = e.groupBy(col("src")).agg(min(col("dst")).as("cluster"))
-      .select(col("src").as("doc_id"), col("cluster"))
-    docs.select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
+    labeled(docs, e.groupBy(col("src")).agg(min(col("dst")).as("cluster"))
+      .select(col("src").as("doc_id"), col("cluster")))
   }
-
-  /** Widen low-parallelism inputs before CPU-heavy row-local work: a small
-    * corpus arrives as a 1-file/1-partition scan and would tokenize
-    * single-threaded. At scale the scan is naturally wide and this is a
-    * no-op — the guard exists so we never add a full-corpus shuffle to a
-    * properly-partitioned input. */
-  private def parallelized(docs: DataFrame): DataFrame =
-    TextAnalysis.parallelized(docs)
 
   /** Distinct 3-gram shingles per doc: (doc_id, shingle), via the native
     * one-pass [[graft.functions.SortedShingles3]] (same contents as the
@@ -295,7 +272,7 @@ object Dedup {
     * (sub-linear banding) are the alternatives.
     */
   def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    val sh = persisted(shingleRows(parallelized(docs)))
+    val sh = persisted(shingleRows(TextAnalysis.parallelized(docs)))
     val inter = sh.as("a").join(sh.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -320,7 +297,7 @@ object Dedup {
     * for corpora where even prefix generation must be bounded. */
   def jaccardPairsCapped(docs: DataFrame, threshold: Double,
       maxDf: Long): DataFrame = {
-    val sets = persisted(docSetsLocal(parallelized(docs)))
+    val sets = persisted(docSetsLocal(TextAnalysis.parallelized(docs)))
     val sh = sets.select(col("doc_id"), explode(col("shingles")).as("shingle"))
     val rare = sh.join(
       sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -362,7 +339,7 @@ object Dedup {
     // barrier — fused un-materialized, the optimizer re-inlines the
     // token-split into each consumer's generator and the regex runs per
     // shingle reference again (measured 2.5× the whole operator).
-    val sets = persisted(docSetsLocal(parallelized(docs)))
+    val sets = persisted(docSetsLocal(TextAnalysis.parallelized(docs)))
     val sh = sets.select(col("doc_id"), explode(col("shingles")).as("shingle"))
     // global order: document frequency ascending (rarest first), tiebreak
     // on the shingle itself for determinism
@@ -476,7 +453,7 @@ object Dedup {
     * tool. Results are identical to [[jaccardPairs]] either way —
     * spec-verified. */
   def jaccardPairsPrefixHash(docs: DataFrame, threshold: Double): DataFrame = {
-    val sets = persisted(docSetsLocal(parallelized(docs)))
+    val sets = persisted(docSetsLocal(TextAnalysis.parallelized(docs)))
     val prefLen = (floor(lit(1.0 - threshold) * col("n_shingles") + lit(1e-9)) + 1)
       .cast(IntegerType)
     val prefixes = sets
@@ -549,7 +526,7 @@ object Dedup {
     * pipeline per side. `isReference` marks the reference (eval) side. */
   def crossContaminationWithin(docs: DataFrame, isReference: Column,
       minShared: Long): DataFrame = {
-    val sh = persisted(parallelized(docs)
+    val sh = persisted(TextAnalysis.parallelized(docs)
       .select(col("doc_id"), isReference.as("is_ref"),
         explode(graft.functions.SetCols.sortedShingles3(col("text")))
           .as("shingle")))
@@ -589,7 +566,7 @@ object Dedup {
   def bloomDecontaminateWithin(docs: DataFrame, isReference: Column,
       minShared: Long, fpp: Double = 0.01): DataFrame = {
     import graft.functions.BloomCols
-    val sh = persisted(parallelized(docs)
+    val sh = persisted(TextAnalysis.parallelized(docs)
       .select(col("doc_id"), isReference.as("is_ref"),
         explode(graft.functions.SetCols.sortedShingles3(col("text")))
           .as("shingle")))
@@ -688,7 +665,7 @@ object Dedup {
     * Jaccard verification restricted to candidate pairs. */
   def minHashNearDups(docs: DataFrame, k: Int, rowsPerBand: Int,
       threshold: Double): DataFrame = {
-    val sh = persisted(shingleRows(parallelized(docs)))
+    val sh = persisted(shingleRows(TextAnalysis.parallelized(docs)))
     val cand = minHashCandidates0(minHashSignatures0(sh, k), k, rowsPerBand)
     jaccardPairs0(docSets(sh), cand, threshold)
   }
@@ -704,7 +681,7 @@ object Dedup {
     * O(delta), not O(corpus), per export. */
   def writeMinHashIndex(docs: DataFrame, k: Int, path: String,
       mode: String = "overwrite"): Unit = {
-    val sh = persisted(shingleRows(parallelized(docs)))
+    val sh = persisted(shingleRows(TextAnalysis.parallelized(docs)))
     minHashSignatures0(sh, k).join(docSets(sh), "doc_id")
       .write.mode(mode).parquet(path)
   }
@@ -728,7 +705,7 @@ object Dedup {
     * recomputes from scratch. */
   def minHashNearDupsIncremental(newDocs: DataFrame, index: DataFrame,
       k: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
-    val sh = persisted(shingleRows(parallelized(newDocs)))
+    val sh = persisted(shingleRows(TextAnalysis.parallelized(newDocs)))
     val newSigs = persisted(minHashSignatures0(sh, k))
     val bandsNew = bandRows(newSigs, k, rowsPerBand)
     val bandsAll = bandRows(
@@ -893,7 +870,7 @@ object Dedup {
   def duplicateSpans(docs: DataFrame, span: Int,
       minOccurrences: Long = 2L): DataFrame = {
     require(span > 0, s"span must be positive, got $span")
-    val occ = parallelized(docs)
+    val occ = TextAnalysis.parallelized(docs)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= span)
       .select(col("doc_id"),
@@ -914,7 +891,7 @@ object Dedup {
     * [[graft.functions.SimHashAgg]]: one shuffle keyed on doc_id, a 64-int
     * vote buffer per doc, map-side partial merge — no row expansion. */
   def simHash(docs: DataFrame): DataFrame =
-    parallelized(docs)
+    TextAnalysis.parallelized(docs)
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"))
       .agg(graft.functions.SimHashAgg.simhash(col("tok")).as("simhash"))

@@ -22,23 +22,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object Graph {
 
-  /** Edge-count ceiling for solving the triangle count ON THE DRIVER
-    * (collect once, sorted-adjacency intersection) instead of running
-    * the 8-relation-op distributed dataflow: a duplicate-pair graph is
-    * tiny next to its corpus, and the distributed plan's half-dozen
-    * exchanges over a few thousand edges cost two orders of magnitude
-    * more scheduling than the arithmetic ([[Dedup]] makes the same
-    * trade for connected components). The cap sits far BELOW the
-    * clusters' 4M-edge limit because the work here is O(m^{3/2}) wedge
-    * probes, not O(m·α) unions — 256k edges bounds the worst case at
-    * ~1.3e8 sorted-array probes, well under a second of driver CPU.
-    * Above the cap (or with `spark.graft.graph.localEdgeLimit=0`) the
-    * distributed oriented join runs unchanged — at 100 TB that is the
-    * only shape that works. */
-  private def localEdgeLimit(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.graph.localEdgeLimit")
-      .map(_.toLong).getOrElse(262144L)
-
   /** One-row statistics of the simple undirected graph given as edge rows
     * (`a`, `b`): node/edge counts, wedge count Σ d(d−1)/2, and the exact
     * triangle count. Input edges are canonicalized (a<b, dedup'd), so any
@@ -50,10 +33,16 @@ object Graph {
         greatest(col("a"), col("b")).cast("long").as("b"))
       .filter(col("a") < col("b")).distinct()
       .localCheckpoint() // reused 4× (degrees, orientation, closure probe)
-    // n_edges is part of the answer, so the count doubles as the
-    // local-vs-distributed gate for free (reads the checkpointed blocks)
-    val m = edges.count()
-    if (m <= localEdgeLimit(spark)) return localTriangleStats(spark, edges, m)
+    // small-graph fast path: collect once and count on the driver
+    // (sorted-adjacency intersection) instead of the 8-relation-op
+    // dataflow below, whose half-dozen exchanges over a few thousand
+    // edges cost two orders of magnitude more scheduling than the
+    // arithmetic (see [[DriverLocal]])
+    DriverLocal.collectUnder(edges, DriverLocal.TrianglesKey,
+        DriverLocal.TrianglesCap) match {
+      case Right(rows) => return localTriangleStats(spark, rows)
+      case Left(_) =>
+    }
     val deg = edges.select(col("a").as("v"))
       .union(edges.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -91,9 +80,9 @@ object Graph {
     * endpoint emits the wedge) and exact integer arithmetic, so the
     * one-row answer is bit-identical to the distributed plan's
     * (GraphSpec pins the equivalence with the limit forced to 0). */
-  private def localTriangleStats(spark: SparkSession, edges: DataFrame,
-      m: Long): DataFrame = {
-    val arr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+  private def localTriangleStats(spark: SparkSession,
+      edges: Array[Row]): DataFrame = {
+    val arr = edges.map(r => (r.getLong(0), r.getLong(1)))
     val deg = new java.util.HashMap[Long, Long](arr.length * 2)
     arr.foreach { case (a, b) =>
       deg.merge(a, 1L, _ + _); deg.merge(b, 1L, _ + _)
@@ -137,7 +126,7 @@ object Graph {
     }
     spark.createDataFrame(
       java.util.Collections.singletonList(
-        Row(deg.size.toLong, m, wedges, triangles)),
+        Row(deg.size.toLong, arr.length.toLong, wedges, triangles)),
       StructType(Seq(
         StructField("n_nodes", LongType, nullable = false),
         StructField("n_edges", LongType, nullable = false),

@@ -23,15 +23,11 @@ object TextAnalysis {
     * (sortBeforeRepartition) and is retry-hazardous on non-deterministic
     * inputs. At scale a multi-file scan is already wide and this is a
     * no-op — the guard exists so no full-corpus shuffle is ever ADDED to
-    * a properly-partitioned input. (Same contract as the dedup family's
-    * internal widen; every consumer here is order-insensitive —
-    * aggregates, joins, sorted collects.) */
+    * a properly-partitioned input. (Every consumer — the dedup family
+    * included — is order-insensitive: aggregates, joins, sorted
+    * collects.) */
   def parallelized(docs: org.apache.spark.sql.DataFrame,
       key: String = "doc_id"): org.apache.spark.sql.DataFrame = {
-    // kill switch (also how plan dumps show the un-widened shape):
-    // spark.graft.text.widen=false keeps the scan's own partitioning
-    if (docs.sparkSession.conf.getOption("spark.graft.text.widen")
-        .exists(_.equalsIgnoreCase("false"))) return docs
     val parallelism = docs.sparkSession.sparkContext.defaultParallelism
     // partition count from the INTERNAL plan RDD (queryExecution.toRdd):
     // planning only — no job, and none of df.rdd's external-row encoder

@@ -50,12 +50,6 @@ object LevenshteinPrefilter extends Rule[LogicalPlan] {
     * argument (rand(), uuid()…) would be re-evaluated independently in
     * the bound and could reject rows the original predicate accepts
     * (the standard Catalyst guard for expression-duplicating rewrites). */
-  /** Kill switch for the threshold (banded) rewrite only — the length
-    * bound always applies. Used for before/after plan evidence. */
-  private def bandedEnabled: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.lev.banded", "true").toBoolean
-
   private def addBounds(cond: Expression): Expression = {
     val conjuncts = splitConjuncts(cond)
     var changed = false
@@ -64,16 +58,18 @@ object LevenshteinPrefilter extends Rule[LogicalPlan] {
       !conjuncts.exists(_.semanticEquals(bound(l, r, k)))
     val rewritten = conjuncts.map {
       // lev(a,b) <= k  →  lev(a,b,k) >= 0, plus the length bound
-      case c @ LessThanOrEqual(Levenshtein(l, r, None), k @ Literal(_, IntegerType))
+      case LessThanOrEqual(Levenshtein(l, r, None), k @ Literal(_, IntegerType))
           if l.deterministic && r.deterministic && intOf(k) >= 0 =>
-        if (needBound(l, r, k)) { changed = true; additions += bound(l, r, k) }
-        if (bandedEnabled) { changed = true; banded(l, r, k) } else c
+        if (needBound(l, r, k)) additions += bound(l, r, k)
+        changed = true
+        banded(l, r, k)
       // lev(a,b) < k  ⟺  lev(a,b) <= k-1  →  lev(a,b,k-1) >= 0
-      case c @ LessThan(Levenshtein(l, r, None), k @ Literal(_, IntegerType))
+      case LessThan(Levenshtein(l, r, None), k @ Literal(_, IntegerType))
           if l.deterministic && r.deterministic && intOf(k) >= 1 =>
         val km1 = Literal(intOf(k) - 1)
-        if (needBound(l, r, km1)) { changed = true; additions += bound(l, r, km1) }
-        if (bandedEnabled) { changed = true; banded(l, r, km1) } else c
+        if (needBound(l, r, km1)) additions += bound(l, r, km1)
+        changed = true
+        banded(l, r, km1)
       // already banded (hand-written or from a previous pass): length
       // bound only, if absent
       case c @ GreaterThanOrEqual(Levenshtein(l, r, Some(k @ Literal(_, IntegerType))),

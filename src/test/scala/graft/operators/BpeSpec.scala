@@ -222,6 +222,16 @@ class BpeSpec extends SparkSpec {
     } === refBpe(edges, 10))
   }
 
+  test("a malformed local-vocab cap fails naming its key") {
+    // negative or non-numeric: rejected, never silently a disabled path
+    for (bad <- Seq("-1", "abc")) {
+      val e = intercept[IllegalArgumentException] {
+        withVocabLimit(bad) { Corpus.bpeTrain(words("ab" -> 1L), 1) }
+      }
+      assert(e.getMessage.contains("spark.graft.bpe.localVocabLimit"), bad)
+    }
+  }
+
   test("bpeEncode replays the learned merges: encoding train words reproduces the final symbolization") {
     val corpus = Seq("abab" -> 3L, "ab" -> 2L, "cab" -> 4L, "z" -> 1L)
     val table = Corpus.bpeTrain(words(corpus: _*), 3)

@@ -46,13 +46,17 @@ class GraphSpec extends SparkSpec {
     val edges = (1 to 600).map { _ =>
       val a = next() % 60; val b = next() % 60; (a, b)
     }.filter { case (a, b) => a != b }
-    val df = edges.toDF("a", "b")
-    val local = Graph.triangleStats(df).collect().head // default limit: local
-    spark.conf.set("spark.graft.graph.localEdgeLimit", 0L)
-    try {
-      val dist = Graph.triangleStats(df).collect().head
-      assert(local === dist)
-    } finally spark.conf.unset("spark.graft.graph.localEdgeLimit")
+    // the empty edge set too: cap 0 never takes the fast path, not even
+    // for 0 edges
+    for (g <- Seq(edges, Seq.empty[(Long, Long)])) {
+      val df = g.toDF("a", "b")
+      val local = Graph.triangleStats(df).collect().head // default limit: local
+      spark.conf.set("spark.graft.graph.localEdgeLimit", 0L)
+      try {
+        val dist = Graph.triangleStats(df).collect().head
+        assert(local === dist)
+      } finally spark.conf.unset("spark.graft.graph.localEdgeLimit")
+    }
   }
 
   test("pseudo-random graph: oriented count equals the naive 3-join count") {

@@ -359,26 +359,29 @@ class TextSpec extends SparkSpec {
     // small graphs take the union-find fast path by default; forcing
     // localEdgeLimit=0 runs the distributed propagation/contraction
     // loops — both must label identically, chain included (the shape
-    // that stresses contraction round count)
+    // that stresses contraction round count), and the empty edge set
+    // too (cap 0 never takes the fast path, not even for 0 edges)
     val rnd = new scala.util.Random(23)
     val n = 50
-    val edges = (Seq.fill(60)((rnd.nextInt(n), rnd.nextInt(n)))
+    val random = (Seq.fill(60)((rnd.nextInt(n), rnd.nextInt(n)))
       .filter(p => p._1 != p._2)
       .map(p => (p._1.toLong, p._2.toLong)) ++
       (0L until 40L).map(i => (i, i + 1))).distinct
     val docs = (0 until n).map(_.toLong).toDF("doc_id")
-    val pairs = edges.toDF("doc_a", "doc_b")
     def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fastStar = labelsOf(Dedup.dupClustersStar(docs, pairs))
-    val fastProp = labelsOf(Dedup.dupClusters(docs, pairs))
-    assert(fastStar === unionFind(n, edges))
-    assert(fastProp === fastStar)
-    spark.conf.set("spark.graft.clusters.localEdgeLimit", "0")
-    try {
-      assert(labelsOf(Dedup.dupClustersStar(docs, pairs)) === fastStar)
-      assert(labelsOf(Dedup.dupClusters(docs, pairs, maxRounds = 60)) === fastProp)
-    } finally spark.conf.unset("spark.graft.clusters.localEdgeLimit")
+    for (edges <- Seq(random, Seq.empty[(Long, Long)])) {
+      val pairs = edges.toDF("doc_a", "doc_b")
+      val fastStar = labelsOf(Dedup.dupClustersStar(docs, pairs))
+      val fastProp = labelsOf(Dedup.dupClusters(docs, pairs))
+      assert(fastStar === unionFind(n, edges))
+      assert(fastProp === fastStar)
+      spark.conf.set("spark.graft.clusters.localEdgeLimit", "0")
+      try {
+        assert(labelsOf(Dedup.dupClustersStar(docs, pairs)) === fastStar)
+        assert(labelsOf(Dedup.dupClusters(docs, pairs, maxRounds = 60)) === fastProp)
+      } finally spark.conf.unset("spark.graft.clusters.localEdgeLimit")
+    }
   }
 
   /** Union-find reference with min-root unions: the final root of every
