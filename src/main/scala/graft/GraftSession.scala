@@ -32,7 +32,19 @@ object GraftSession {
     *    prefix self-join: ~6 MiB of shuffle data but seconds of compute)
     *    to single-digit parallelism. The floor only matters when
     *    bytes/parallelism < 1 MiB — i.e. small stages; at cluster scale
-    *    partitions dwarf both values and coalescing behaves as before.
+    *    partitions dwarf both values and coalescing behaves as before;
+    *  - `file:` bound to [[graft.io.GraftLocalFileSystem]] (`FileSystem`)
+    *    and [[graft.io.GraftLocalFs]] (`FileContext`): without libhadoop,
+    *    Hadoop's local filesystem forks `/bin/chmod` for every file it
+    *    creates and every directory it makes, and `/bin/readlink` for every
+    *    link-status lookup (each `FileContext.rename` of a streaming
+    *    checkpoint does two): milliseconds each, ~15 per export job.
+    *    The graft classes do the same through java.nio and keep the mode
+    *    bits, the `.crc` checksum sidecars, and rename-fails-if-exists
+    *    onto a file (the rule of Hive's `ProxyLocalFileSystem`, which wins
+    *    the `FileSystem` service loader by jar order without this key).
+    *    Other schemes are untouched, and with NativeIO loaded the stock
+    *    code paths run.
     */
   val engineConfs: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
@@ -60,7 +72,10 @@ object GraftSession {
     // spark.sql over registered/durable table names); imperative
     // installOptimizations stays for pre-built sessions, which cannot
     // take analyzer rules after the fact
-    "spark.sql.extensions" -> "graft.GraftExtensions")
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    "spark.hadoop.fs.file.impl" -> classOf[graft.io.GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.io.GraftLocalFs].getName)
 
   /** `builder.config(k, v)` for every [[engineConfs]] entry. */
   def tuned(builder: SparkSession.Builder): SparkSession.Builder =

@@ -46,7 +46,10 @@ object ExportMain {
       }
       val climbs = Enrich.flattenAreas(
         JsonSource.fromRecords(spark, areaRecords, ClimbSchema.area))
-      val result = ExportPipeline.run(spark, climbs, config, schemaSql, outDir)
+      val inputBytes = areaRecords.iterator
+        .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong).sum
+      val result = ExportPipeline.run(spark, climbs, config, schemaSql, outDir,
+        inputBytes)
       println(s"Export complete: ${result.outputPath} (${result.rows} rows)")
       println(result.sample)
       0

@@ -34,9 +34,12 @@ object ExportPipeline {
     Sinks.parquet(transformed, out, config.compression, singleFile)
 
     // read back for the verified row count (the reference's test does the
-    // same COUNT(*) round trip, test-export.py:104-106)
-    val written = spark.read.parquet(out)
-    val rows = written.count()
+    // same COUNT(*) round trip, test-export.py:104-106). The schema is the
+    // one just written, so no inference job runs; the column-less scan
+    // still opens every written file's footer, as one job with no shuffle
+    // (`Dataset.count` plans a two-stage aggregate)
+    val written = spark.read.schema(transformed.schema).parquet(out)
+    val rows = written.select().rdd.count()
     require(rows > 0, "export produced zero rows (aborting, reference C3 semantics)")
 
     Sinks.statsSidecar(s"$outDir/export-stats.json", rows, inputBytes,

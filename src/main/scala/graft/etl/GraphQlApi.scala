@@ -1,6 +1,7 @@
 package graft.etl
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.core.JsonToken
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ArrayNode
 
 import scala.jdk.CollectionConverters._
@@ -193,14 +194,44 @@ query($uuid: ID!) {
 
   /** Unpack one areas-page envelope → raw JSON strings, one per area
     * object (`data.areas[]`). Throws [[GraphQlErrors]] on an `errors` key
-    * (the per-country caller treats it as a soft abort, export.py:126-128). */
+    * at the top level, before or after `data` (the per-country caller
+    * treats it as a soft abort, export.py:126-128).
+    *
+    * One streaming pass: each area is its text sliced out of the page,
+    * not a tree re-serialized, so the page is tokenized once and no
+    * per-area tree is built. */
   def parseAreasPage(body: String): Seq[String] = {
-    val root = mapper.readTree(body)
-    if (root.has("errors")) throw GraphQlErrors(root.get("errors").toString)
-    root.path("data").path("areas") match {
-      case a: ArrayNode => a.elements().asScala.map(_.toString).toSeq
-      case _ => Seq.empty
-    }
+    val p = mapper.getFactory.createParser(body)
+    try {
+      var areas = Seq.empty[String]
+      var errors: Option[String] = None
+      // fields of the object at the parser's current START_OBJECT; the
+      // visitor leaves each value's last token current
+      def fields(visit: String => Unit): Unit =
+        while (p.nextToken() == JsonToken.FIELD_NAME) {
+          val name = p.currentName
+          p.nextToken()
+          visit(name)
+        }
+      if (p.nextToken() == JsonToken.START_OBJECT) fields {
+        case "errors" => errors = Some(mapper.readTree[JsonNode](p).toString)
+        case "data" if p.currentToken == JsonToken.START_OBJECT => fields {
+          case "areas" if p.currentToken == JsonToken.START_ARRAY =>
+            val out = Seq.newBuilder[String]
+            while (p.nextToken() != JsonToken.END_ARRAY) {
+              val start = p.currentTokenLocation.getCharOffset.toInt
+              p.skipChildren()
+              p.finishToken() // a scalar string is read lazily
+              out += body.substring(start, p.currentLocation.getCharOffset.toInt)
+            }
+            areas = out.result()
+          case _ => p.skipChildren()
+        }
+        case _ => p.skipChildren()
+      }
+      errors.foreach(e => throw GraphQlErrors(e))
+      areas
+    } finally p.close()
   }
 
   /** Fetch every areas page for one country, soft-failing to partial

@@ -75,7 +75,10 @@ object Sinks {
   }
 
   /** K4: stats sidecar — row count, input/output sizes, compression ratio
-    * (export.py:244-262 observable metrics). */
+    * (export.py:244-262 observable metrics). `inputBytes` is what the
+    * caller fed the export: [[ExportMain]] passes the UTF-8 size of the
+    * fetched area JSON, where the reference measures its enriched temp
+    * file (export.py:216-228), which this pipeline never writes. */
   def statsSidecar(path: String, totalRows: Long, inputBytes: Long,
       outputBytes: Long): Unit = {
     val inMb = inputBytes / 1e6

@@ -66,6 +66,27 @@ class EtlSpec extends SparkSpec {
     assert(usa.rows === 3)
   }
 
+  test("export read-back: rows and sample equal an inferred-schema read of " +
+      "the output, for every stock schema; zero rows still abort (C3)") {
+    val dir = tmpDir("graft-readback")
+    for ((name, sql) <- Seq("canonical" -> DefaultSchemas.canonical,
+        "minimal" -> DefaultSchemas.minimal,
+        "usa" -> DefaultSchemas.usaSportOnly,
+        "extended" -> DefaultSchemas.extended)) {
+      val res = ExportPipeline.run(spark, climbs,
+        GraftConfig(outputFilename = s"$name.parquet"), sql, dir)
+      val inferred = spark.read.parquet(res.outputPath)
+      assert(res.rows === inferred.count(), name)
+      assert(res.sample === Sinks.sample(inferred), name)
+    }
+    val e = intercept[IllegalArgumentException] {
+      ExportPipeline.run(spark, climbs,
+        GraftConfig(regions = Seq("Narnia"), outputFilename = "none.parquet"),
+        outDir = dir)
+    }
+    assert(e.getMessage.contains("export produced zero rows"))
+  }
+
   test("enrichment: child inherits area pathTokens and lat+lng together (E1/E2)") {
     val areas = spark.read.option("multiLine", "true")
       .schema(ClimbSchema.area).json(fixture("areas_fixture.json"))

@@ -1,5 +1,7 @@
 package graft.etl
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.functions.col
 
@@ -150,6 +152,54 @@ class GraphQlExportSpec extends SparkSpec {
     intercept[GraphQlApi.GraphQlErrors] {
       GraphQlApi.parseAreasPage("""{"errors": [{"message": "nope"}]}""")
     }
+  }
+
+  test("areas envelope: an errors key raises before or after data (C4)") {
+    val page = s"""{"data": {"areas": [${
+      areaJson("a", Seq("USA"), Some(1.0), Seq.empty)}]}, "errors": [{"message": "late"}]}"""
+    val late = intercept[GraphQlApi.GraphQlErrors](GraphQlApi.parseAreasPage(page))
+    assert(late.detail === """[{"message":"late"}]""")
+    val early = intercept[GraphQlApi.GraphQlErrors] {
+      GraphQlApi.parseAreasPage(
+        """{"errors": [{"message": "early", "path": ["areas"]}], "data": {"areas": []}}""")
+    }
+    assert(early.detail === """[{"message":"early","path":["areas"]}]""")
+    assert(intercept[GraphQlApi.GraphQlErrors](
+      GraphQlApi.parseAreasPage("""{"data": null, "errors": null}""")).detail === "null")
+  }
+
+  test("areas sliced raw from the page flatten to the rows of the " +
+      "tree-serialized areas (unicode escapes, nested arrays, nulls)") {
+    val page = """{"data": {"areas": [
+      {"uuid": "caf~u00e9", "area_name": "Café ~ud83e~uddd7 \"Wall\"",
+       "pathTokens": ["USA", "Utah ~u2014 North", "🧗", null],
+       "metadata": {"lat": 3.80e1, "lng": -109.50},
+       "extra": [[1, [2, null]], {"k": [null]}],
+       "climbs": [
+         {"uuid": "c1", "name": "back\\slash\nline", "fa": null,
+          "length": 12, "boltsCount": null,
+          "grades": {"yds": "5.10+", "vscale": null, "french": "6a"},
+          "type": {"sport": true, "trad": null, "bouldering": false},
+          "safety": null, "metadata": {"lat": 0.0, "lng": 0.0},
+          "content": {"description": "tést \t tab"},
+          "pathTokens": ["USA", ["nested", ["deeper"]], null]},
+         {"uuid": "c2", "name": null, "metadata": null, "pathTokens": []},
+         null]},
+      {"uuid": "empty", "area_name": null, "pathTokens": null,
+       "metadata": null, "climbs": []},
+      {"uuid": "nulls", "climbs": null}
+    ]}}""".replace("~u", "\\u") // JSON unicode escapes: Scala decodes them in the literal
+    assert(page.contains("\\u00e9")) // JSON escapes reach the parser
+    val raw = GraphQlApi.parseAreasPage(page)
+    val tree = mapper.readTree(page).path("data").path("areas").elements()
+      .asScala.map(_.toString).toSeq
+    assert(raw.map(mapper.readTree) === tree.map(mapper.readTree))
+    assert(raw !== tree) // the slices are the page's own text
+    def rows(records: Seq[String]) = Enrich.flattenAreas(
+      JsonSource.fromRecords(spark, records, ClimbSchema.area))
+      .collect().toSeq.sortBy(_.toString)
+    val got = rows(raw)
+    assert(got.nonEmpty && got === rows(tree))
   }
 
   test("single-area fetch: body carries the uuid; envelope unpacks data.area") {
@@ -304,6 +354,31 @@ class GraphQlExportSpec extends SparkSpec {
         FetchClient.RetryPolicy(backoffMs = 1)),
       GraftConfig(apiUrl = "http://x", regions = Seq("Narnia")),
       outDir = dir) === 1)
+  }
+
+  test("ExportMain.run: the stats sidecar reports the fetched JSON's size") {
+    // the fake API's areas, with enough climbs that the fetched JSON is
+    // at least 0.01 MB, the sidecar's resolution
+    val climbs = (1 to 60).map(i => climbJson(s"cl-$i", None, Some(i.toDouble)))
+    val page = s"""{"data": {"areas": [${
+      areaJson("area-big", Seq("USA", "Utah"), Some(38.0), climbs)}]}}"""
+    val big: FetchClient.Transport = (_, b) =>
+      if (mapper.readTree(b).get("query").asText().contains("GetCountries"))
+        (200, """{"data": {"countries": [{"areaName": "USA"}]}}""")
+      else (200, page)
+    val fetch = GraphQlApi.fetchAllAreas(big, _: String,
+      policy = FetchClient.RetryPolicy(backoffMs = 1))
+    val fetchedMb = fetch("http://x")
+      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8).length).sum / 1e6
+    assert(fetchedMb >= 0.01)
+    val dir = tmpDir("graft-export-stats")
+    assert(ExportMain.run(spark, fetch,
+      GraftConfig(apiUrl = "http://x", outputFilename = "climbs.parquet"),
+      outDir = dir) === 0)
+    val stats = mapper.readTree(new java.io.File(s"$dir/export-stats.json"))
+    assert(stats.get("total_rows").asLong() === 60L)
+    assert(math.abs(stats.get("input_size_mb").asDouble() - fetchedMb) <= 0.005)
+    assert(stats.get("compression_ratio").asDouble() > 0)
   }
 
   test("Parquet2JsonMain.run: extension picks JSON array vs GeoJSON") {
