@@ -10,6 +10,14 @@ import org.apache.spark.sql.functions._
   * main()): the F5 region pre-filter is a no-op when `regions` is empty,
   * a zero-row input or zero-row transform aborts (C3), and the stats
   * sidecar reports row count / sizes / compression ratio (K4).
+  *
+  * The write is the export's only Spark job (for a transform without
+  * shuffles of its own). The read-back lists the output once: the row
+  * count sums the row counts in every part file's footer, read on the
+  * driver up to `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  * files and in one more job above it; the sample is read on the driver
+  * by Spark's Parquet reader, the rows a `limit(5)` scan returns. The
+  * driver holds the footers and at most one reader batch of one file.
   */
 object ExportPipeline {
 
@@ -33,17 +41,16 @@ object ExportPipeline {
     val out = s"$outDir/${config.outputFilename}"
     Sinks.parquet(transformed, out, config.compression, singleFile)
 
-    // read back for the verified row count (the reference's test does the
-    // same COUNT(*) round trip, test-export.py:104-106). The schema is the
-    // one just written, so no inference job runs; the column-less scan
-    // still opens every written file's footer, as one job with no shuffle
-    // (`Dataset.count` plans a two-stage aggregate)
-    val written = spark.read.schema(transformed.schema).parquet(out)
-    val rows = written.select().rdd.count()
+    // verified row count: the reference's test reads the output back with
+    // a COUNT(*) (test-export.py:104-106), which DuckDB answers from the
+    // footers; so does this, from one listing of the written files
+    val written = WrittenParquet(spark, out)
+    val rows = written.rowCount()
     require(rows > 0, "export produced zero rows (aborting, reference C3 semantics)")
 
     Sinks.statsSidecar(s"$outDir/export-stats.json", rows, inputBytes,
-      Sinks.pathSize(out))
-    Result(rows, out, Sinks.sample(written))
+      written.bytes)
+    Result(rows, out, Sinks.formatSample(transformed.columns.toSeq,
+      written.head(transformed.schema, Sinks.SampleRows)))
   }
 }

@@ -3,13 +3,13 @@ package graft.etl
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Output sinks (SURVEY.md §2.2 K1–K5).
   *
   * Scale stance: the distributed directory-of-parts layout is the default
-  * for every format; the reference's single-file artifacts (one .parquet,
+  * for Parquet; the reference's single-file artifacts (one .parquet,
   * one JSON array, one GeoJSON FeatureCollection — export.py:238-242,
   * parquet2json.py:15-42) are explicit "parity" variants that necessarily
   * serialize through one task or the driver and are documented as
@@ -17,16 +17,16 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** K1: Parquet with configurable codec (snappy | gzip | zstd). */
+  /** K1: Parquet with configurable codec (snappy | gzip | zstd).
+    * `singleFile` writes one part file through `coalesce(1)`: one task
+    * runs the upstream plan and the write, so the write stays one job
+    * with no shuffle (under AQE a `repartition(1)` adds a map-stage job)
+    * and a sorted input keeps its order. Small outputs only. */
   def parquet(df: DataFrame, path: String, codec: String = "snappy",
       singleFile: Boolean = false): Unit = {
-    val d = if (singleFile) df.repartition(1) else df
+    val d = if (singleFile) df.coalesce(1) else df
     d.write.mode(SaveMode.Overwrite).option("compression", codec).parquet(path)
   }
-
-  /** K2 (scale layout): JSON-lines directory — splittable, parallel. */
-  def jsonl(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
 
   /** The 100 TB-default parquet layout: directory-partitioned on
     * low-cardinality keys so downstream scans prune whole partitions
@@ -93,21 +93,32 @@ object Sinks {
     Files.write(Paths.get(path), json.getBytes(StandardCharsets.UTF_8))
   }
 
-  /** K5: sample display — first 5 rows, values truncated to 30 chars
-    * (export.py:264-272 behavior). */
-  def sample(df: DataFrame, n: Int = 5, truncateTo: Int = 30): String = {
-    val rows = df.limit(n).collect()
+  /** K5: sample display — the first `n` rows of `df`
+    * (export.py:264-272 behavior), formatted by [[formatSample]]. */
+  def sample(df: DataFrame, n: Int = SampleRows, truncateTo: Int = 30): String =
+    formatSample(df.columns.toSeq, df.limit(n).collect().toSeq, truncateTo)
+
+  val SampleRows = 5
+
+  /** A header line of column names, then one line per row, values
+    * truncated to `truncateTo` chars. */
+  def formatSample(columns: Seq[String], rows: Seq[Row],
+      truncateTo: Int = 30): String = {
     val lines = rows.map(_.toSeq.map { v =>
       val s = String.valueOf(v)
       if (s.length > truncateTo) s.take(truncateTo - 3) + "..." else s
     }.mkString(" | "))
-    (df.columns.mkString(" | ") +: lines).mkString("\n")
+    (columns.mkString(" | ") +: lines).mkString("\n")
   }
 
-  /** Directory size on disk (for the stats sidecar). */
+  /** Size of a file, or of the data under a directory (for the stats
+    * sidecars): names starting with `_` or `.` (`_SUCCESS`, checksum
+    * sidecars) are skipped, as Spark's file index skips them. */
   def pathSize(p: String): Long = {
     val f = new java.io.File(p)
     if (f.isFile) f.length()
-    else Option(f.listFiles()).map(_.map(x => pathSize(x.getPath)).sum).getOrElse(0L)
+    else Option(f.listFiles()).map(_.filterNot { x =>
+      x.getName.startsWith("_") || x.getName.startsWith(".")
+    }.map(x => pathSize(x.getPath)).sum).getOrElse(0L)
   }
 }

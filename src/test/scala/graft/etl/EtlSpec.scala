@@ -87,6 +87,27 @@ class EtlSpec extends SparkSpec {
     assert(e.getMessage.contains("export produced zero rows"))
   }
 
+  test("export-stats.json output_size_mb is the part files' bytes: no " +
+      "checksum sidecars, no _SUCCESS") {
+    val dir = tmpDir("graft-outsize")
+    // ~5 MB of incompressible hex, so the ~0.8% of .crc bytes shows at
+    // the sidecar's two decimals
+    val wide = spark.range(0, 40000, 1, 2)
+      .selectExpr("id", "sha2(CAST(id AS STRING), 512) AS h")
+    val res = ExportPipeline.run(spark, wide, GraftConfig(
+      outputFilename = "wide.parquet", compression = "uncompressed"),
+      "SELECT id, h FROM climbs", dir)
+    val files = new java.io.File(res.outputPath).listFiles().toSeq
+    val partBytes = files.filter(_.getName.startsWith("part-")).map(_.length).sum
+    val allBytes = files.map(_.length).sum
+    assert(files.exists(_.getName.endsWith(".crc")) &&
+      files.exists(_.getName == "_SUCCESS"))
+    assert(allBytes / 1e6 - partBytes / 1e6 > 0.02) // the sidecars show
+    val stats = new ObjectMapper().readTree(new java.io.File(s"$dir/export-stats.json"))
+    assert(math.abs(stats.get("output_size_mb").asDouble() - partBytes / 1e6) <= 0.005)
+    assert(Sinks.pathSize(res.outputPath) === partBytes)
+  }
+
   test("enrichment: child inherits area pathTokens and lat+lng together (E1/E2)") {
     val areas = spark.read.option("multiLine", "true")
       .schema(ClimbSchema.area).json(fixture("areas_fixture.json"))

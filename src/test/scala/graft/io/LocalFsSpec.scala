@@ -180,6 +180,59 @@ class LocalFsSpec extends AnyFunSuite {
     }
   }
 
+  test("getFileStatus and listStatus equal the stock status field by field " +
+      "for a file, a directory, symbolic links and set-ID/sticky directories") {
+    val conf = hadoopConf(None)
+    val stock = initialized(new RawLocalFileSystem(), conf)
+    val graft = initialized(new GraftRawLocalFileSystem, conf)
+    val dir = tmp("graft-status")
+    Files.write(Paths.get(s"$dir/file"), "data".getBytes(UTF_8))
+    Files.createDirectory(Paths.get(s"$dir/sub"))
+    Files.createSymbolicLink(Paths.get(s"$dir/link"), Paths.get(s"$dir/file"))
+    Files.createSymbolicLink(Paths.get(s"$dir/dirlink"), Paths.get(s"$dir/sub"))
+    Files.createSymbolicLink(Paths.get(s"$dir/dangling"), Paths.get(s"$dir/gone"))
+    for ((name, m) <- Seq("sgid" -> "2755", "sticky" -> "1777", "private" -> "0700")) {
+      val d = Paths.get(s"$dir/$name")
+      Files.createDirectory(d)
+      Files.setAttribute(d, "unix:mode", Integer.valueOf(octal(m)))
+    }
+    def fields(s: FileStatus) = (s.getPath, s.getLen, s.isDirectory, s.isFile,
+      s.isSymlink, s.getReplication, s.getBlockSize, s.getModificationTime,
+      s.getAccessTime, s.getPermission, s.getOwner, s.getGroup, s.hasAcl,
+      s.isEncrypted, s.isErasureCoded)
+    def outcome(fs: FileSystem, p: Path) =
+      scala.util.Try(fields(fs.getFileStatus(p))).toEither.left.map(_.getClass)
+    for (name <- Seq("file", "sub", "link", "dirlink", "dangling", "sgid",
+        "sticky", "private", "missing"); p <- Seq(
+        new Path(s"$dir/$name"), new Path(s"file:$dir/$name"))) {
+      assert(outcome(graft, p) === outcome(stock, p), p)
+    }
+    assert(graft.getFileStatus(new Path(s"$dir/sticky")).getPermission.getStickyBit)
+    intercept[java.io.FileNotFoundException] {
+      graft.getFileStatus(new Path(s"$dir/dangling"))
+    }
+    def listing(fs: FileSystem, p: String) =
+      fs.listStatus(new Path(p)).toSeq.map(fields).sortBy(_._1.toString)
+    for (p <- Seq(dir, s"$dir/file", s"$dir/link", s"$dir/sub"))
+      assert(listing(graft, p) === listing(stock, p), p)
+    assert(listing(graft, dir).size === 7) // the dangling link is skipped
+  }
+
+  test("a listing reads owner, group and mode without forking") {
+    val dir = tmp("graft-list-forks")
+    Files.write(Paths.get(s"$dir/a"), "a".getBytes(UTF_8))
+    Files.createDirectory(Paths.get(s"$dir/d"))
+    def touchAll(fs: FileSystem): Unit = fs.listStatus(new Path(dir))
+      .foreach(s => (s.getPermission, s.getOwner, s.getGroup))
+    val graft = initialized(new GraftLocalFileSystem, hadoopConf(None))
+    touchAll(graft) // class initialization may fork once per JVM
+    assert(forks(touchAll(graft)) === Nil)
+    if (!NativeIO.isAvailable) { // control: the stock status runs `ls -ld`
+      val started = forks(touchAll(initialized(new LocalFileSystem(), hadoopConf(None))))
+      assert(started.count(_.contains("ls")) === 2, started)
+    }
+  }
+
   test("the engine confs bind file: to the graft classes on both Hadoop APIs") {
     val conf = new Configuration()
     for ((k, v) <- GraftSession.engineConfs if k.startsWith("spark.hadoop."))
