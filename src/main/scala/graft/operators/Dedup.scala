@@ -505,25 +505,15 @@ object Dedup {
         size(col("shingles")).cast(LongType).as("n_shingles"))
 
   /** Cross-set contamination (train/eval decontamination): every
-    * `candidates` doc sharing at least `minShared` distinct 3-gram
-    * shingles with some `reference` doc, with the overlap count — the
-    * pairs a pretraining pipeline drops from the training side before an
-    * eval set is considered clean. Same inverted-index equi-join shape as
-    * [[jaccardPairs]] (shuffle on shingle, never a cross product); at
-    * benchmark-decontamination scale the reference side is small and
-    * broadcastable. */
-  def crossContamination(candidates: DataFrame, reference: DataFrame,
-      minShared: Long): DataFrame =
-    crossContamination0(
-      shingleRows(candidates).select(col("doc_id").as("cand_id"), col("shingle")),
-      shingleRows(reference).select(col("doc_id").as("ref_id"), col("shingle")),
-      minShared)
-
-  /** Same-corpus variant: when candidates and reference are two slices of
-    * ONE relation (the train/eval decontamination case), tokenize and
-    * shingle that relation ONCE into a persisted index and filter it both
-    * ways — the two-DataFrame form would re-run the scan + shingle
-    * pipeline per side. `isReference` marks the reference (eval) side. */
+    * candidate doc sharing at least `minShared` distinct 3-gram shingles
+    * with some reference doc, with the overlap count — the pairs a
+    * pretraining pipeline drops from the training side before an eval
+    * set is considered clean. Candidates and reference are two slices of
+    * ONE relation: it is tokenized and shingled ONCE into a persisted
+    * index and filtered both ways, so the scan + shingle pipeline never
+    * runs per side. `isReference` marks the reference (eval) side. Same
+    * inverted-index equi-join shape as [[jaccardPairs]] (shuffle on
+    * shingle, never a cross product). */
   def crossContaminationWithin(docs: DataFrame, isReference: Column,
       minShared: Long): DataFrame = {
     val sh = persisted(TextAnalysis.parallelized(docs)

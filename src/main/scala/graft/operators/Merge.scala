@@ -1,35 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Keyed MERGE-upsert into a partitioned parquet table, copy-on-write at
-  * partition granularity — the lakehouse write path (Delta/Iceberg MERGE
-  * INTO semantics: WHEN MATCHED THEN UPDATE ALL / WHEN NOT MATCHED THEN
-  * INSERT ALL) expressed over plain parquet.
-  *
-  * The 100 TB shape: a merge batch is small relative to the table, so the
-  * cost that matters is how much of the table gets REWRITTEN. This
-  * operator rewrites only the partitions the merge can actually change:
-  *   1. target partitions named by the update rows themselves, plus
-  *   2. partitions currently holding a matched key's row (a key may move
-  *      partitions when its partition-defining attribute changes) — found
-  *      with a column-pruned scan of (key, partition) joined against the
-  *      broadcast update-key set, the same touched-file discovery join
-  *      Delta's MERGE plans.
-  * The affected-partition list is collected to the driver (it is the
-  * pruned file manifest, bounded by the merge batch's partition spread,
-  * not by table size), the current rows of ONLY those partitions are read
-  * back through a partition-pruned scan, and the merged result replaces
-  * exactly those directories via dynamic partition overwrite. Untouched
-  * partitions are never read past their footer nor rewritten.
-  *
-  * `localCheckpoint` before the write stands in for the transactional
-  * metadata swap a table format provides: it materializes the merged rows
-  * so the overwrite does not stream from the very files it is replacing
-  * (Spark refuses that plan, correctly). On a cluster with a real
-  * lakehouse layer, the swap is a manifest commit instead; the dataflow —
-  * prune, rewrite-some, publish — is identical.
+/** Building blocks of the keyed copy-on-write MERGE/DELETE that
+  * [[TimeTravel.upsert]] and [[TimeTravel.delete]] commit as versions
+  * (Delta/Iceberg MERGE INTO semantics: WHEN MATCHED THEN UPDATE ALL /
+  * WHEN NOT MATCHED THEN INSERT ALL, and delete-by-key): the broadcast
+  * gate on the batch's key set, the one-checkpoint rule for the batch,
+  * and the NULL-partition refusal — plus [[snapshotDiff]], the audit
+  * that verifies a merge from two table versions.
   */
 object Merge {
 
@@ -53,75 +33,6 @@ object Merge {
     if (upperBound <= limit || keys.count() <= limit) broadcast(keys)
     else keys
 
-  /** Full-row upsert of `updates` (same schema as the table, partition
-    * column included) into the partitioned parquet table at `baseDir`,
-    * keyed on `keyCol`. Idempotent for a fixed updates batch. Returns the
-    * merged table re-read from `baseDir`. */
-  def upsertPartitioned(spark: SparkSession, baseDir: String,
-      updates: DataFrame, keyCol: String, partCol: String,
-      broadcastKeyLimit: Long = DefaultBroadcastKeyLimit): DataFrame = {
-    // pinned: the updates batch feeds key discovery, target partitions,
-    // the anti-join, and the merged union — four actions that would each
-    // replay its upstream plan (for the streaming sink: the whole
-    // micro-batch aggregation) without the checkpoint. A batch the
-    // caller ALREADY materialized (the streaming sinks checkpoint their
-    // micro-batch before the emptiness gate) is reused as-is — the
-    // second checkpoint was one full copy of every merged row per commit
-    val ups = ensureCheckpointed(updates)
-    // the updates carry the table's schema by contract, so the base read
-    // states it instead of re-inferring per commit (a footer-sampling
-    // job plus a listing on EVERY merge — metadata cost a table format's
-    // cached schema never pays). Read-back column order is pinned to the
-    // updates' order below, matching the partition-last inferred shape.
-    val base = spark.read.schema(ups.schema).parquet(baseDir)
-      .select(ups.columns.map(col).toSeq: _*)
-    // ONE action yields the batch's distinct partitions AND its row count
-    // (the broadcast gate's upper bound) — formerly a count job plus a
-    // union+distinct collect; rows are bounded by the batch's partition
-    // spread, the usual driver-metadata contract
-    val perPart = ups.groupBy(col(partCol)).agg(count(lit(1))).collect()
-    val updKeys = gateBroadcast(ups.select(col(keyCol)).distinct(),
-      broadcastKeyLimit, perPart.map(_.getLong(1)).sum)
-    // partition values as raw Any: partition-type inference may read the
-    // column back as int/date/... even when it was written from strings
-    val fromBase = base.join(updKeys, Seq(keyCol))
-      .select(col(partCol)).distinct().collect().map(_.get(0))
-    val affected = (perPart.map(_.get(0)) ++ fromBase).distinct
-    requireNoNullPartition(affected, partCol)
-    val current = base.filter(col(partCol).isin(affected.toSeq: _*))
-    // repartition on the partition column BEFORE the partitioned write:
-    // without it every shuffle task emits a file into every partition
-    // directory it holds rows for (tasks × partitions small files per
-    // merge — file-count churn that degrades the table and, under
-    // repeated benching, the host); with it each rewritten partition
-    // gets one task's worth of files — the compaction-aware write shape
-    val merged = ups.unionByName(
-      current.join(updKeys, Seq(keyCol), "left_anti")
-        .select(ups.columns.map(col).toSeq: _*))
-      .repartition(col(partCol))
-      .localCheckpoint()
-    val conf = spark.conf
-    val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy(partCol).parquet(baseDir)
-    finally prev match {
-      case Some(v) => conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-    // a key MOVING partitions can empty its source partition entirely;
-    // dynamic overwrite only replaces partitions present in the written
-    // data, so an emptied source would keep its stale file (and the key
-    // would surface twice). Drop those directories explicitly — the same
-    // metadata-commit step the delete path performs.
-    dropEmptiedPartitions(spark, baseDir, partCol, affected, merged)
-    // read-back with the same declared schema (no re-inference) and the
-    // updates' column order — identical to the inferred shape, since the
-    // data columns were written in this order and inference appends the
-    // partition column last, where the updates carry it by contract
-    spark.read.schema(ups.schema).parquet(baseDir)
-      .select(ups.columns.map(col).toSeq: _*)
-  }
-
   /** `localCheckpoint()` unless the frame already IS a materialized
     * checkpoint (its analyzed plan is the checkpoint's LogicalRDD) —
     * re-checkpointing one copies every row into a second set of blocks
@@ -135,22 +46,13 @@ object Merge {
       case _ => df.localCheckpoint()
     }
 
-  /** NULL partition values have no `partCol=<v>` directory identity in
-    * this copy-on-write scheme: `isin(affected)` would silently skip them
-    * during the read-back (a moved key's stale row survives and the key
-    * surfaces twice) and `dropEmptiedPartitions` would NPE AFTER the
-    * overwrite landed. Fail fast BEFORE any write instead — a general
-    * lakehouse layer models NULL as `__HIVE_DEFAULT_PARTITION__`, a
-    * contract this parquet-native path deliberately does not enter. */
-  private[operators] def requireNoNullPartition(affected: Seq[Any],
-      partCol: String): Unit =
-    require(!affected.contains(null),
-      s"NULL value in partition column '$partCol': partition-granular " +
-        "merge/delete cannot address the null partition; filter or " +
-        "default the partition value upstream")
-
-  /** Tuple variant for multi-column layouts: refuse a NULL in ANY
-    * partition component (the tuple has no directory identity). */
+  /** Refuse a NULL in ANY component of an affected partition tuple,
+    * BEFORE any write: a NULL has no `col=<v>` directory identity in this
+    * copy-on-write scheme, so the affected-partition read-back would
+    * silently skip it (a moved key's stale row survives and the key
+    * surfaces twice). A general lakehouse layer models NULL as
+    * `__HIVE_DEFAULT_PARTITION__`, a contract this path deliberately
+    * does not enter. */
   private[operators] def requireNoNullPartitionTuple(
       affected: Seq[Seq[Any]], partCols: Seq[String]): Unit =
     affected.foreach { vs =>
@@ -161,66 +63,6 @@ object Merge {
             "default the partition value upstream")
       }
     }
-
-  /** Remove `partCol=<v>` directories for affected partition values that
-    * the rewritten data no longer contains. Directory names use Hive
-    * partition-path escaping (the same encoding Spark's dynamic partition
-    * writer used to CREATE them), so values containing '/', ':', spaces
-    * etc. resolve to the real directory rather than a phantom path. */
-  private def dropEmptiedPartitions(spark: SparkSession, baseDir: String,
-      partCol: String, affected: Seq[Any], written: DataFrame): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val present = written.select(col(partCol)).distinct()
-      .collect().map(_.get(0).toString).toSet
-    val fs = new org.apache.hadoop.fs.Path(baseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    affected.map(_.toString).filterNot(present).foreach { p =>
-      val dir = s"$partCol=${ExternalCatalogUtils.escapePathName(p)}"
-      fs.delete(new org.apache.hadoop.fs.Path(baseDir, dir), true)
-    }
-  }
-
-  /** Targeted DELETE by key set — the right-to-be-forgotten / GDPR path,
-    * copy-on-write at the same partition granularity as the upsert:
-    * partitions holding a doomed key are found with the column-pruned
-    * discovery join, ONLY those are read back and rewritten minus the
-    * matched rows, and everything else is untouched. Deleting keys not
-    * present (including a re-run of the same delete) touches zero
-    * partitions and writes nothing. Returns the table re-read. */
-  def deletePartitioned(spark: SparkSession, baseDir: String,
-      keys: DataFrame, keyCol: String, partCol: String,
-      broadcastKeyLimit: Long = DefaultBroadcastKeyLimit): DataFrame = {
-    val base = spark.read.parquet(baseDir)
-    val checkpointedKeys = keys.select(col(keyCol)).distinct()
-      .localCheckpoint()
-    val delKeys = gateBroadcast(checkpointedKeys, broadcastKeyLimit,
-      checkpointedKeys.count())
-    // raw Any partition values — inference may type them non-string
-    val affected = base.join(delKeys, Seq(keyCol))
-      .select(col(partCol)).distinct().collect().map(_.get(0))
-    requireNoNullPartition(affected, partCol)
-    if (affected.nonEmpty) {
-      val survivors = base.filter(col(partCol).isin(affected.toSeq: _*))
-        .join(delKeys, Seq(keyCol), "left_anti")
-        .repartition(col(partCol)) // one task per rewritten partition
-        .localCheckpoint()
-      val conf = spark.conf
-      val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try survivors.write.mode("overwrite").partitionBy(partCol)
-        .parquet(baseDir)
-      finally prev match {
-        case Some(v) => conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      // dynamic overwrite replaces only partitions PRESENT in the written
-      // data — a partition whose every row was deleted has no survivors
-      // and would silently keep its stale files; drop those directories
-      // explicitly (the step a table format's metadata commit does)
-      dropEmptiedPartitions(spark, baseDir, partCol, affected, survivors)
-    }
-    spark.read.parquet(baseDir)
-  }
 
   /** Snapshot DIFF: classify every key across two table versions as
     * added / removed / changed / unchanged and count which columns

@@ -27,9 +27,6 @@ object Similarity {
   def dotWithLit(emb: Column, q: Seq[Double]): Column =
     VecCols.dot(emb, litVec(q))
 
-  /** L2 norm of an array column, in double. */
-  def l2Norm(emb: Column): Column = VecCols.norm(emb)
-
   /** Cosine similarity against a literal query vector. */
   def cosineWithLit(emb: Column, q: Seq[Double]): Column =
     VecCols.cosine(emb, litVec(q))

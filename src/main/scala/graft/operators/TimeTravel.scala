@@ -10,11 +10,10 @@ import org.apache.spark.sql.functions._
   * commit writes a LOG RECORD under `baseDir/_graft_log/`. A version is
   * the file set its log resolves to, nothing else: `readVersion` reads
   * exactly those files, so EVERY committed version stays readable after
-  * later commits — the property the in-place [[Merge]] path cannot
-  * offer, because dynamic partition overwrite physically deletes the
-  * files an old version would need. Snapshot diffs between versions
-  * therefore need no re-run of any merge: two log resolutions and one
-  * [[Merge.snapshotDiff]].
+  * later commits — an in-place partition overwrite would physically
+  * delete the files an old version needs. Snapshot diffs between
+  * versions therefore need no re-run of any merge: two log resolutions
+  * and one [[Merge.snapshotDiff]].
   *
   * The log is INCREMENTAL — the shape that survives a long-lived stream
   * committing once per micro-batch on a 100 TB table:
@@ -657,13 +656,6 @@ object TimeTravel {
   private def coldropFrom(lines: Seq[String]): Set[String] =
     lines.collect { case l if l.startsWith("#coldrop=") =>
       dec(l.stripPrefix("#coldrop=")) }.toSet
-
-  /** The column mapping recorded at `version` — one record read (every
-    * record carries the full mapping): logical → physical, identity on
-    * pre-mapping logs. */
-  def columnMappingAt(spark: SparkSession, baseDir: String,
-      version: Int): Map[String, String] =
-    metaOfRecord(hadoopFs(spark, baseDir), baseDir, version).colmap
 
   /** Physical (file-side) names a new logical column may not take:
     * every mapped physical plus every tombstone. */
@@ -3147,12 +3139,13 @@ object TimeTravel {
     }
   }
 
-  /** MERGE INTO as a new version: same pruned-discovery semantics as
-    * [[Merge.upsertPartitioned]] (update-by-key, insert-new-keys,
-    * cross-partition key moves covered), but the prior version remains
-    * readable, and the discovery join probes only the files whose
-    * logged key bounds intersect the batch's envelope
-    * ([[discoveryProbe]]). Returns the committed version number. */
+  /** MERGE INTO as a new version, copy-on-write at partition
+    * granularity: update-by-key, insert-new-keys, cross-partition key
+    * moves covered. Only the affected partitions are rewritten — those
+    * the batch names plus those holding a matched key, found by a
+    * discovery join that probes only the files whose logged key bounds
+    * intersect the batch's envelope ([[discoveryProbe]]). The prior
+    * version remains readable. Returns the committed version number. */
   def upsert(spark: SparkSession, baseDir: String, updates: DataFrame,
       keyCol: String, partCol: String,
       broadcastKeyLimit: Long = Merge.DefaultBroadcastKeyLimit,

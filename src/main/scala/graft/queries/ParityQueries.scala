@@ -782,91 +782,69 @@ object ParityQueries {
     Some(sessionsOracle)
   )
 
-  /** Streaming upsert sink ([[EventsStream.replayToUpsert]]): the sliced
-    * multi-batch replay drives an Update-mode last-event-per-user
-    * aggregation (max over the (ts, event_id, event_type) struct — a
-    * total order, ts ties broken by event_id) whose changed keys MERGE
-    * into a user-bucketed parquet table every micro-batch via the q133
-    * copy-on-write operator. The oracle recomputes the final
-    * last-write-wins state from the raw log, so batch sequencing, merge
-    * idempotency, and the aggregation's total order all hash-check. */
-  val q136 = Q(
-    "q136_stream_upsert",
-    (spark, dir) => {
-      val tmp = stagedSlicedEventsDir(spark, dir)
-      val tableDir = scratchDir("graft-upsert-table")
-      val ck = scratchDir("graft-upsert-ck")
-      // 3 files/trigger → 3 micro-batches (6 slices + sentinel): one
-      // table-create + two genuine merges exercises the upsert path at
-      // ~half the per-batch fixed cost of the 4-batch q104 cadence
-      val agg = EventsStream.fromParquetDir(spark, tmp, maxFilesPerTrigger = Some(3))
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("ts"), col("event_id"), col("event_type")))
-          .as("last"))
-        .select(col("user_id"), col("last.ts").as("last_ts"),
-          col("last.event_id").as("last_event_id"),
-          col("last.event_type").as("last_type"),
-          pmod(col("user_id"), lit(8L)).cast("string").as("part"))
-      EventsStream.replayToUpsert(agg, tableDir, ck,
-        keyCol = "user_id", partCol = "part", statePartitions = Some(8))
-      spark.read.parquet(tableDir).filter(col("user_id") >= 0)
-        .select(col("user_id"), col("last_ts"), col("last_event_id"),
-          col("last_type"))
-    },
-    // explicit tie-break (ts DESC, event_id DESC) mirroring the Spark
-    // side's max(struct(ts, event_id, …)) — DuckDB's arg_max(x, ts) is
-    // unspecified on equal ts, so the oracle must pin the composite order
-    Some("""SELECT user_id, ts AS last_ts, event_id AS last_event_id,
-        event_type AS last_type
-      FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-              ORDER BY ts DESC, event_id DESC) AS rn FROM events)
-      WHERE rn = 1""")
-  )
+  /** The last-event-per-user stream behind q136 and q161: the sliced
+    * multi-batch replay (3 files/trigger → 3 micro-batches: one
+    * table-create + two genuine merges) drives an Update-mode
+    * last-event-per-user aggregation (max over the (ts, event_id,
+    * event_type) struct — a total order, ts ties broken by event_id)
+    * into [[graft.streaming.EventsStream.replayToVersioned]], one
+    * [[graft.operators.TimeTravel]] COMMIT per batch — v1 = the first
+    * batch's init, v2/v3 = the later batches' copy-on-write upserts. The
+    * LATEST version is read back (manifest-pruned, never a directory
+    * listing). */
+  private def streamLastPerUser(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    import graft.operators.TimeTravel
+    val tmp = stagedSlicedEventsDir(spark, dir)
+    val tableDir = scratchDir("graft-versioned-table")
+    val ck = scratchDir("graft-versioned-ck")
+    val agg = EventsStream.fromParquetDir(spark, tmp, maxFilesPerTrigger = Some(3))
+      .groupBy(col("user_id"))
+      .agg(max(struct(col("ts"), col("event_id"), col("event_type")))
+        .as("last"))
+      .select(col("user_id"), col("last.ts").as("last_ts"),
+        col("last.event_id").as("last_event_id"),
+        col("last.event_type").as("last_type"),
+        pmod(col("user_id"), lit(8L)).cast("string").as("part"))
+    EventsStream.replayToVersioned(agg, tableDir, ck,
+      keyCol = "user_id", partCol = "part", statePartitions = Some(8))
+    TimeTravel.readVersion(spark, tableDir,
+        TimeTravel.latestVersion(spark, tableDir))
+      .filter(col("user_id") >= 0)
+      .select(col("user_id"), col("last_ts"), col("last_event_id"),
+        col("last_type"))
+  }
 
-  /** Streaming ingest into the VERSIONED table
-    * ([[graft.streaming.EventsStream.replayToVersioned]]): q136's
-    * last-per-key micro-batch cadence, but every batch lands as its own
-    * [[graft.operators.TimeTravel]] COMMIT — v1 = the first batch's
-    * init, v2/v3 = the later batches' copy-on-write merges — so the
-    * stream's history is time-travelable from manifests. The query reads
-    * the LATEST version back (manifest-pruned, never a directory
-    * listing) and verifies against the same from-raw-log last-write-wins
-    * oracle as q136: batch sequencing, per-commit manifest integrity,
-    * and the merge arithmetic all hash-check; an intermediate version
-    * leaking into the final manifest (or a lost commit) shifts rows.
-    * StreamingSpec additionally proves the intermediate versions stay
-    * readable and the final content equals the mutable-sink replay. */
-  val q161 = Q(
-    "q161_stream_versioned",
-    (spark, dir) => {
-      import graft.operators.TimeTravel
-      val tmp = stagedSlicedEventsDir(spark, dir)
-      val tableDir = scratchDir("graft-versioned-table")
-      val ck = scratchDir("graft-versioned-ck")
-      val agg = EventsStream.fromParquetDir(spark, tmp, maxFilesPerTrigger = Some(3))
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("ts"), col("event_id"), col("event_type")))
-          .as("last"))
-        .select(col("user_id"), col("last.ts").as("last_ts"),
-          col("last.event_id").as("last_event_id"),
-          col("last.event_type").as("last_type"),
-          pmod(col("user_id"), lit(8L)).cast("string").as("part"))
-      EventsStream.replayToVersioned(agg, tableDir, ck,
-        keyCol = "user_id", partCol = "part", statePartitions = Some(8))
-      TimeTravel.readVersion(spark, tableDir,
-          TimeTravel.latestVersion(spark, tableDir))
-        .filter(col("user_id") >= 0)
-        .select(col("user_id"), col("last_ts"), col("last_event_id"),
-          col("last_type"))
-    },
-    // same contract as q136: last-write-wins per user with the explicit
-    // (ts DESC, event_id DESC) composite tie-break
-    Some("""SELECT user_id, ts AS last_ts, event_id AS last_event_id,
+  /** The from-raw-log last-write-wins state q136 and q161 verify
+    * against: explicit tie-break (ts DESC, event_id DESC) mirroring the
+    * Spark side's max(struct(ts, event_id, …)) — DuckDB's arg_max(x, ts)
+    * is unspecified on equal ts, so the oracle must pin the composite
+    * order. */
+  private val lastPerUserOracle =
+    """SELECT user_id, ts AS last_ts, event_id AS last_event_id,
         event_type AS last_type
       FROM (SELECT *, row_number() OVER (PARTITION BY user_id
               ORDER BY ts DESC, event_id DESC) AS rn FROM events)
-      WHERE rn = 1""")
-  )
+      WHERE rn = 1"""
+
+  /** Streaming upsert sink ([[streamLastPerUser]], the same versioned
+    * path as q161): the oracle recomputes the final last-write-wins state
+    * from the raw log, so batch sequencing, merge idempotency, and the
+    * aggregation's total order all hash-check. */
+  val q136 = Q("q136_stream_upsert", streamLastPerUser,
+    Some(lastPerUserOracle))
+
+  /** Streaming ingest into the VERSIONED table ([[streamLastPerUser]]):
+    * the stream's history is time-travelable from manifests, and the
+    * latest version verifies against the from-raw-log last-write-wins
+    * oracle — batch sequencing, per-commit manifest integrity, and the
+    * merge arithmetic all hash-check; an intermediate version leaking
+    * into the final manifest (or a lost commit) shifts rows.
+    * StreamingSpec additionally proves the intermediate versions stay
+    * readable and a fresh-checkpoint re-replay converges to the same
+    * content. */
+  val q161 = Q("q161_stream_versioned", streamLastPerUser,
+    Some(lastPerUserOracle))
 
   /** APPEND-ONLY streaming ingest into the versioned table
     * ([[graft.streaming.EventsStream.replayToVersionedAppend]] →

@@ -56,16 +56,6 @@ object EventsStream {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("total_value"))
 
-  /** Sliding-window variant (overlapping windows). */
-  def slidingCounts(events: DataFrame, windowLen: String = "1 hour",
-      slide: String = "30 minutes", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen, slide), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"))
-
   /** Built-in session windows: gap-based per-user sessions. */
   def sessionCounts(events: DataFrame, gap: String = "10 minutes",
       watermark: String = "30 minutes"): DataFrame =
@@ -476,64 +466,6 @@ object EventsStream {
         .outputMode(OutputMode.Append())
     }
 
-  /** Replay to a KEYED UPSERT TABLE: every micro-batch MERGEs into a
-    * partitioned parquet table through
-    * [[graft.operators.Merge.upsertPartitioned]] under `foreachBatch` —
-    * the streaming→lakehouse pattern where an Update-mode aggregation
-    * emits only the keys each batch changed and the sink applies them as
-    * last-write-wins upserts. The table stays queryable between batches
-    * (readers see complete partitions), and because the upstream
-    * aggregation state carries the TOTAL per-key value, replaying a batch
-    * (failure/restart inside the checkpointed trigger) re-merges the same
-    * rows — idempotent by construction, the exactly-once story a keyed
-    * sink needs without a transactional log.
-    *
-    * The first non-empty batch creates the table (plain partitioned
-    * write); later batches take the copy-on-write merge path, rewriting
-    * only partitions holding changed keys.
-    *
-    * Returns per-micro-batch COMMIT TELEMETRY — the wall time each
-    * foreachBatch commit took (the decodeImageIOWithMetrics discipline,
-    * applied to the commit path): replay totals alone can't show where
-    * a streaming-lakehouse sink spends its time, and the commit path is
-    * exactly where table-format design flaws (full-listing discovery,
-    * manifest rewrite growth) would surface as per-trigger latency
-    * creep. foreachBatch runs on the driver, so a plain builder
-    * suffices — no accumulator needed. */
-  def replayToUpsert(df: DataFrame, baseDir: String, checkpointDir: String,
-      keyCol: String, partCol: String,
-      statePartitions: Option[Int] = None): Seq[CommitTiming] = {
-    val timings = newTimings
-    replay(df, statePartitions, noDataBatch = true) { ws =>
-      ws.outputMode(OutputMode.Update())
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          timed(timings, batchId) {
-            // ONE materialization for the whole commit: the emptiness
-            // gate and every downstream action (key discovery, merge,
-            // write) would otherwise re-run the stateful micro-batch
-            // aggregation — state-store reads included — per action
-            val b = batch.localCheckpoint()
-            if (b.isEmpty) false
-            else {
-              val root = new java.io.File(baseDir)
-              val exists = root.exists &&
-                Option(root.listFiles).exists(_.exists(f =>
-                  f.isDirectory || f.getName.endsWith(".parquet")))
-              if (!exists)
-                b.repartition(col(partCol)) // one task per partition dir
-                  .write.mode("overwrite").partitionBy(partCol).parquet(baseDir)
-              else
-                graft.operators.Merge.upsertPartitioned(
-                  b.sparkSession, baseDir, b, keyCol, partCol)
-              true
-            }
-          }
-        }
-    }
-    timings.asScala.toSeq
-  }
-
   /** One micro-batch's commit cost: foreachBatch wall time on the
     * driver, and whether the batch actually committed table work
     * (non-empty) or was skipped. */
@@ -553,16 +485,28 @@ object EventsStream {
   }
 
   /** Streaming ingest as VERSIONED commits
-    * ([[graft.operators.TimeTravel]]): every non-empty micro-batch lands
-    * as its own upsert COMMIT — the first batch inits v1, each later one
-    * commits v(n+1) — so the stream's WHOLE HISTORY stays
+    * ([[graft.operators.TimeTravel]]): the streaming→lakehouse pattern
+    * where an Update-mode aggregation emits only the keys each batch
+    * changed and every non-empty micro-batch lands as its own
+    * last-write-wins upsert COMMIT under `foreachBatch` — the first batch
+    * inits v1, each later one commits v(n+1), rewriting only the
+    * partitions holding changed keys. The stream's WHOLE HISTORY stays
     * time-travelable from the per-commit manifests and a reader can pin
     * a version while ingest continues (the streaming-lakehouse contract
-    * a mutable-directory sink cannot give; [[replayToUpsert]] keeps only
-    * the latest state). Upstream is the same Update-mode totals-carrying
-    * aggregation, so a replayed trigger re-commits the same rows — the
-    * CONTENT converges identically; only the commit count reflects the
-    * replay, which is exactly what a commit log should record. */
+    * a mutable-directory sink cannot give). The upstream aggregation
+    * carries the TOTAL per-key value, so a replayed trigger (or a
+    * fresh-checkpoint replay against an existing table) re-commits the
+    * same rows — the CONTENT converges identically; only the commit
+    * count reflects the replay, which is exactly what a commit log
+    * should record.
+    *
+    * Returns per-micro-batch COMMIT TELEMETRY — the wall time each
+    * foreachBatch commit took: replay totals alone can't show where a
+    * streaming-lakehouse sink spends its time, and the commit path is
+    * where table-format design flaws (full-listing discovery, manifest
+    * rewrite growth) would surface as per-trigger latency creep.
+    * foreachBatch runs on the driver, so a driver-side queue suffices —
+    * no accumulator needed. */
   def replayToVersioned(df: DataFrame, baseDir: String,
       checkpointDir: String, keyCol: String, partCol: String,
       statePartitions: Option[Int] = None): Seq[CommitTiming] = {
@@ -572,10 +516,10 @@ object EventsStream {
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           timed(timings, batchId) {
-            // one materialization per trigger (see replayToUpsert): the
-            // commit path's gate/discovery/write actions all read the
-            // checkpointed blocks instead of re-running the stateful
-            // aggregation per action
+            // one materialization per trigger: the commit path's
+            // gate/discovery/write actions all read the checkpointed
+            // blocks instead of re-running the stateful aggregation
+            // (state-store reads included) per action
             val b = batch.localCheckpoint()
             if (b.isEmpty) false
             else {

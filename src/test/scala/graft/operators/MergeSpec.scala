@@ -1,140 +1,14 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
-/** Copy-on-write MERGE invariants: correctness of the merged row set,
-  * physical non-rewrite of untouched partitions, cross-partition key
-  * moves, and idempotency of a fixed upsert batch. */
+/** Snapshot-diff invariants (added/removed/changed classification with
+  * NULL-safe compares, exact zero counts on empty snapshots) and the
+  * one-checkpoint rule for a merge batch. The copy-on-write MERGE/DELETE
+  * these helpers serve is covered by TimeTravelSpec. */
 class MergeSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def baseRows = Seq(
-    (1L, "p1", 10.0), (2L, "p1", 20.0),
-    (3L, "p2", 30.0), (4L, "p2", 40.0),
-    (5L, "p3", 50.0))
-
-  private def stage(): String = {
-    val dir = tmpDir("merge-base")
-    baseRows.toDF("id", "part", "v")
-      .write.mode("overwrite").partitionBy("part").parquet(dir)
-    dir
-  }
-
-  private def files(dir: String, part: String): Map[String, Long] =
-    Files.list(Paths.get(dir, s"part=$part")).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(p => p.getFileName.toString -> Files.getLastModifiedTime(p).toMillis)
-      .toMap
-
-  test("upsertPartitioned: updates+inserts land, untouched partition files survive") {
-    val dir = stage()
-    val p3Before = files(dir, "p3")
-    // update id=1 in place, insert id=9 into p2
-    val ups = Seq((1L, "p1", 11.0), (9L, "p2", 90.0)).toDF("id", "part", "v")
-    val out = Merge.upsertPartitioned(spark, dir, ups, "id", "part")
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("v"))).toMap
-    assert(out === Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0, 4L -> 40.0,
-      5L -> 50.0, 9L -> 90.0))
-    // p3 was never touched: same file names, same mtimes
-    assert(files(dir, "p3") === p3Before)
-  }
-
-  test("upsertPartitioned above the broadcast key limit takes the shuffle path with identical results") {
-    // two identical tables, one merged with the hint gated off: a
-    // backfill-scale batch must degrade to shuffle joins, not change
-    // results (or OOM the driver building a broadcast)
-    val bDir = stage(); val sDir = stage()
-    val ups = Seq((1L, "p1", 11.0), (3L, "p1", 33.0), (9L, "p2", 90.0))
-      .toDF("id", "part", "v")
-    val viaBroadcast = Merge.upsertPartitioned(spark, bDir, ups, "id", "part")
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("part"),
-        r.getAs[Double]("v"))).toSet
-    val viaShuffle = Merge.upsertPartitioned(spark, sDir, ups, "id", "part",
-      broadcastKeyLimit = 0L)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("part"),
-        r.getAs[Double]("v"))).toSet
-    assert(viaShuffle === viaBroadcast)
-    assert(Merge.deletePartitioned(spark, sDir, Seq(9L).toDF("id"),
-      "id", "part", broadcastKeyLimit = 0L).count() === 5)
-  }
-
-  test("upsertPartitioned: a key moving partitions leaves no stale copy behind") {
-    val dir = stage()
-    val ups = Seq((3L, "p1", 33.0)).toDF("id", "part", "v") // p2 → p1
-    Merge.upsertPartitioned(spark, dir, ups, "id", "part")
-    val back = spark.read.parquet(dir)
-    assert(back.filter(col("id") === 3L).select("part", "v")
-      .as[(String, Double)].collect().toSeq === Seq(("p1", 33.0)))
-    assert(back.count() === 5) // no duplicate under the old partition
-    // p2 (the OLD home) was rewritten to drop the row; p3 untouched
-    assert(spark.read.parquet(dir).filter(col("part") === "p2")
-      .select("id").as[Long].collect().sorted.toSeq === Seq(4L))
-  }
-
-  test("deletePartitioned: doomed keys vanish, emptied partitions drop, re-delete is a no-op") {
-    val dir = stage()
-    val p1Before = files(dir, "p1")
-    // delete BOTH rows of p2 (partition empties) and nothing from p1/p3
-    val doomed = Seq(3L, 4L).toDF("id")
-    val out = Merge.deletePartitioned(spark, dir, doomed, "id", "part")
-    assert(out.select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 5L))
-    // p2's directory is GONE (not just overwritten with stale survivors)
-    assert(!Files.exists(Paths.get(dir, "part=p2")))
-    // p1 untouched physically
-    assert(files(dir, "p1") === p1Before)
-    // re-deleting the same keys: no partitions touched, state unchanged
-    val p1Mid = files(dir, "p1"); val p3Mid = files(dir, "p3")
-    val again = Merge.deletePartitioned(spark, dir, doomed, "id", "part")
-    assert(again.select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 5L))
-    assert(files(dir, "p1") === p1Mid && files(dir, "p3") === p3Mid)
-  }
-
-  test("deletePartitioned: partial deletion rewrites only the holding partition") {
-    val dir = stage()
-    val p3Before = files(dir, "p3")
-    Merge.deletePartitioned(spark, dir, Seq(1L).toDF("id"), "id", "part")
-    val back = spark.read.parquet(dir)
-    assert(back.select("id").as[Long].collect().sorted.toSeq
-      === Seq(2L, 3L, 4L, 5L))
-    assert(back.filter(col("part") === "p1").select("id").as[Long]
-      .collect().toSeq === Seq(2L))
-    assert(files(dir, "p3") === p3Before)
-  }
-
-  test("upsertPartitioned: a key move that EMPTIES its source partition drops the stale dir") {
-    val dir = tmpDir("merge-empty-src")
-    Seq((1L, "p1", 10.0), (2L, "p2", 20.0))
-      .toDF("id", "part", "v")
-      .write.mode("overwrite").partitionBy("part").parquet(dir)
-    // id=2 is p2's ONLY row; the update moves it to p1
-    val out = Merge.upsertPartitioned(spark, dir,
-      Seq((2L, "p1", 22.0)).toDF("id", "part", "v"), "id", "part")
-    assert(out.collect().map(r => (r.getAs[Long]("id"),
-      r.getAs[String]("part"), r.getAs[Double]("v"))).toSet
-      === Set((1L, "p1", 10.0), (2L, "p1", 22.0)))
-    assert(!Files.exists(Paths.get(dir, "part=p2"))) // no stale duplicate left
-  }
-
-  test("deletePartitioned handles non-string inferred partition types") {
-    // numeric-looking partition values are read back as ints by partition
-    // inference — exactly the layout the streaming upsert sink produces
-    val dir = tmpDir("merge-int-part")
-    Seq((1L, "0", 1.0), (2L, "1", 2.0), (3L, "1", 3.0))
-      .toDF("id", "part", "v")
-      .write.mode("overwrite").partitionBy("part").parquet(dir)
-    val out = Merge.deletePartitioned(spark, dir,
-      Seq(2L).toDF("id"), "id", "part")
-    assert(out.select("id").as[Long].collect().sorted.toSeq === Seq(1L, 3L))
-    // delete the last row of partition 0 too: emptied int-typed dir drops
-    Merge.deletePartitioned(spark, dir, Seq(1L).toDF("id"), "id", "part")
-    assert(!Files.exists(Paths.get(dir, "part=0")))
-  }
 
   test("snapshotDiff: added/removed/changed classification with NULL-safe compares") {
     val before = Seq[(Long, String, java.lang.Double)](
@@ -166,62 +40,16 @@ class MergeSpec extends SparkSpec {
       === ((0L, 0L, 0L, 0L, 0L, 0L)))
   }
 
-  test("NULL partition values are rejected BEFORE any write lands") {
-    val dir = stage()
-    val before = spark.read.parquet(dir).orderBy("id").collect().toSeq
-    val ups = Seq[(java.lang.Long, String, java.lang.Double)](
-      (6L, null, 60.0)).toDF("id", "part", "v")
-    val ex = intercept[IllegalArgumentException] {
-      Merge.upsertPartitioned(spark, dir, ups, "id", "part")
-    }
-    assert(ex.getMessage.contains("NULL value in partition column"))
-    intercept[IllegalArgumentException] {
-      // a base row carrying a NULL partition would poison the delete path
-      // (__HIVE_DEFAULT_PARTITION__ is read back as a NULL part value)
-      val dir2 = tmpDir("merge-null-base")
-      Seq((1L, 1.0)).toDF("id", "v")
-        .write.mode("overwrite").parquet(dir2 + "/part=__HIVE_DEFAULT_PARTITION__")
-      Merge.deletePartitioned(spark, dir2, Seq(1L).toDF("id"), "id", "part")
-    }
-    // table untouched by the failed upsert
-    assert(spark.read.parquet(dir).orderBy("id").collect().toSeq === before)
-  }
-
-  test("emptied partitions with path-escaped values (space, colon) still drop") {
-    val dir = tmpDir("merge-escaped-part")
-    Seq((1L, "a b:c", 1.0), (2L, "plain", 2.0))
-      .toDF("id", "part", "v")
-      .write.mode("overwrite").partitionBy("part").parquet(dir)
-    // Spark writes 'a b:c' as an escaped directory name
-    val escaped = Files.list(Paths.get(dir)).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("part=")).toSeq
-    assert(escaped.exists(n => n != "part=plain" && n.contains("%")), escaped)
-    // move id=1 out of the escaped partition: its dir must be DELETED,
-    // which requires reconstructing the escaped path, not `part=a b:c`
-    val out = Merge.upsertPartitioned(spark, dir,
-      Seq((1L, "plain", 11.0)).toDF("id", "part", "v"), "id", "part")
-    assert(out.collect().map(r => (r.getAs[Long]("id"),
-      r.getAs[String]("part"))).toSet === Set((1L, "plain"), (2L, "plain")))
-    assert(!Files.list(Paths.get(dir)).iterator().asScala
-      .exists(_.getFileName.toString.contains("%")))
-    // same via the delete path
-    val dir2 = tmpDir("merge-escaped-del")
-    Seq((1L, "x/y", 1.0), (2L, "p", 2.0)).toDF("id", "part", "v")
-      .write.mode("overwrite").partitionBy("part").parquet(dir2)
-    Merge.deletePartitioned(spark, dir2, Seq(1L).toDF("id"), "id", "part")
-    assert(Files.list(Paths.get(dir2)).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("part=")).toSeq
-      === Seq("part=p"))
-  }
-
-  test("upsertPartitioned: idempotent for a fixed batch") {
-    val dir = stage()
-    val ups = Seq((2L, "p1", 22.0), (8L, "p3", 80.0)).toDF("id", "part", "v")
-    val first = Merge.upsertPartitioned(spark, dir, ups, "id", "part")
-      .orderBy("id").collect().toSeq
-    val second = Merge.upsertPartitioned(spark, dir, ups, "id", "part")
-      .orderBy("id").collect().toSeq
-    assert(first === second)
-    assert(first.map(_.getAs[Long]("id")) === Seq(1L, 2L, 3L, 4L, 5L, 8L))
+  test("ensureCheckpointed reuses a materialized checkpoint and checkpoints anything else") {
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+    def isCheckpoint(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    val pinned = Merge.ensureCheckpointed(df)
+    assert(!(pinned eq df) && isCheckpoint(pinned))
+    // a materialized checkpoint passes through as the same frame
+    assert(Merge.ensureCheckpointed(pinned) eq pinned)
+    assert(pinned.orderBy("id").as[(Long, String)].collect().toSeq
+      === Seq((1L, "a"), (2L, "b")))
   }
 }

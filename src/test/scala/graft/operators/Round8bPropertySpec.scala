@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 
 /** Property coverage for the round-8 continuation operators: partition
-  * stability, window-formulation parity, random-batch merge equivalence,
-  * and nearest-rank bucket-size bounds. */
+  * stability, window-formulation parity, random-batch versioned-upsert
+  * equivalence, and nearest-rank bucket-size bounds. */
 class Round8bPropertySpec extends SparkSpec {
 
   import spark.implicits._
@@ -56,24 +56,24 @@ class Round8bPropertySpec extends SparkSpec {
     assert(run(1L) === run(99L))
   }
 
-  test("upsertPartitioned equals the in-memory reference merge on random batches") {
+  test("TimeTravel.upsert equals the in-memory reference merge on random batches") {
     val rng = lcg(7L)
     val base = (1L to 60L).map(i => (i, s"p${i % 5}", rng.next().toDouble))
     val dir = tmpDir("prop-merge")
-    base.toDF("id", "part", "v")
-      .write.mode("overwrite").partitionBy("part").parquet(dir)
+    TimeTravel.init(spark, dir, base.toDF("id", "part", "v"), "part")
     var expected = base.map { case (i, p, v) => i -> ((p, v)) }.toMap
     for (round <- 1 to 3) {
       val ups = (1 to 12).map { _ =>
         val id = rng.next() % 80 + 1 // some new, some existing
         (id, s"p${rng.next() % 5}", rng.next().toDouble)
       }.groupBy(_._1).map(_._2.head).toSeq // unique keys per batch
-      val got = Merge.upsertPartitioned(spark, dir,
-        ups.toDF("id", "part", "v"), "id", "part")
+      val got = TimeTravel.readVersion(spark, dir, TimeTravel.upsert(spark,
+          dir, ups.toDF("id", "part", "v"), "id", "part"))
         .collect().map(r => r.getAs[Long]("id") ->
-          ((r.getAs[String]("part"), r.getAs[Double]("v")))).toMap
+          ((r.getAs[String]("part"), r.getAs[Double]("v"))))
       expected = expected ++ ups.map { case (i, p, v) => i -> ((p, v)) }
-      assert(got === expected, s"round $round")
+      assert(got.toMap === expected, s"round $round")
+      assert(got.length === expected.size, s"round $round: stale copies")
     }
   }
 

@@ -174,6 +174,93 @@ class TimeTravelSpec extends SparkSpec {
     }
   }
 
+  test("path-escaped partition values: a key moved out of or deleted from such a partition leaves no stale row") {
+    val dir = tmpDir("tt-escaped-part")
+    TimeTravel.init(spark, dir,
+      Seq((1L, "a b:c", 1.0), (2L, "plain", 2.0), (3L, "x/y", 3.0))
+        .toDF("id", "part", "v"), "part")
+    // ':' and '/' are stored under escaped directory names
+    val escaped = TimeTravel.filesAt(spark, dir, 1)
+      .filterNot(_.startsWith("part=plain/"))
+    assert(escaped.size === 2 && escaped.forall(_.contains("%")), escaped)
+    // move id=1 out of 'a b:c' (its only row): it must surface once
+    val v2 = TimeTravel.upsert(spark, dir,
+      Seq((1L, "plain", 11.0)).toDF("id", "part", "v"), "id", "part")
+    assert(TimeTravel.readVersion(spark, dir, v2).count() === 3)
+    assert(rows(TimeTravel.readVersion(spark, dir, v2)) ===
+      Set((1L, "plain", 11.0), (2L, "plain", 2.0), (3L, "x/y", 3.0)))
+    // delete id=3, the only row of 'x/y'
+    val v3 = TimeTravel.delete(spark, dir, Seq(3L).toDF("id"), "id", "part")
+    assert(rows(TimeTravel.readVersion(spark, dir, v3)) ===
+      Set((1L, "plain", 11.0), (2L, "plain", 2.0)))
+    // both emptied escaped partitions are gone from the latest version
+    assert(TimeTravel.filesAt(spark, dir, v3).forall(_.startsWith("part=plain/")))
+  }
+
+  test("upserting the same batch twice gives the same latest content") {
+    val dir = stage()
+    val ups = Seq((2L, "p1", 22.0), (8L, "p3", 80.0)).toDF("id", "part", "v")
+    def upsertAndRead() = TimeTravel.readVersion(spark, dir,
+        TimeTravel.upsert(spark, dir, ups, "id", "part"))
+      .orderBy("id").collect().toSeq
+    val first = upsertAndRead()
+    assert(upsertAndRead() === first)
+    assert(first.map(_.getAs[Long]("id")) === Seq(1L, 2L, 3L, 4L, 5L, 8L))
+  }
+
+  test("a delete rewrites only the partition holding a doomed key") {
+    val dir = stage()
+    TimeTravel.delete(spark, dir, Seq(1L).toDF("id"), "id", "part")
+    assert(TimeTravel.lastCommitStats(dir).get.dirsListed === Set("part=p1"))
+    assert(rows(TimeTravel.readVersion(spark, dir, 2)) ===
+      Set((2L, "p1", 20.0), (3L, "p2", 30.0), (4L, "p2", 40.0),
+        (5L, "p3", 50.0)))
+    // p2/p3 carry over by file name
+    def untouched(v: Int) =
+      TimeTravel.filesAt(spark, dir, v).filterNot(_.startsWith("part=p1/"))
+    assert(untouched(2) === untouched(1))
+  }
+
+  test("a delete that empties an INT-typed partition drops it from the latest version") {
+    val dir = tmpDir("tt-int-delete")
+    TimeTravel.init(spark, dir,
+      Seq((1L, 0, 1.0), (2L, 1, 2.0), (3L, 1, 3.0)).toDF("id", "part", "v"),
+      "part")
+    TimeTravel.delete(spark, dir, Seq(2L).toDF("id"), "id", "part")
+    val v3 = TimeTravel.delete(spark, dir, Seq(1L).toDF("id"), "id", "part")
+    val latest = TimeTravel.readVersion(spark, dir, v3)
+    assert(latest.select("id", "part").as[(Long, Int)].collect().toSeq
+      === Seq((3L, 1)))
+    assert(TimeTravel.filesAt(spark, dir, v3).forall(_.startsWith("part=1/")))
+  }
+
+  test("an upsert batch with a NULL in any component of a composite partition is refused before any commit") {
+    val dir = tmpDir("tt-null-composite")
+    TimeTravel.init(spark, dir,
+      Seq((1L, "a", "x", 1.0)).toDF("id", "r", "s", "v"), "r,s")
+    val ex = intercept[IllegalArgumentException] {
+      TimeTravel.upsert(spark, dir,
+        Seq[(Long, String, String, Double)]((2L, "a", null, 2.0))
+          .toDF("id", "r", "s", "v"), "id", "r,s")
+    }
+    assert(ex.getMessage.contains("NULL value in partition column 's'"))
+    assert(TimeTravel.latestVersion(spark, dir) === 1)
+  }
+
+  test("an upsert landing only in brand-new partitions commits adds and rewrites nothing") {
+    val dir = stage()
+    val v2 = TimeTravel.upsert(spark, dir,
+      Seq((7L, "p7", 70.0), (8L, "p8", 80.0)).toDF("id", "part", "v"),
+      "id", "part")
+    val stats = TimeTravel.lastCommitStats(dir).get
+    assert(stats.nRemoved === 0)
+    assert(TimeTravel.filesAt(spark, dir, 1).toSet
+      .subsetOf(TimeTravel.filesAt(spark, dir, v2).toSet))
+    assert(rows(TimeTravel.readVersion(spark, dir, v2)) ===
+      rows(TimeTravel.readVersion(spark, dir, 1)) + ((7L, "p7", 70.0)) +
+        ((8L, "p8", 80.0)))
+  }
+
   test("numeric-looking STRING partition values round-trip (no inference rewrite)") {
     // '01' must NOT be read back as int 1: the manifest matcher works on
     // directory text, and a re-rendered 'part=1' would miss 'part=01/'

@@ -458,10 +458,10 @@ class StreamingSpec extends SparkSpec {
     assert(tws.count(_._1 === 1L) === 2)
   }
 
-  test("replayToUpsert: multi-batch upsert table equals the batch last-per-key, " +
-      "and a fresh-checkpoint re-replay converges to the same table") {
+  test("replayToVersioned: one commit per batch, the latest version equals the batch " +
+      "last-per-key, and a fresh-checkpoint re-replay converges to the same content") {
     import spark.implicits._
-    val srcDir = tmpDir("graft-upsert-src")
+    val srcDir = tmpDir("graft-versioned-src")
     def slice(rows: (Long, String, Long, String)*): Unit = {
       rows.map { case (id, at, u, ty) =>
         (id, java.sql.Timestamp.valueOf(at), u, ty) }
@@ -481,29 +481,14 @@ class StreamingSpec extends SparkSpec {
       .select(col("user_id"), col("last.ts").as("last_ts"),
         col("last.event_type").as("last_type"),
         pmod(col("user_id"), lit(2L)).cast("string").as("part"))
-    val tableDir = tmpDir("graft-upsert-table")
-    EventsStream.replayToUpsert(agg(srcDir), tableDir, tmpDir("ck1"),
-      keyCol = "user_id", partCol = "part")
-    def state(): Set[(Long, String)] =
-      spark.read.parquet(tableDir)
-        .select("user_id", "last_type").as[(Long, String)].collect().toSet
-    val expected = Set(1L -> "purchase", 2L -> "click", 3L -> "view")
-    assert(state() === expected)
-    // re-replay the whole source with a FRESH checkpoint against the
-    // EXISTING table: every merge re-applies, final state is unchanged
-    EventsStream.replayToUpsert(agg(srcDir), tableDir, tmpDir("ck2"),
-      keyCol = "user_id", partCol = "part")
-    assert(state() === expected)
-
-    // VERSIONED sink over the same source: one commit per micro-batch,
-    // latest content identical to the mutable sink, and the
-    // INTERMEDIATE version stays readable — batch 1's state before
-    // user 1's purchase and user 3's arrival
+    // VERSIONED sink: one commit per micro-batch, and the INTERMEDIATE
+    // version stays readable — batch 1's state before user 1's purchase
+    // and user 3's arrival
     import graft.operators.TimeTravel
     val vDir = tmpDir("graft-versioned-table")
     val t0 = System.nanoTime()
     val timings = EventsStream.replayToVersioned(agg(srcDir), vDir,
-      tmpDir("ck3"), keyCol = "user_id", partCol = "part")
+      tmpDir("ck1"), keyCol = "user_id", partCol = "part")
     val wallMs = (System.nanoTime() - t0) / 1000000L
     assert(TimeTravel.latestVersion(spark, vDir) === 2)
     // commit telemetry: one entry per foreachBatch invocation, exactly
@@ -517,7 +502,16 @@ class StreamingSpec extends SparkSpec {
     def vstate(n: Int): Set[(Long, String)] =
       TimeTravel.readVersion(spark, vDir, n)
         .select("user_id", "last_type").as[(Long, String)].collect().toSet
+    val expected = Set(1L -> "purchase", 2L -> "click", 3L -> "view")
     assert(vstate(2) === expected)
+    assert(vstate(1) === Set(1L -> "view", 2L -> "click"))
+    // re-replay the whole source with a FRESH checkpoint against the
+    // EXISTING table: every batch re-commits as an upsert, the latest
+    // content is unchanged, and the earlier versions stay as they were
+    EventsStream.replayToVersioned(agg(srcDir), vDir, tmpDir("ck2"),
+      keyCol = "user_id", partCol = "part")
+    assert(TimeTravel.latestVersion(spark, vDir) > 2)
+    assert(vstate(TimeTravel.latestVersion(spark, vDir)) === expected)
     assert(vstate(1) === Set(1L -> "view", 2L -> "click"))
 
     // APPEND-ONLY versioned sink: raw passthrough, one commit per batch,
@@ -568,5 +562,24 @@ class StreamingSpec extends SparkSpec {
     assert(TimeTravel.readVersion(spark, rDir, 2)
       .select("event_id").as[Long].collect().sorted.toSeq
       === Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("replayToVersioned: a stream whose batches are all empty creates no table and flags no commit") {
+    import spark.implicits._
+    import graft.operators.TimeTravel
+    val srcDir = tmpDir("graft-versioned-empty-src")
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "view"))
+      .toDF("event_id", "ts", "user_id", "event_type")
+      .coalesce(1).write.mode("append").parquet(srcDir)
+    stampNewFiles(srcDir)
+    val none = EventsStream
+      .fromParquetDir(spark, srcDir, maxFilesPerTrigger = Some(1))
+      .filter(col("user_id") < 0)
+      .withColumn("part", pmod(col("user_id"), lit(2L)).cast("string"))
+    val vDir = tmpDir("graft-versioned-empty")
+    val timings = EventsStream.replayToVersioned(none, vDir,
+      tmpDir("ck-empty"), keyCol = "user_id", partCol = "part")
+    assert(timings.nonEmpty && timings.forall(!_.committed))
+    assert(TimeTravel.latestVersion(spark, vDir) === 0)
   }
 }
