@@ -143,8 +143,10 @@ object PlanAudit {
     val md =
       s"""# PLANS — physical-plan audit of every declared query
          |
-         |Generated by `graft.PlanAudit` at sf dir `$sfDir` (initial AQE
-         |plans; AQE may further coalesce at runtime). Columns:
+         |Generated by `graft.PlanAudit` at sf dir `$sfDir` under
+         |`local[$cpus]` (`SPARK_GRAFT_CPUS`, also the shuffle partition
+         |count) with AQE off: the static plans, before any runtime
+         |coalescing. Some rows' shapes depend on the core count. Columns:
          |
          |- **scans**: parquet + versioned-relation scans in the plan
          |- **pushed**: scans with a non-empty PushedFilters list

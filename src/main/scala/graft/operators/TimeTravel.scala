@@ -361,19 +361,19 @@ object TimeTravel {
   }
 
   /** WRITER GATE — called before a commit record lands: the table's
-    * current requirement is its latest record's declaration. A table
-    * may be readable but not writable (a write-gated feature), which
-    * is exactly the split Delta's reader/writer versions encode. */
-  private def gateWriter(fs: FileSystem, baseDir: String,
-      prevVersion: Int): Unit =
-    if (prevVersion >= 1)
-      protocolOfRecord(fs, baseDir, prevVersion).foreach { case (_, w) =>
-        if (w > SupportedWriter) throw new IllegalStateException(
-          s"$baseDir requires writer protocol version $w, but this " +
-            s"library supports up to $SupportedWriter — the table uses " +
-            "a newer format feature; upgrade the library before " +
-            "writing to it")
-      }
+    * current requirement is its latest record's declaration (`prevProto`,
+    * None before the first record). A table may be readable but not
+    * writable (a write-gated feature), which is exactly the split
+    * Delta's reader/writer versions encode. */
+  private def gateWriter(baseDir: String,
+      prevProto: Option[(Int, Int)]): Unit =
+    prevProto.foreach { case (_, w) =>
+      if (w > SupportedWriter) throw new IllegalStateException(
+        s"$baseDir requires writer protocol version $w, but this " +
+          s"library supports up to $SupportedWriter — the table uses " +
+          "a newer format feature; upgrade the library before " +
+          "writing to it")
+    }
 
   /** PROTOCOL DOWNGRADE — the explicit story the ratchet points at
     * (Delta's `ALTER TABLE DROP FEATURE`, scaled to essentials): a
@@ -402,33 +402,30 @@ object TimeTravel {
 
   /** The ONE commit loop of the metadata-only operations (constraints,
     * bloom policy, column evolution and mapping, protocol downgrade):
-    * resolve the tip, run the caller's checks and policy `transform`
-    * against its snapshot and recorded [[TableMeta]], and land a
-    * data-free record through [[logCommit]] — so a metadata commit
-    * writes its cadence checkpoint like any other. A lost version race
-    * re-runs checks and transform against the NEW tip: a concurrent
-    * commit must never slip in under a policy it was not checked
-    * against. `ratchet = false` declares exactly what the content needs
-    * (the downgrade). Returns the committed version. */
+    * resolve the tip once, run the caller's checks and policy
+    * `transform` against that snapshot and its [[TableMeta]], and land
+    * a data-free record through [[logCommit]] with the same snapshot —
+    * so a metadata commit writes its cadence checkpoint like any other.
+    * A lost version race re-runs checks and transform against the NEW
+    * tip: a concurrent commit must never slip in under a policy it was
+    * not checked against. `ratchet = false` declares exactly what the
+    * content needs (the downgrade). Returns the committed version. */
   private[operators] def commitMetadata(spark: SparkSession, baseDir: String,
       op: String, ratchet: Boolean = true)(
       transform: (Snapshot, TableMeta) => TableMeta): Int = {
     val fs = hadoopFs(spark, baseDir)
-    @annotation.tailrec def attempt(prev: Int): Int = {
-      val snap = resolveFull(spark, baseDir, prev)
-      val meta = transform(snap, metaOfRecord(fs, baseDir, prev))
+    @annotation.tailrec def attempt(snap: Snapshot): Int = {
+      val meta = transform(snap, snap.meta)
       val landed =
-        try Some(logCommit(spark, fs, baseDir, prev + 1, Set.empty, Nil, Nil,
-          Map.empty, () => snap, None, meta, op, ratchet = ratchet))
+        try Some(logCommit(spark, fs, baseDir, snap.version + 1, Set.empty,
+          Nil, Nil, Map.empty, () => snap, None, meta, op, ratchet = ratchet))
         catch { case _: CommitConflict => None }
       landed match {
         case Some(v) => v
-        case None => attempt(latestVersion(spark, baseDir))
+        case None => attempt(resolveTip(spark, baseDir))
       }
     }
-    val tip = latestVersion(spark, baseDir)
-    require(tip >= 1, s"$baseDir has no commits — init the table first")
-    attempt(tip)
+    attempt(resolveTip(spark, baseDir))
   }
 
   private def readLinesUngated(fs: FileSystem, p: Path): List[String] = {
@@ -1196,12 +1193,12 @@ object TimeTravel {
       else Some((dec(tok.substring(eq + 1, co)), dec(tok.substring(co + 1))))
     }.toSeq.headOption
 
-  /** The committed schema of `version` — resolved in [[resolveAt]]'s
+  /** The committed schema of `version` — resolved in [[resolveFull]]'s
     * walk. None only for pre-schema-line logs (reads fall back to
     * inference). */
   def schemaAt(spark: SparkSession, baseDir: String,
       version: Int): Option[org.apache.spark.sql.types.StructType] =
-    resolveAt(spark, baseDir, version)._2
+    resolveFull(spark, baseDir, version).schema
 
   /** The committed schema of `version` at RECORD cost: every modern
     * commit record carries its own `#schema=`, so this is one record
@@ -1229,13 +1226,9 @@ object TimeTravel {
     * table-scale file lists written with no txns, so reading them here
     * would cost O(files) lines per 10th version for nothing. */
   private def txnsIn(fs: FileSystem, baseDir: String,
-      v: Int): Seq[(String, Long)] = {
-    val d = deltaPath(baseDir, v)
-    val p = if (fs.exists(d)) Some(d)
-      else Some(manifestPath(baseDir, v)).filter(fs.exists(_))
-    p.toSeq.flatMap(readRawLines(fs, _)
-      .filter(_.startsWith("#txn=")).map(parseTxn))
-  }
+      v: Int): Seq[(String, Long)] =
+    recordLines(fs, baseDir, v).toSeq
+      .flatMap(_.filter(_.startsWith("#txn=")).map(parseTxn))
 
   /** Highest batchId the log records for `streamId`, scanning commit
     * records newest→oldest and stopping at the first hit (batchIds are
@@ -1257,7 +1250,7 @@ object TimeTravel {
     * were vacuumed or never committed — never silent partial data. */
   def filesAt(spark: SparkSession, baseDir: String,
       version: Int): Seq[String] =
-    resolveAt(spark, baseDir, version)._1
+    resolveFull(spark, baseDir, version).files
 
   private def schemaFrom(lines: Seq[String])
       : Option[org.apache.spark.sql.types.StructType] =
@@ -1298,41 +1291,57 @@ object TimeTravel {
     * manifest. A delta without a `#schema=` line (pre-schema history)
     * takes the schema from a manifest at the same version. Empty when
     * no record of `version` survives. */
-  private def metaOfRecord(fs: FileSystem, baseDir: String,
-      version: Int): TableMeta = {
-    val records = Seq(deltaPath(baseDir, version),
-      manifestPath(baseDir, version)).iterator.filter(fs.exists(_))
-    if (!records.hasNext) TableMeta()
-    else {
-      val meta = metaFrom(readRawLines(fs, records.next()))
-      if (meta.schema.isDefined) meta
-      else meta.copy(schema = records.nextOption()
-        .flatMap(p => schemaFrom(readRawLines(fs, p))))
-    }
+  private[operators] def metaOfRecord(fs: FileSystem, baseDir: String,
+      version: Int): TableMeta =
+    recordLines(fs, baseDir, version)
+      .fold(TableMeta())(metaOfLines(fs, baseDir, version, _))
+
+  /** [[metaOfRecord]] over the record's already-read `lines`. */
+  private def metaOfLines(fs: FileSystem, baseDir: String, version: Int,
+      lines: Seq[String]): TableMeta = {
+    val meta = metaFrom(lines)
+    if (meta.schema.isDefined || !fs.exists(deltaPath(baseDir, version)))
+      meta
+    else meta.copy(schema = Some(manifestPath(baseDir, version))
+      .filter(fs.exists(_)).flatMap(p => schemaFrom(readRawLines(fs, p))))
   }
 
-  /** A version fully resolved from the log: its file set, committed
-    * schema, and per-file data-skipping stats (files with none recorded
-    * are simply absent from `stats`). */
-  private[operators] final case class Snapshot(version: Int,
-      files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      stats: Map[String, String],
-      colmap: Map[String, String] = Map.empty,
-      dropped: Set[String] = Set.empty,
-      dvs: Map[String, String] = Map.empty,
-      blooms: Map[String, String] = Map.empty)
+  /** The lines of version `v`'s authoritative record: its delta when it
+    * exists, else its checkpoint manifest; None when neither survives. */
+  private def recordLines(fs: FileSystem, baseDir: String,
+      v: Int): Option[List[String]] =
+    Seq(deltaPath(baseDir, v), manifestPath(baseDir, v))
+      .find(fs.exists(_)).map(readRawLines(fs, _))
 
-  private def resolveAt(spark: SparkSession, baseDir: String, version: Int)
-      : (Seq[String], Option[org.apache.spark.sql.types.StructType]) = {
-    val s = resolveFull(spark, baseDir, version)
-    (s.files, s.schema)
+  /** A version fully resolved from the log: its file set, its table
+    * policy ([[TableMeta]] — what [[metaOfRecord]] of the version
+    * answers), and per-file data-skipping stats, deletion-vector and
+    * bloom bindings (files with none recorded are simply absent from
+    * those maps). A commit resolves its base ONCE into this value and
+    * enforces, writes and records against it. */
+  private[operators] final case class Snapshot(version: Int,
+      files: Seq[String], meta: TableMeta,
+      stats: Map[String, String],
+      dvs: Map[String, String] = Map.empty,
+      blooms: Map[String, String] = Map.empty) {
+    def schema: Option[org.apache.spark.sql.types.StructType] = meta.schema
+    /** Logical → physical; empty = identity. */
+    def colmap: Map[String, String] = meta.colmap
+  }
+
+  /** The tip, resolved once: the base a mutation checks its batch
+    * against, reads, and commits on top of. */
+  private def resolveTip(spark: SparkSession, baseDir: String): Snapshot = {
+    val prev = latestVersion(spark, baseDir)
+    require(prev >= 1, s"$baseDir has no commits — call init first")
+    resolveFull(spark, baseDir, prev)
   }
 
   /** ONE log walk yields the file set, the committed schema (last
     * `#schema=` seen wins — a later evolution commit overrides the
-    * checkpoint's), and the retained files' stats of `version`. */
-  private def resolveFull(spark: SparkSession, baseDir: String,
+    * checkpoint's), the rest of the policy from the walk's last record,
+    * and the retained files' stats of `version`. */
+  private[operators] def resolveFull(spark: SparkSession, baseDir: String,
       version: Int): Snapshot = {
     val fs = hadoopFs(spark, baseDir)
     val entries = logEntries(fs, baseDir)
@@ -1353,8 +1362,8 @@ object TimeTravel {
         (ckptLines.filterNot(_.startsWith("#")).toSet, statsFrom(ckptLines),
           dvsFrom(ckptLines), bloomsFrom(ckptLines))
     }
-    // the column mapping comes from the LAST record of the walk — every
-    // record carries the full current mapping (identity when absent)
+    // the rest of the policy comes from the LAST record of the walk —
+    // every record carries it in full (identity mapping when absent)
     var lastLines: Seq[String] = ckptLines
     ((ckpt + 1) to version).foreach { v =>
       require(entries.get(v).exists(_._2),
@@ -1369,9 +1378,10 @@ object TimeTravel {
       blooms = blooms -- removes ++ bloomsFrom(lines)
       lastLines = lines
     }
-    Snapshot(version, files.toSeq.sorted, schema,
+    Snapshot(version, files.toSeq.sorted,
+      TableMeta(schema, constraintsFrom(lastLines), colmapFrom(lastLines),
+        coldropFrom(lastLines), bloomIdxFrom(lastLines)),
       stats.filter { case (f, _) => files(f) },
-      colmapFrom(lastLines), coldropFrom(lastLines),
       dvs.filter { case (f, _) => files(f) },
       blooms.filter { case (f, _) => files(f) })
   }
@@ -1721,7 +1731,15 @@ object TimeTravel {
     *     dirs (they cannot invalidate what we read or remove); an
     *     intervening commit in our dirs means our base was stale —
     *     surface `ConcurrentModificationException`, the caller re-runs
-    *     against the new tip. */
+    *     against the new tip.
+    *
+    * The base comes from the caller, read once: a rewrite passes its
+    * resolved `prevSnap` (the policy, and the files a cadence
+    * checkpoint at `prev + 1` extends), an append the `prevMeta` policy
+    * it checked its batch against (it never resolves files). With
+    * neither, the base is resolved here. Only a rebase reads the log
+    * again: the new tip's policy, and its snapshot if the rebased
+    * commit is due a checkpoint. */
   private[operators] def commitWithRebase(spark: SparkSession, fs: FileSystem,
       baseDir: String, prev: Int, dirs: Set[String],
       adds: Seq[String], removes: Seq[String],
@@ -1732,14 +1750,17 @@ object TimeTravel {
       dvs: Map[String, String] = Map.empty,
       statsOverride: Map[String, String] = Map.empty,
       bloomCarry: Map[String, String] = Map.empty,
-      dvTouched: Set[String] = Set.empty): Int = {
+      dvTouched: Set[String] = Set.empty,
+      prevSnap: Option[Snapshot] = None,
+      prevMeta: Option[TableMeta] = None): Int = {
+    lazy val snap = prevSnap.getOrElse(resolveFull(spark, baseDir, prev))
     // the RECORDED schema keeps the table's committed column ORDER
     // (genuinely new columns append): checkSchema admits any batch
     // column order, but recording the batch's spelling verbatim would
     // let one column-list INSERT permute the committed order — and
     // that order is load-bearing (DESCRIBE, SELECT *, positional
     // INSERT binding, the streaming source's ordered-name pin)
-    val tableMeta = metaOfRecord(fs, baseDir, prev)
+    val tableMeta = prevMeta.getOrElse(snap.meta)
     val schema = tableMeta.schema match {
       case Some(t) =>
         val byName = batchSchema.fields.map(f => f.name -> f).toMap
@@ -1791,7 +1812,8 @@ object TimeTravel {
     var base = prev
     while (true) {
       try return logCommit(spark, fs, baseDir, base + 1, dirs, adds,
-        removes, addStats, () => resolveFull(spark, baseDir, base),
+        removes, addStats,
+        () => if (base == prev) snap else resolveFull(spark, baseDir, base),
         txn, meta, op, cdc, dvs, bloomBind)
       catch { case c: CommitConflict =>
         val latest = latestVersion(spark, baseDir)
@@ -2254,16 +2276,31 @@ object TimeTravel {
     }
   }
 
+  /** `files` (a subset of `snap`'s) read as `snap` binds them: its
+    * schema, column mapping, deletion vectors and logged sizes. */
+  private def readSnapshot(spark: SparkSession, baseDir: String,
+      snap: Snapshot, files: Seq[String],
+      keepPos: Boolean = false): DataFrame =
+    readFiles(spark, baseDir, files, snap.schema, snap.colmap, snap.dvs,
+      keepPos, snap.stats)
+
+  /** `snap`'s files that may hold rows satisfying EVERY conjunct:
+    * range-kept by recorded stats ([[rangeKeep]]), then bloom-probed
+    * ([[bloomPrune]]). No conjuncts keep every file. */
+  private def keptFiles(spark: SparkSession, baseDir: String,
+      snap: Snapshot, ranges: Seq[ColRange]): Seq[String] = {
+    val keeps = ranges.map(rangeKeep(snap, _))
+    bloomPrune(spark, baseDir, snap, ranges,
+      snap.files.filter(f => keeps.forall(_(f))))
+  }
+
   /** The table AS OF `version`: exactly the resolved files under
     * exactly the resolved SCHEMA — readVersion(v) returns the columns v
     * was committed with, even after later commits widened the table
     * (schema time travel). */
   def readVersion(spark: SparkSession, baseDir: String,
-      version: Int): DataFrame = {
-    val snap = resolveFull(spark, baseDir, version)
-    readFilesNonEmpty(spark, baseDir, version, snap.files, snap.schema,
-      snap.colmap, snap.dvs, snap.stats)
-  }
+      version: Int): DataFrame =
+    readSnapshotAll(spark, baseDir, resolveFull(spark, baseDir, version))
 
   /** What a stats-pruned read touched: the scan plus the file-count
     * telemetry the skipping contract is graded on. `df` is a SUPERSET
@@ -2495,12 +2532,7 @@ object TimeTravel {
       * own Filter decides row membership). Equality conjuncts also
       * probe recorded bloom filters ([[bloomPrune]]). */
     def kept(preds: Seq[ColRange]): Seq[String] =
-      if (preds.isEmpty) snap.files
-      else {
-        val ks = preds.map(rangeKeep(snap, _))
-        bloomPrune(spark, baseDir, snap, preds,
-          snap.files.filter(f => ks.forall(_(f))))
-      }
+      keptFiles(spark, baseDir, snap, preds)
     /** The stats-kept files of `preds` as a DataFrame — the
       * merge-on-read relation's scan body: column mapping projected to
       * the version's logical names and deletion vectors anti-joined on
@@ -2512,23 +2544,26 @@ object TimeTravel {
       if (ks.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else readFiles(spark, baseDir, ks, Some(schema), snap.colmap,
-        snap.dvs, stats = snap.stats)
+      else readSnapshot(spark, baseDir, snap, ks)
     }
-    /** Snapshot file sizes for the relation's `sizeInBytes`: one
-      * `listStatus` per partition dir, filtered to the snapshot. */
-    def sizeInBytes: Long = {
-      val fs = hadoopFs(spark, baseDir)
-      snap.files.groupBy(dirOf)
-        .iterator.map { case (dir, fls) =>
-          val wanted = fls.map(baseName).toSet
-          val p = if (dir.isEmpty) dataDir(baseDir)
-            else new Path(dataDir(baseDir), dir)
-          fs.listStatus(p)
-            .filter(st => st.isFile && wanted(st.getPath.getName))
-            .map(_.getLen).sum
-        }.sum
-    }
+    /** Snapshot file sizes for the relation's `sizeInBytes`. */
+    def sizeInBytes: Long = snapshotBytes(spark, baseDir, snap)
+  }
+
+  /** The summed sizes of `snap`'s files: one `listStatus` per partition
+    * dir, filtered to the snapshot. */
+  private def snapshotBytes(spark: SparkSession, baseDir: String,
+      snap: Snapshot): Long = {
+    val fs = hadoopFs(spark, baseDir)
+    snap.files.groupBy(dirOf)
+      .iterator.map { case (dir, fls) =>
+        val wanted = fls.map(baseName).toSet
+        val p = if (dir.isEmpty) dataDir(baseDir)
+          else new Path(dataDir(baseDir), dir)
+        fs.listStatus(p)
+          .filter(st => st.isFile && wanted(st.getPath.getName))
+          .map(_.getLen).sum
+      }.sum
   }
 
   private[graft] def scanPlan(spark: SparkSession, baseDir: String,
@@ -2567,9 +2602,7 @@ object TimeTravel {
     val snap = resolveFull(spark, baseDir, version)
     require(snap.files.nonEmpty,
       s"version $version of $baseDir is empty")
-    val keeps = preds.map(rangeKeep(snap, _))
-    val kept = bloomPrune(spark, baseDir, snap, preds,
-      snap.files.filter(f => keeps.forall(_(f))))
+    val kept = keptFiles(spark, baseDir, snap, preds)
     def mkDf =
       if (kept.isEmpty) {
         val s = snap.schema.getOrElse(throw new IllegalArgumentException(
@@ -2577,26 +2610,21 @@ object TimeTravel {
             "no schema to type an empty result with"))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      } else readFiles(spark, baseDir, kept, snap.schema, snap.colmap,
-        snap.dvs, stats = snap.stats)
+      } else readSnapshot(spark, baseDir, snap, kept)
     new SkippingScan(mkDf, snap.files.size, kept.size, snap.stats.size)
   }
 
-  private def readFilesNonEmpty(spark: SparkSession, baseDir: String,
-      version: Int, files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      colmap: Map[String, String] = Map.empty,
-      dvs: Map[String, String] = Map.empty,
-      stats: Map[String, String] = Map.empty): DataFrame =
-    if (files.isEmpty) schema match {
+  /** Every file of `snap` ([[readSnapshot]]). */
+  private def readSnapshotAll(spark: SparkSession, baseDir: String,
+      snap: Snapshot): DataFrame =
+    if (snap.files.isEmpty) snap.schema match {
       // a CREATE-TABLE-empty v1 (or a restore to it): typed empty frame
       case Some(s) => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
       case None => throw new IllegalArgumentException(
-        s"version $version of $baseDir is empty — schemaless empty " +
-          "snapshots are not representable on plain parquet")
-    } else readFiles(spark, baseDir, files, schema, colmap, dvs,
-      stats = stats)
+        s"version ${snap.version} of $baseDir is empty — schemaless " +
+          "empty snapshots are not representable on plain parquet")
+    } else readSnapshot(spark, baseDir, snap, snap.files)
 
   /** Create the table: write `df` partitioned by `partCol`, commit v1
     * as the table's first checkpoint. The partition column must be
@@ -2701,16 +2729,15 @@ object TimeTravel {
     * blind-append guard's cheap, one-record heuristic. */
   private def layoutOfRecord(fs: FileSystem, baseDir: String,
       v: Int): Option[Seq[String]] =
-    Seq(deltaPath(baseDir, v), manifestPath(baseDir, v))
-      .find(fs.exists(_)).flatMap { p =>
-        val lines = readRawLines(fs, p)
-        partColsFrom(lines)
-          .orElse(addsRemovesFrom(lines)._1.headOption
-            .map(f => partColsPhysical(Seq(f))))
-          .orElse(lines.find(l => !l.startsWith("#") && l.nonEmpty &&
-              !l.startsWith("+") && !l.startsWith("-"))
-            .map(f => partColsPhysical(Seq(f)))) // text-checkpoint body
-      }
+    recordLines(fs, baseDir, v).flatMap(layoutFrom)
+
+  private def layoutFrom(lines: Seq[String]): Option[Seq[String]] =
+    partColsFrom(lines)
+      .orElse(addsRemovesFrom(lines)._1.headOption
+        .map(f => partColsPhysical(Seq(f))))
+      .orElse(lines.find(l => !l.startsWith("#") && l.nonEmpty &&
+          !l.startsWith("+") && !l.startsWith("-"))
+        .map(f => partColsPhysical(Seq(f)))) // text-checkpoint body
 
   /** Batch-vs-table schema contract: identical column (name, type) sets
     * by default; with `evolve`, the batch may be a SUPERSET (columns
@@ -2769,13 +2796,13 @@ object TimeTravel {
       affected: Seq[Seq[Any]]): Set[String] =
     affected.map(vs => dirPrefix(partCols, vs)).toSet
 
-  /** `prevFiles` is version `prev`'s ALREADY-RESOLVED file set — every
-    * caller has just resolved it (to read the version back or pick the
-    * fragmented dirs), so commitRewrite never re-reads the log.
+  /** `prevSnap` is the ALREADY-RESOLVED base — every caller has just
+    * resolved it (to read the version back or pick the fragmented
+    * dirs), so commitRewrite never re-reads the log.
     * `dirs`: the affected partition DIRECTORIES (escaped prefixes; ""
     * = the unpartitioned root). */
   private def commitRewrite(spark: SparkSession, baseDir: String,
-      partCols: Seq[String], dirs: Set[String], prev: Int,
+      partCols: Seq[String], dirs: Set[String],
       prevSnap: Snapshot, rewritten: DataFrame, op: String,
       evolveSchema: Boolean = false, cdc: Option[String] = None,
       clusterBy: Option[(String, Int)] = None,
@@ -2797,22 +2824,24 @@ object TimeTravel {
     require(prevFiles.size - removes.size + adds.size > 0,
       "commit would empty the table — an empty version is not " +
         "representable on plain parquet; drop the table instead")
-    commitWithRebase(spark, fs, baseDir, prev, dirs, adds, removes,
-      None, rewritten.schema, op, evolveSchema, cdc)
+    commitWithRebase(spark, fs, baseDir, prevSnap.version, dirs, adds,
+      removes, None, rewritten.schema, op, evolveSchema, cdc,
+      prevSnap = Some(prevSnap))
   }
 
   /** Land the commit record for `version` (delta always; checkpoint on
     * cadence) and publish [[commitStats]] — the one writer of `<N>.delta`.
     * The delta is the [[headerLines]] header, its adds' data-skipping
     * stats and bindings, then adds and removes, each sorted; the cadence
-    * checkpoint carries the stats of every retained file. `prevSnap` is
-    * only forced when a cadence checkpoint is due (or to size a
-    * downgrade). Exclusive create: committing an already-committed
-    * version throws [[CommitConflict]] (the losing writer of a race gets
-    * this, and may rebase). The table's current requirement gates the
-    * WRITE; the record carries the ratcheted requirement forward, or
-    * with `ratchet = false` ([[downgradeProtocol]]) exactly what the
-    * resulting snapshot's content needs. */
+    * checkpoint carries the stats of every retained file. From the
+    * caller: `meta`, the policy the record carries, and `prevSnap`, the
+    * snapshot of `version - 1`, only forced when a cadence checkpoint is
+    * due (or to size a downgrade). Exclusive create: committing an
+    * already-committed version throws [[CommitConflict]] (the losing
+    * writer of a race gets this, and may rebase). The previous record's
+    * requirement, read once, gates the WRITE; the record carries it
+    * ratcheted forward, or with `ratchet = false` ([[downgradeProtocol]])
+    * exactly what the resulting snapshot's content needs. */
   private def logCommit(spark: SparkSession, fs: FileSystem,
       baseDir: String, version: Int, dirs: Set[String],
       adds: Seq[String], removes: Seq[String],
@@ -2823,9 +2852,10 @@ object TimeTravel {
       dvs: Map[String, String] = Map.empty,
       blooms: Map[String, String] = Map.empty,
       ratchet: Boolean = true): Int = {
-    gateWriter(fs, baseDir, version - 1)
+    val prevProto = protocolOfRecord(fs, baseDir, version - 1)
+    gateWriter(baseDir, prevProto)
     val proto =
-      if (ratchet) (protocolOfRecord(fs, baseDir, version - 1) ++
+      if (ratchet) (prevProto ++
         Seq(protocolNeededBy(meta.colmap, meta.coldrop, dvs)))
         .reduce(maxProtocol)
       else protocolNeededBy(meta.colmap, meta.coldrop,
@@ -2888,11 +2918,14 @@ object TimeTravel {
     // the check — and a wrong partCol would then nest a second
     // directory scheme, the exact corruption this guard exists to
     // refuse. The walk is bounded: it stops at the newest data commit.
+    // The base record is read once: the walk's first step, and the
+    // policy the batch is checked, written and recorded under.
+    val prevRecord = recordLines(fs, baseDir, prev)
     requireLayoutMatch(partCols,
-      (prev to 1 by -1).iterator
-        .flatMap(v => layoutOfRecord(fs, baseDir, v)).nextOption(),
+      prevRecord.flatMap(layoutFrom).orElse((prev - 1 to 1 by -1).iterator
+        .flatMap(v => layoutOfRecord(fs, baseDir, v)).nextOption()),
       "append")
-    val meta = metaOfRecord(fs, baseDir, prev)
+    val meta = prevRecord.fold(TableMeta())(metaOfLines(fs, baseDir, prev, _))
     checkSchema(rows.schema, meta.schema, evolveSchema, "append")
     val batch = rows.localCheckpoint() // distinct-collect + write: 2 actions
     enforceConstraints(batch, meta.constraints, "append")
@@ -2905,7 +2938,7 @@ object TimeTravel {
     val adds = stageWrite(spark, baseDir, batch, partCols,
       colmap = meta.colmap)
     commitWithRebase(spark, fs, baseDir, prev, dirs, adds, Nil,
-      txn, batch.schema, "append", evolveSchema)
+      txn, batch.schema, "append", evolveSchema, prevMeta = Some(meta))
   }
 
   /** One action's worth of commit-gate metadata: batch row count, the
@@ -2982,9 +3015,7 @@ object TimeTravel {
   /** The table's partition columns (LOGICAL names, layout order) at
     * the latest version; empty for an unpartitioned table. */
   def partitionColumns(spark: SparkSession, baseDir: String): Seq[String] = {
-    val latest = latestVersion(spark, baseDir)
-    require(latest >= 1, s"$baseDir has no commits")
-    val snap = resolveFull(spark, baseDir, latest)
+    val snap = resolveTip(spark, baseDir)
     activePartCols(spark, baseDir, snap).getOrElse(
       throw new IllegalStateException(
         s"$baseDir records neither files nor a partition-layout " +
@@ -3005,12 +3036,10 @@ object TimeTravel {
   def overwrite(spark: SparkSession, baseDir: String, rows: DataFrame,
       partCol: String, txn: Option[(String, Long)] = None,
       evolveSchema: Boolean = false): Int = {
-    val prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — call init first")
+    val prevSnap = resolveTip(spark, baseDir)
     val partCols = splitCols(partCol)
     requirePartCols(rows, partCols)
-    val fs = hadoopFs(spark, baseDir)
-    val meta = metaOfRecord(fs, baseDir, prev)
+    val meta = prevSnap.meta
     checkSchema(rows.schema, meta.schema, evolveSchema, "overwrite")
     val batch = rows.localCheckpoint()
     enforceConstraints(batch, meta.constraints, "overwrite")
@@ -3022,16 +3051,15 @@ object TimeTravel {
       "overwrite with an empty batch would empty the table — an empty " +
         "version is not representable on plain parquet; drop the table " +
         "instead")
-    val prevSnap = resolveFull(spark, baseDir, prev)
     requireLayoutMatch(partCols,
       activePartCols(spark, baseDir, prevSnap), "overwrite")
     val adds = stageWrite(spark, baseDir, batch, partCols,
       colmap = meta.colmap)
     val dirs = affectedDirs(partCols, affected) ++
       prevSnap.files.map(dirOf)
-    commitWithRebase(spark, fs, baseDir, prev, dirs, adds,
-      removes = prevSnap.files, txn, batch.schema, "overwrite",
-      evolveSchema)
+    commitWithRebase(spark, hadoopFs(spark, baseDir), baseDir,
+      prevSnap.version, dirs, adds, removes = prevSnap.files, txn,
+      batch.schema, "overwrite", evolveSchema, prevSnap = Some(prevSnap))
   }
 
   /** Per-table telemetry of the last MERGE/DELETE's discovery probe:
@@ -3070,13 +3098,7 @@ object TimeTravel {
       catch { case scala.util.control.NonFatal(_) => None }
     analyzed match {
       case Some(c) =>
-        val ranges = predicateRanges(c)
-        if (ranges.isEmpty) snap.files
-        else {
-          val keeps = ranges.map(rangeKeep(snap, _))
-          bloomPrune(spark, baseDir, snap, ranges,
-            snap.files.filter(f => keeps.forall(_(f))))
-        }
+        keptFiles(spark, baseDir, snap, predicateRanges(c))
       case None => snap.files
     }
   }
@@ -3107,8 +3129,7 @@ object TimeTravel {
     discoveryStats.put(baseDir, (probed.size, snap.files.size))
     if (probed.isEmpty) Nil
     else affectedTuples(
-      readFiles(spark, baseDir, probed, snap.schema, snap.colmap,
-        snap.dvs, stats = snap.stats).join(gatedKeys, keyCols),
+      readSnapshot(spark, baseDir, snap, probed).join(gatedKeys, keyCols),
       partCols)
   }
 
@@ -3119,19 +3140,16 @@ object TimeTravel {
     * partitions) contribute no files; all-new means a typed empty
     * relation (schema-less legacy logs fall back to the full read —
     * the only schema source there is the files themselves). */
-  private def readAffected(spark: SparkSession, baseDir: String, prev: Int,
+  private def readAffected(spark: SparkSession, baseDir: String,
       snap: Snapshot, partCols: Seq[String],
       affected: Seq[Seq[Any]]): DataFrame = {
     val dirs = affectedDirs(partCols, affected)
     val files = snap.files.filter(f => dirs.exists(d => underDir(f, d)))
-    if (files.nonEmpty)
-      readFiles(spark, baseDir, files, snap.schema, snap.colmap, snap.dvs,
-        stats = snap.stats)
+    if (files.nonEmpty) readSnapshot(spark, baseDir, snap, files)
     else snap.schema match {
       case Some(s) => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => readFilesNonEmpty(spark, baseDir, prev, snap.files,
-        None, dvs = snap.dvs)
+      case None => readSnapshotAll(spark, baseDir, snap)
         .filter(affected.map(vs => partCols.zip(vs)
             .map { case (c, v) => col(c) === lit(v) }
             .reduceOption(_ && _).getOrElse(lit(true)))
@@ -3150,23 +3168,21 @@ object TimeTravel {
       keyCol: String, partCol: String,
       broadcastKeyLimit: Long = Merge.DefaultBroadcastKeyLimit,
       evolveSchema: Boolean = false, changeFeed: Boolean = false): Int = {
-    val prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — call init first")
+    // resolved ONCE per commit: file set, policy, and stats
+    val prevSnap = resolveTip(spark, baseDir)
+    val prev = prevSnap.version
     val partCols = splitCols(partCol)
     val keyCols = splitCols(keyCol)
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     requirePartCols(updates, partCols)
-    // resolved ONCE per commit: file set, committed schema, and stats
-    val prevSnap = resolveFull(spark, baseDir, prev)
     requireLayoutMatch(partCols,
       activePartCols(spark, baseDir, prevSnap), "upsert")
-    val prevSchema = prevSnap.schema
-    checkSchema(updates.schema, prevSchema, evolveSchema, "upsert")
+    checkSchema(updates.schema, prevSnap.schema, evolveSchema, "upsert")
     // reuse a caller-materialized checkpoint (the streaming sinks pin
     // their micro-batch before the emptiness gate) instead of copying
     // every row into a second block set per commit
     val ups = Merge.ensureCheckpointed(updates)
-    enforceConstraints(ups, constraintsAt(spark, baseDir, prev), "upsert")
+    enforceConstraints(ups, prevSnap.meta.constraints, "upsert")
     // ONE action serves the broadcast gate, the discovery envelope (the
     // envelope prunes on the LEADING key column) AND the batch's distinct
     // partition tuples: group by the partition columns and reduce the
@@ -3182,7 +3198,7 @@ object TimeTravel {
     val affected = (gate.partTuples ++ existingAffected).distinct
     Merge.requireNoNullPartitionTuple(affected, partCols)
     if (affected.isEmpty) return prev // empty batch: nothing to commit
-    val current = readAffected(spark, baseDir, prev, prevSnap, partCols,
+    val current = readAffected(spark, baseDir, prevSnap, partCols,
       affected)
     val cdcToken = if (changeFeed) Some(newToken()) else None
     cdcToken.foreach { tok =>
@@ -3211,7 +3227,7 @@ object TimeTravel {
       current.join(updKeys, keyCols, "left_anti"),
         allowMissingColumns = true)
     commitRewrite(spark, baseDir, partCols,
-      affectedDirs(partCols, affected), prev, prevSnap,
+      affectedDirs(partCols, affected), prevSnap,
       merged, "upsert", evolveSchema, cdcToken)
   }
 
@@ -3222,12 +3238,10 @@ object TimeTravel {
       keyCol: String, partCol: String,
       broadcastKeyLimit: Long = Merge.DefaultBroadcastKeyLimit,
       changeFeed: Boolean = false): Int = {
-    val prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — call init first")
+    val prevSnap = resolveTip(spark, baseDir)
     val partCols = splitCols(partCol)
     val keyCols = splitCols(keyCol)
     require(keyCols.nonEmpty, "delete needs at least one key column")
-    val prevSnap = resolveFull(spark, baseDir, prev)
     // the keys are interpreted under the TABLE's key types: a caller
     // handing string keys against a LONG column (CSV-sourced deletes)
     // would otherwise compute its envelope in STRING order while the
@@ -3249,9 +3263,9 @@ object TimeTravel {
     val affected = discoverAffected(spark, baseDir, prevSnap, keyCols,
       partCols, gate.get(1), gate.get(2), delKeys)
     Merge.requireNoNullPartitionTuple(affected, partCols)
-    if (affected.isEmpty) prev
+    if (affected.isEmpty) prevSnap.version
     else {
-      val touched = readAffected(spark, baseDir, prev, prevSnap, partCols,
+      val touched = readAffected(spark, baseDir, prevSnap, partCols,
         affected)
       val cdcToken = if (changeFeed) Some(newToken()) else None
       cdcToken.foreach(tok =>
@@ -3263,7 +3277,7 @@ object TimeTravel {
       val survivors = touched
         .join(delKeys, keyCols, "left_anti")
       commitRewrite(spark, baseDir, partCols,
-        affectedDirs(partCols, affected), prev, prevSnap,
+        affectedDirs(partCols, affected), prevSnap,
         survivors, "delete", cdc = cdcToken)
     }
   }
@@ -3343,14 +3357,12 @@ object TimeTravel {
       case _: NotMatchedBySourceDelete => true
       case _ => false
     }
-    val prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — call init first")
+    val prevSnap = resolveTip(spark, baseDir)
+    val prev = prevSnap.version
     val partCols = splitCols(partCol)
     val keyCols = splitCols(keyCol)
     require(keyCols.nonEmpty, "merge needs at least one key column")
     requirePartCols(source, partCols)
-    val fs = hadoopFs(spark, baseDir)
-    val prevSnap = resolveFull(spark, baseDir, prev)
     requireLayoutMatch(partCols,
       activePartCols(spark, baseDir, prevSnap), "merge")
     checkSchema(source.schema, prevSnap.schema, evolve = false, "merge")
@@ -3403,8 +3415,8 @@ object TimeTravel {
       keyCols, partCols, gate.get(1), gate.get(2), srcKeys)
     // keys already in the table — complete, because conservative
     // pruning probes every file whose bounds could hold a source key
-    val existingKeys = readAffected(spark, baseDir, prev, prevSnap,
-      partCols, existingAffected)
+    val existingKeys = readAffected(spark, baseDir, prevSnap, partCols,
+      existingAffected)
       .join(srcKeys, keyCols, "left_semi")
       .select(keyCols.map(col): _*).distinct().localCheckpoint()
     // NOT MATCHED cascade, evaluated on the bare source row: the
@@ -3486,10 +3498,9 @@ object TimeTravel {
       if (scopeFiles.isEmpty) prevSnap.schema.map(s =>
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
-        .getOrElse(readAffected(spark, baseDir, prev, prevSnap, partCols,
+        .getOrElse(readAffected(spark, baseDir, prevSnap, partCols,
           affected)) // schema-less legacy: affected-dir fallback
-      else readFiles(spark, baseDir, scopeFiles, prevSnap.schema,
-        prevSnap.colmap, prevSnap.dvs, stats = prevSnap.stats)
+      else readSnapshot(spark, baseDir, prevSnap, scopeFiles)
       ).withColumn(tgtMark, lit(true))
     val joinCond = keyCols.map(k =>
       col(s"tgt.$k") === col(s"src.$k")).reduce(_ && _)
@@ -3592,7 +3603,7 @@ object TimeTravel {
     val isInserted = !isMatched && !isTgtOnly && col(insActCol) >= 0
     enforceConstraints(
       j.filter(isUpdated || isInserted || isBsUpdated).select(outCols: _*),
-      constraintsAt(spark, baseDir, prev), "merge")
+      prevSnap.meta.constraints, "merge")
     val cdcToken = if (changeFeed) Some(newToken()) else None
     cdcToken.foreach { tok =>
       writeChanges(spark, baseDir, tok, Seq(
@@ -3613,7 +3624,7 @@ object TimeTravel {
     // commitRewrite's staged write — a checkpoint here would re-buffer
     // every surviving row a second time per merge
     val rewritten = j.filter(keep).select(outCols: _*)
-    commitRewrite(spark, baseDir, partCols, dirs, prev, prevSnap,
+    commitRewrite(spark, baseDir, partCols, dirs, prevSnap,
       rewritten, "merge", cdc = cdcToken)
   }
 
@@ -3656,12 +3667,9 @@ object TimeTravel {
           f.condition
       }.getOrElse(throw new IllegalArgumentException(
         s"predicate did not analyze to a filter: $predicate"))
-    val ranges = predicateRanges(cond)
-    val keeps = ranges.map(rangeKeep(snap, _))
-    val ranged = snap.files.filter(f => keeps.forall(_(f)))
     // equality conjuncts additionally probe the files' bloom filters —
     // the unclustered-point-lookup prune ranges cannot give
-    val candidates = bloomPrune(spark, baseDir, snap, ranges, ranged)
+    val candidates = keptFiles(spark, baseDir, snap, predicateRanges(cond))
     discoveryStats.put(baseDir, (candidates.size, snap.files.size))
     candidates
   }
@@ -3725,10 +3733,8 @@ object TimeTravel {
       predicate: Column, partCol: String, changeFeed: Boolean,
       set: Option[Map[String, Column]]): Int = {
     val op = if (set.isEmpty) "delete" else "update"
-    val prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — call init first")
-    val fs = hadoopFs(spark, baseDir)
-    val prevSnap = resolveFull(spark, baseDir, prev)
+    val prevSnap = resolveTip(spark, baseDir)
+    val prev = prevSnap.version
     if (prevSnap.files.isEmpty) return prev // empty table: no matches
     // the rewrite's layout IS the table's recorded layout — the
     // partCol parameter is kept for source compatibility only
@@ -3748,9 +3754,8 @@ object TimeTravel {
     if (candidates.isEmpty) return prev
     // one DV-filtered, position-tagged scan serves the probe, the new
     // artifact, and the CDC images — already-deleted rows are invisible
-    val matched = readFiles(spark, baseDir, candidates, Some(schema),
-        prevSnap.colmap, prevSnap.dvs, keepPos = true,
-        stats = prevSnap.stats)
+    val matched = readSnapshot(spark, baseDir, prevSnap, candidates,
+        keepPos = true)
       .filter(coalesce(predicate, lit(false)))
       .localCheckpoint()
     // files identified by NAME — globally unique per table (commit
@@ -3766,7 +3771,7 @@ object TimeTravel {
       val u = matched.select(schema.fieldNames.map(c =>
         s.get(c).fold(col(c))(e => e.cast(schema(c).dataType).as(c)))
         .toSeq: _*)
-      enforceConstraints(u, constraintsAt(spark, baseDir, prev), op)
+      enforceConstraints(u, prevSnap.meta.constraints, op)
       u
     }
     val token = newToken()
@@ -3806,7 +3811,7 @@ object TimeTravel {
       stageWrite(spark, baseDir, u, partCols, colmap = prevSnap.colmap))
     val dirs = touched.map(dirOf).toSet
     val tset = touched.toSet
-    commitWithRebase(spark, fs, baseDir, prev, dirs,
+    commitWithRebase(spark, hadoopFs(spark, baseDir), baseDir, prev, dirs,
       adds = newFiles ++ touched, removes = touched, txn = None,
       batchSchema = schema, op = op, evolveSchema = false, cdc = cdcToken,
       dvs = touched.map(f => f -> token).toMap,
@@ -3814,7 +3819,7 @@ object TimeTravel {
       // re-added files keep their bloom filters: bytes unchanged, and a
       // delete only shrinks the value set — still a sound filter
       bloomCarry = prevSnap.blooms.filter { case (f, _) => tset(f) },
-      dvTouched = tset)
+      dvTouched = tset, prevSnap = Some(prevSnap))
   }
 
   /** Predicate UPDATE (`UPDATE SET ... WHERE p`) as a new version —
@@ -3837,10 +3842,8 @@ object TimeTravel {
       predicate: Column, partCol: String, changeFeed: Boolean,
       set: Option[Map[String, Column]]): Int = {
     val op = if (set.isEmpty) "delete" else "update"
-    val prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — call init first")
-    val fs = hadoopFs(spark, baseDir)
-    val prevSnap = resolveFull(spark, baseDir, prev)
+    val prevSnap = resolveTip(spark, baseDir)
+    val prev = prevSnap.version
     if (prevSnap.files.isEmpty) return prev // empty table: no matches
     // the rewrite's layout IS the table's recorded layout — the
     // partCol parameter is kept for source compatibility only
@@ -3867,8 +3870,7 @@ object TimeTravel {
     // TWO parquet sources (data + delete-set artifact) and
     // input_file_name() refuses multi-source plans.
     val matchedNames =
-      readFiles(spark, baseDir, candidates, Some(schema), prevSnap.colmap,
-        prevSnap.dvs, keepPos = true, stats = prevSnap.stats)
+      readSnapshot(spark, baseDir, prevSnap, candidates, keepPos = true)
       .filter(predicate)
       .select(col(PosFileCol)).distinct()
       .collect().map(_.getString(0)).toSet
@@ -3880,10 +3882,8 @@ object TimeTravel {
     // postimage / constraint check needs to find it again).
     val pred = coalesce(predicate, lit(false)) // NULL predicate: keep
     val hit = "__graft_rewrite_hit"
-    val touched =
-      readFiles(spark, baseDir, matched, Some(schema), prevSnap.colmap,
-        prevSnap.dvs, stats = prevSnap.stats)
-        .withColumn(hit, pred)
+    val touched = readSnapshot(spark, baseDir, prevSnap, matched)
+      .withColumn(hit, pred)
     val rewrittenMarked = set match {
       case None => touched.filter(!col(hit))
       case Some(s) =>
@@ -3897,7 +3897,7 @@ object TimeTravel {
     // updated rows must still satisfy the active CHECK policy
     set.foreach(_ => enforceConstraints(
       rewrittenMarked.filter(col(hit)).drop(hit),
-      constraintsAt(spark, baseDir, prev), op))
+      prevSnap.meta.constraints, op))
     val cdcToken = if (changeFeed) Some(newToken()) else None
     cdcToken.foreach { tok =>
       val images = set match {
@@ -3919,8 +3919,9 @@ object TimeTravel {
       s"$op would empty the table — an empty version is not " +
         "representable on plain parquet; drop the table instead")
     val dirs = matched.map(dirOf).toSet
-    commitWithRebase(spark, fs, baseDir, prev, dirs, adds, matched,
-      None, schema, op, evolveSchema = false, cdcToken)
+    commitWithRebase(spark, hadoopFs(spark, baseDir), baseDir, prev, dirs,
+      adds, matched, None, schema, op, evolveSchema = false, cdcToken,
+      prevSnap = Some(prevSnap))
   }
 
   /** OPTIMIZE: version-preserving small-file compaction — the
@@ -3964,11 +3965,9 @@ object TimeTravel {
       require(k >= 1, "clusterBy bucket count must be >= 1") }
     zorderBy.foreach { case (_, k) =>
       require(k >= 1, "zorderBy bucket count must be >= 1") }
-    val prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — call init first")
-    val prevSnap = resolveFull(spark, baseDir, prev)
-    val (prevFiles, prevSchema) = (prevSnap.files, prevSnap.schema)
-    if (prevFiles.isEmpty) return prev // empty table: nothing to fold
+    val prevSnap = resolveTip(spark, baseDir)
+    val prevFiles = prevSnap.files
+    if (prevFiles.isEmpty) return prevSnap.version // empty table: nothing to fold
     val partCols = partColsLogical(prevFiles, prevSnap.colmap)
     val byDir = prevFiles.groupBy(dirOf)
     val threshold = math.max(maxFilesPerDir,
@@ -3980,16 +3979,15 @@ object TimeTravel {
     // so its output files carry only live rows and no bindings
     val fragmented = byDir.filter { case (dir, fls) =>
       fls.size > threshold || fls.exists(prevSnap.dvs.contains) }
-    if (fragmented.isEmpty) return prev
+    if (fragmented.isEmpty) return prevSnap.version
     // read back ONLY the fragmented partitions' files, under the
     // COMMITTED schema — pre-evolution files consolidate with NULLs in
     // the added columns, exactly as a read would see them
     // DV'd fragments materialize here: the read applies their deletion
     // vectors, so the consolidated files carry only live rows and the
     // commit's removes drop the stale bindings with the files
-    val rows = readFiles(spark, baseDir,
-      fragmented.values.flatten.toSeq.sorted, prevSchema, prevSnap.colmap,
-      prevSnap.dvs, stats = prevSnap.stats)
+    val rows = readSnapshot(spark, baseDir, prevSnap,
+      fragmented.values.flatten.toSeq.sorted)
     // an unpartitioned table has no directory axis for the staged
     // write's one-task-per-dir arrangement to consolidate by — the
     // compaction itself declares the target file count
@@ -3997,7 +3995,7 @@ object TimeTravel {
       if (partCols.isEmpty && clusterBy.isEmpty && zorderBy.isEmpty)
         rows.repartition(threshold)
       else rows
-    commitRewrite(spark, baseDir, partCols, fragmented.keySet, prev,
+    commitRewrite(spark, baseDir, partCols, fragmented.keySet,
       prevSnap, consolidated, "compact", clusterBy = clusterBy,
       zorderBy = zorderBy)
   }
@@ -4023,10 +4021,9 @@ object TimeTravel {
       minSmallFiles: Int = 2): Int = {
     require(minFileBytes > 0, "minFileBytes must be > 0")
     require(minSmallFiles >= 1, "minSmallFiles must be >= 1")
-    val prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — call init first")
+    val prevSnap = resolveTip(spark, baseDir)
+    val prev = prevSnap.version
     val fs = hadoopFs(spark, baseDir)
-    val prevSnap = resolveFull(spark, baseDir, prev)
     if (prevSnap.files.isEmpty) return prev // empty table: no-op
     val partCols = partColsLogical(prevSnap.files, prevSnap.colmap)
     val byDir = prevSnap.files.groupBy(dirOf)
@@ -4043,8 +4040,7 @@ object TimeTravel {
       else Nil
     }.sorted
     if (doomed.isEmpty) return prev
-    val rows = readFiles(spark, baseDir, doomed, prevSnap.schema,
-      prevSnap.colmap, prevSnap.dvs, stats = prevSnap.stats)
+    val rows = readSnapshot(spark, baseDir, prevSnap, doomed)
     val staged0 = rows.localCheckpoint()
     // unpartitioned: fold the undersized files into one (see compact)
     val staged = if (partCols.isEmpty) staged0.repartition(1) else staged0
@@ -4056,7 +4052,8 @@ object TimeTravel {
         "parquet; drop the table instead")
     val dirs = doomed.map(dirOf).toSet
     commitWithRebase(spark, fs, baseDir, prev, dirs, adds, doomed,
-      None, staged.schema, "compact", evolveSchema = false)
+      None, staged.schema, "compact", evolveSchema = false,
+      prevSnap = Some(prevSnap))
   }
 
   /** REPARTITION the table: rewrite the CURRENT version's rows under a
@@ -4093,9 +4090,7 @@ object TimeTravel {
     * tables. */
   def repartitionTable(spark: SparkSession, baseDir: String,
       newPartCol: String): Int = {
-    val prev = latestVersion(spark, baseDir)
-    require(prev >= 1, s"$baseDir has no commits — call init first")
-    val prevSnap = resolveFull(spark, baseDir, prev)
+    val prevSnap = resolveTip(spark, baseDir)
     require(prevSnap.files.nonEmpty,
       "repartition of an empty table is meaningless — the first write " +
         "establishes whatever layout it declares")
@@ -4110,15 +4105,14 @@ object TimeTravel {
       .getOrElse(Nil)
     require(newCols != oldCols,
       s"the table is already partitioned by (${oldCols.mkString(", ")})")
-    val rows = readFiles(spark, baseDir, prevSnap.files, prevSnap.schema,
-      prevSnap.colmap, prevSnap.dvs, stats = prevSnap.stats)
+    val rows = readSnapshot(spark, baseDir, prevSnap, prevSnap.files)
     // the new layout's directories, driver-held: the NULL refusal and
     // the conflict scope both need them (one column-pruned distinct)
     val newTuples = affectedTuples(rows, newCols)
     Merge.requireNoNullPartitionTuple(newTuples, newCols)
     val dirs = prevSnap.files.map(dirOf).toSet ++
       affectedDirs(newCols, newTuples)
-    commitRewrite(spark, baseDir, newCols, dirs, prev, prevSnap, rows,
+    commitRewrite(spark, baseDir, newCols, dirs, prevSnap, rows,
       "repartition")
   }
 
@@ -4180,9 +4174,8 @@ object TimeTravel {
     // the whole table POLICY is restored with the content: the commit
     // carries toVersion's schema, constraints, mapping and bloom policy
     try logCommit(spark, fs, baseDir, prev + 1, dirs, adds, removes,
-      addStats, () => cur, None,
-      metaOfRecord(fs, baseDir, toVersion).copy(schema = target.schema),
-      "restore", None, addDvs, addBlooms)
+      addStats, () => cur, None, target.meta, "restore", None, addDvs,
+      addBlooms)
     catch {
       case _: CommitConflict =>
         throw new java.util.ConcurrentModificationException(
@@ -4265,10 +4258,8 @@ object TimeTravel {
     val carried = (1 to keepFrom).flatMap(v => txnsIn(fs, baseDir, v))
       .groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2).max }
       .toSeq.sortBy(_._1)
-    val origLines =
-      Seq(deltaPath(baseDir, keepFrom), manifestPath(baseDir, keepFrom))
-        .find(fs.exists(_)).map(readRawLines(fs, _)).getOrElse(Nil)
-    val floorMeta = metaFrom(origLines).copy(schema = floorSnap.schema)
+    val origLines = recordLines(fs, baseDir, keepFrom).getOrElse(Nil)
+    val floorMeta = floorSnap.meta
     val mPath = manifestPath(baseDir, keepFrom)
     if (dryRun) () // a report must not self-contain the floor either
     else if (!fs.exists(mPath))
@@ -4555,23 +4546,11 @@ object TimeTravel {
       dvBoundFiles: Int, bloomBoundFiles: Int)
 
   def detail(spark: SparkSession, baseDir: String): TableDetail = {
-    val latest = latestVersion(spark, baseDir)
-    require(latest >= 1, s"$baseDir has no commits")
-    val fs = hadoopFs(spark, baseDir)
-    val snap = resolveFull(spark, baseDir, latest)
-    val meta = metaOfRecord(fs, baseDir, latest)
-    val sizeBytes = snap.files.groupBy(dirOf)
-      .iterator.map { case (dir, fls) =>
-        val wanted = fls.map(baseName).toSet
-        val p = if (dir.isEmpty) dataDir(baseDir)
-          else new Path(dataDir(baseDir), dir)
-        fs.listStatus(p)
-          .filter(st => st.isFile && wanted(st.getPath.getName))
-          .map(_.getLen).sum
-      }.sum
-    TableDetail(latest, snap.files.size, sizeBytes,
+    val snap = resolveTip(spark, baseDir)
+    TableDetail(snap.version, snap.files.size,
+      snapshotBytes(spark, baseDir, snap),
       partColsLogical(snap.files, snap.colmap).mkString(","), snap.schema,
-      meta.constraints, meta.bloomIdx, snap.colmap,
+      snap.meta.constraints, snap.meta.bloomIdx, snap.colmap,
       snap.dvs.size, snap.blooms.size)
   }
 
@@ -4624,8 +4603,7 @@ object TimeTravel {
         linkOrCopyAll(spark, fs, arts)
     }
     writeManifestCheckpoint(spark, dstFs, dstDir, 1, snap.files, Nil,
-      metaOfRecord(fs, baseDir, v).copy(schema = snap.schema),
-      Some("clone"), None, snap.stats, snap.dvs, snap.blooms)
+      snap.meta, Some("clone"), None, snap.stats, snap.dvs, snap.blooms)
     commitStats.put(dstDir, CommitStats(1, Set.empty, snap.files.size, 0,
       checkpointed = true))
     1

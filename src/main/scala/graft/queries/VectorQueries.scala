@@ -1060,8 +1060,10 @@ object VectorQueries {
     None,
     oracleGen = Some((spark, dir) => {
       val (_, newIdx, refined, _, _, _) = reclusterState(spark, dir)
+      // in vec_id order, so two runs write the same oracle text
       val asg = spark.read.parquet(s"$newIdx/cells")
-        .select(col("vec_id"), col("cell")).collect()
+        .select(col("vec_id"), col("cell"))
+        .orderBy(col("vec_id"), col("cell")).collect()
         .map(r => s"(${r.getLong(0)}, ${r.get(1).toString.toInt})")
         .mkString(", ")
       // probe selection mirrors ivfTopKFromIndex's driver arithmetic

@@ -188,7 +188,10 @@ class ProtocolSpec extends SparkSpec {
     }
   }
 
-  test("log records stay line-identical across metadata, data and restore commits") {
+  /** 13 versions covering every record kind the format pin covers:
+    * metadata commits, a downgrade, an upsert, the v10 cadence
+    * checkpoint and a restore. */
+  private def stagePinned(): String = {
     val t = stage()                                                   // v1
     TimeTravel.addConstraint(spark, t, "pos", "k > 0")                // v2
     TimeTravel.setBloomIndex(spark, t, "k", 1000L, 0.05)              // v3
@@ -204,12 +207,26 @@ class ProtocolSpec extends SparkSpec {
     TimeTravel.dropBloomIndex(spark, t, "k")                          // v11
     TimeTravel.dropColumn(spark, t, "y")                              // v12
     assert(TimeTravel.restore(spark, t, 4) === 13)
+    t
+  }
+
+  test("log records stay line-identical across metadata, data and restore commits") {
+    val t = stagePinned()
     // the pinned records: a writer change must reproduce them exactly
     val pinned = scala.io.Source.fromResource("log_format_pin.txt",
       getClass.getClassLoader)
     try assert(normalizedRecords(t).mkString("\n") ===
       pinned.getLines().mkString("\n"))
     finally pinned.close()
+  }
+
+  test("a resolved snapshot's policy equals its version's record's") {
+    val t = stagePinned()
+    val fs = TimeTravel.hadoopFs(spark, t)
+    (1 to 13).foreach { v =>
+      assert(TimeTravel.resolveFull(spark, t, v).meta ===
+        TimeTravel.metaOfRecord(fs, t, v), s"version $v")
+    }
   }
 
   test("an unparsable protocol declaration fails closed") {

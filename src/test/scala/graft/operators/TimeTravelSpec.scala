@@ -806,6 +806,35 @@ class TimeTravelSpec extends SparkSpec {
     }
   }
 
+  test("an upsert or an append opens its base version's record at most " +
+      "twice") {
+    val dir = stage()
+    TimeTravel.append(spark, dir, // v2: the first base with a .delta
+      Seq((6L, "p1", 60.0)).toDF("id", "part", "v"), "part")
+    // each commit's two base-record reads: its base (the upsert's
+    // snapshot, the append's layout guard and policy), then the
+    // protocol gate of its record write
+    val (upsertOpens, v3) =
+      OpenCountingFileSystem.opens(spark, s"$dir/_graft_log/2.delta") {
+        TimeTravel.upsert(spark, dir,
+          Seq((1L, "p1", 11.0), (7L, "p2", 70.0)).toDF("id", "part", "v"),
+          "id", "part")
+      }
+    assert(v3 === 3)
+    val (appendOpens, v4) =
+      OpenCountingFileSystem.opens(spark, s"$dir/_graft_log/3.delta") {
+        TimeTravel.append(spark, dir,
+          Seq((8L, "p3", 80.0)).toDF("id", "part", "v"), "part")
+      }
+    assert(v4 === 4)
+    assert(rows(TimeTravel.readVersion(spark, dir, 4)) === Set(
+      (1L, "p1", 11.0), (2L, "p1", 20.0), (3L, "p2", 30.0),
+      (4L, "p2", 40.0), (5L, "p3", 50.0), (6L, "p1", 60.0),
+      (7L, "p2", 70.0), (8L, "p3", 80.0)))
+    assert(upsertOpens <= 2, s"upsert opened its base record $upsertOpens times")
+    assert(appendOpens <= 2, s"append opened its base record $appendOpens times")
+  }
+
   test("snapshotDiff across versions from manifests alone matches the applied batches") {
     val dir = stage()
     TimeTravel.upsert(spark, dir,
