@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.LogFileIndex
 
 /** VERSIONED copy-on-write table — the minimal Delta-log idea on plain
   * parquet: data files are append-only under `baseDir/data/`, and each
@@ -956,12 +957,14 @@ object TimeTravel {
     * surprise (NaN bounds, unexpected physical type): stats must be
     * conservative or absent, never wrong. */
   /** Also returns the file's total ROW COUNT (sum of row-group
-    * counts) — recorded in the payload as the reserved `!rows=` token
-    * (a real column name can never collide: `enc` percent-encodes
-    * `!`), feeding the streaming source's row-based admission. */
+    * counts), byte size and modification time — recorded in the payload
+    * as the reserved `!rows=`, `!bytes=` and `!mtime=` tokens (a real
+    * column name can never collide: `enc` percent-encodes `!`), feeding
+    * the streaming source's admission and [[LogFileIndex]]'s file
+    * statuses. The status is the one the footer open needs anyway. */
   private def footerColumnStats(
       conf: org.apache.hadoop.conf.Configuration, file: Path)
-      : (Map[String, (String, String)], Long, Long) = {
+      : (Map[String, (String, String)], Long, Long, Long) = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
@@ -971,8 +974,9 @@ object TimeTravel {
       DateLogicalTypeAnnotation, IntLogicalTypeAnnotation}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import scala.jdk.CollectionConverters._
-    val input = HadoopInputFile.fromPath(file, conf)
-    val reader = ParquetFileReader.open(input)
+    val status = file.getFileSystem(conf).getFileStatus(file)
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(status, conf))
     try {
       // (numeric?, min, max) per column; None = column disqualified
       val acc = scala.collection.mutable.Map
@@ -1077,34 +1081,40 @@ object TimeTravel {
       }.toMap
       val rows = reader.getFooter.getBlocks.asScala
         .map(_.getRowCount.toLong).sum
-      (cols, rows, input.getLength)
+      (cols, rows, status.getLen, status.getModificationTime)
     } finally reader.close()
   }
 
   private def encodeStatsPayload(
-      cols: Map[String, (String, String)], rows: Long,
-      bytes: Long): String =
+      stats: (Map[String, (String, String)], Long, Long, Long)): String = {
+    val (cols, rows, bytes, mtime) = stats
     (cols.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
       s"${enc(c)}=${enc(mn)}:${enc(mx)}"
-    } :+ s"!rows=$rows" :+ s"!bytes=$bytes").mkString(";")
+    } :+ s"!rows=$rows" :+ s"!bytes=$bytes" :+ s"!mtime=$mtime")
+      .mkString(";")
+  }
 
-  /** The `!rows=` token of a stats payload — absent on records written
-    * before row counts were recorded (consumers degrade: the streaming
-    * source's row admission treats an unknown-count file as
-    * budget-exhausting, never wrong). */
-  private def parseRowCount(payload: String): Option[Long] =
+  /** A reserved token of a stats payload: `!rows=` (row count),
+    * `!bytes=` (on-disk size) or `!mtime=` (modification time, epoch
+    * ms). Absent on records written before the token was recorded;
+    * consumers degrade — the streaming source's admission treats an
+    * unknown count as budget-exhausting, [[LogFileIndex]] lists the
+    * file's directory for an unknown size or mtime. */
+  private def statToken(payload: String, key: String): Option[Long] = {
+    val prefix = s"!$key="
     payload.split(';').collectFirst {
-      case tok if tok.startsWith("!rows=") =>
-        tok.stripPrefix("!rows=").toLong
+      case tok if tok.startsWith(prefix) => tok.substring(prefix.length).toLong
     }
+  }
 
-  /** The `!bytes=` token — the add file's on-disk size, recorded for
-    * byte-budget streaming admission (`maxBytesPerTrigger`); same
-    * degrade-to-exhaust contract as `!rows=` on older records. */
-  private def parseByteCount(payload: String): Option[Long] =
-    payload.split(';').collectFirst {
-      case tok if tok.startsWith("!bytes=") =>
-        tok.stripPrefix("!bytes=").toLong
+  /** `files` as [[LogFileIndex]] takes them: each with the size and
+    * mtime its stats payload records. */
+  private def logFiles(files: Seq[String],
+      stats: Map[String, String]): Seq[LogFileIndex.LogFile] =
+    files.map { f =>
+      val st = stats.get(f)
+      LogFileIndex.LogFile(f, st.flatMap(statToken(_, "bytes")),
+        st.flatMap(statToken(_, "mtime")))
     }
 
   /** Hadoop `Configuration` is not `Serializable`; this wrapper ships
@@ -1141,9 +1151,8 @@ object TimeTravel {
       threshold: Int = DistributedStatsThreshold): Map[String, String] =
     if (adds.size <= threshold)
       adds.map { f =>
-        val (cols, rows, bytes) = footerColumnStats(fs.getConf,
-          new Path(dataDir(baseDir), f))
-        f -> encodeStatsPayload(cols, rows, bytes)
+        f -> encodeStatsPayload(footerColumnStats(fs.getConf,
+          new Path(dataDir(baseDir), f)))
       }.toMap
     else {
       val confW =
@@ -1152,9 +1161,8 @@ object TimeTravel {
       spark.sparkContext
         .parallelize(adds, math.max(1, math.min(adds.size / 8, 64)))
         .map { f =>
-          val (cols, rows, bytes) =
-            footerColumnStats(confW.conf, new Path(s"$root/$f"))
-          f -> encodeStatsPayload(cols, rows, bytes)
+          f -> encodeStatsPayload(
+            footerColumnStats(confW.conf, new Path(s"$root/$f")))
         }
         .collect()
         .toMap
@@ -1805,8 +1813,8 @@ object TimeTravel {
         bloomCarry.contains(f) || statsOverride.contains(f) ||
           dvTouched(f))
       if (meta.bloomIdx.isEmpty || fresh.isEmpty) Map.empty[String, String]
-      else buildBloomArtifact(spark, baseDir, fresh, schema, meta.colmap,
-        meta.bloomIdx)
+      else buildBloomArtifact(spark, baseDir, fresh, addStats, schema,
+        meta.colmap, meta.bloomIdx)
     }
     val bloomBind = bloomCarry ++ builtBlooms
     var base = prev
@@ -1897,13 +1905,13 @@ object TimeTravel {
     }
   }
 
-  /** Serialized: the toggle mutates SHARED session conf, and this
-    * table is multi-writer — two concurrent reads interleaving their
-    * toggle/restore could re-enable inference mid-resolution (partition
-    * discovery runs eagerly at DataFrame CREATION, which is all that
-    * happens under the lock — the lazy execution afterwards doesn't
-    * read the conf). Plan-construction is driver-side metadata work;
-    * serializing it costs nothing at scale. */
+  /** Partition discovery with type inference off — only for
+    * pre-`#schema=` logs, whose sole reader is that discovery (every
+    * other read casts directory values from the committed schema).
+    * Serialized: the toggle mutates SHARED session conf, and two
+    * concurrent reads interleaving their toggle/restore could
+    * re-enable inference mid-resolution (discovery runs eagerly at
+    * DataFrame CREATION, which is all that happens under the lock). */
   private val inferenceLock = new Object
   private def withoutPartitionInference[A](spark: SparkSession)(f: => A): A =
     inferenceLock.synchronized {
@@ -2052,7 +2060,7 @@ object TimeTravel {
     * unbound — never skipped, conservatively. Returns the bindings of
     * exactly the files with artifact rows. */
   private def buildBloomArtifact(spark: SparkSession, baseDir: String,
-      files: Seq[String],
+      files: Seq[String], stats: Map[String, String],
       schema: org.apache.spark.sql.types.StructType,
       colmap: Map[String, String],
       idx: Map[String, (Long, Double)]): Map[String, String] = {
@@ -2064,8 +2072,8 @@ object TimeTravel {
         case _ => false
       }))
     if (cols.isEmpty) return Map.empty
-    val df = readFiles(spark, baseDir, files, Some(schema), colmap,
-      Map.empty, keepPos = true)
+    val df = readFiles(spark, baseDir, files, stats, Some(schema), colmap,
+      keepPos = true)
     val aggs = cols.map { c =>
       val (n, fpp) = idx(c)
       val in = schema(c).dataType match {
@@ -2180,99 +2188,66 @@ object TimeTravel {
     else candidates.filterNot(f => drops(baseName(f)))
   }
 
-  /** `dvs`: the snapshot's file → DV-token bindings (restricted here to
-    * the requested files) — bound files scan through [[applyDv]], so
-    * merge-on-read deletes are invisible to every caller; unbound files
-    * keep the plain scan, zero overhead. `keepPos` retains the
-    * [[PosFileCol]]/[[PosIndexCol]] identity columns on EVERY row (the
-    * DV writer's probe needs them); otherwise they never escape. */
+  /** `stats`: the files' recorded payloads, whose `!bytes=`/`!mtime=`
+    * tokens plan the scan. `dvs`: the snapshot's file → DV-token
+    * bindings (restricted here to the requested files) — bound files
+    * scan through [[applyDv]], so merge-on-read deletes are invisible
+    * to every caller; unbound files keep the plain scan, zero
+    * overhead. `keepPos` retains the [[PosFileCol]]/[[PosIndexCol]]
+    * identity columns on EVERY row (the DV writer's probe needs them);
+    * otherwise they never escape. */
   private def readFiles(spark: SparkSession, baseDir: String,
-      files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      colmap: Map[String, String] = Map.empty,
+      files: Seq[String], stats: Map[String, String],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      colmap: Map[String, String],
       dvs: Map[String, String] = Map.empty,
-      keepPos: Boolean = false,
-      stats: Map[String, String] = Map.empty)
-      : DataFrame = {
+      keepPos: Boolean = false): DataFrame = {
     val root = dataDir(baseDir).toString
     val bound = if (dvs.isEmpty) Map.empty[String, String]
       else { val fset = files.toSet; dvs.filter { case (f, _) => fset(f) } }
-    // the LOG's schema, never inference: no footer sampling at plan
-    // time, files written before an evolution read their missing
-    // columns as NULL, and the partition column's type comes from the
-    // schema (STRING by contract)
+    // the LOG's schema and file statuses ([[LogFileIndex]]): no footer
+    // sampling or listing at plan time, files written before an
+    // evolution read their missing columns as NULL, and partition
+    // values cast to the committed types
     def scan(group: Seq[String], tagPos: Boolean): DataFrame = {
-      val reader = spark.read.option("basePath", root)
-      val paths = group.map(f => s"$root/$f")
       def tag(df: DataFrame): DataFrame =
         if (!tagPos) df
         else df.withColumn(PosFileCol, col("_metadata.file_name"))
           .withColumn(PosIndexCol, col("_metadata.row_index"))
-      // Plan the scan FROM THE LOG when every file's size is recorded
-      // (`!bytes=` stats): no listing, no getFileStatus, and above all
-      // no parallel-discovery Spark job (one task PER FILE past the
-      // 32-path default — a 960-file version read spent 1.3 s there).
-      // Missing stats (pre-`!bytes` tables) degrade to the listed read.
-      def logScan(sch: org.apache.spark.sql.types.StructType)
-          : Option[DataFrame] =
-        if (spark.conf.getOption("spark.graft.log.fileIndex")
-            .exists(_.equalsIgnoreCase("false"))) None
-        else {
-          val sized = group.map(f =>
-            stats.get(f).flatMap(parseByteCount)
-              .map(org.apache.spark.sql.graftshim.LogFileIndex.LogFile(f, _)))
-          if (sized.exists(_.isEmpty)) None
-          else {
-            val partCols = group.head.split('/').dropRight(1).toSeq
-              .map(seg => seg.take(seg.indexOf('=')))
-            if (partCols.exists(c => c.isEmpty || !sch.fieldNames.contains(c)))
-              None
-            // try: every other log-scan bail-out DEGRADES to the listed
-            // read; a malformed group (e.g. a hypothetical mixed-depth
-            // file set — unreachable today thanks to requireLayoutMatch,
-            // but the failure mode should be consistent) must too, not
-            // throw at plan time inside the index
-            else scala.util.Try(org.apache.spark.sql.graftshim.LogFileIndex
-              .scan(spark, root, sized.map(_.get), sch, partCols)).toOption
-          }
-        }
-      (schema, colmap.isEmpty) match {
-        case (None, _) => tag(reader.parquet(paths: _*))
-        case (Some(sch), true) =>
-          // a partitioned scan surfaces directory columns LAST whatever
-          // the passed schema says — project back to the COMMITTED
-          // order so SELECT *, DESCRIBE, and positional INSERT binding
-          // all speak the log's column order
-          val extras = if (tagPos) Seq(col(PosFileCol), col(PosIndexCol))
-            else Nil
-          tag(logScan(sch).getOrElse(reader.schema(sch).parquet(paths: _*)))
-            .select(sch.fieldNames.map(col).toSeq ++ extras: _*)
-        case (Some(sch), false) =>
+      schema match {
+        case None => withoutPartitionInference(spark)(tag(
+          spark.read.option("basePath", root)
+            .parquet(group.map(f => s"$root/$f"): _*)))
+        case Some(sch) =>
           // column mapping: files carry PHYSICAL names; read under the
           // physical schema and project back to the version's logical
-          // names (the rename-is-metadata contract)
-          val phys = org.apache.spark.sql.types.StructType(sch.fields
-            .map(f => f.copy(name = colmap.getOrElse(f.name, f.name))))
+          // names (the rename-is-metadata contract). A partitioned scan
+          // surfaces directory columns LAST whatever the schema says —
+          // the projection also restores the COMMITTED order, so
+          // SELECT *, DESCRIBE, and positional INSERT binding all speak
+          // the log's column order
+          val phys = sch.fields
+            .map(f => f.copy(name = colmap.getOrElse(f.name, f.name)))
           val extras = if (tagPos) Seq(col(PosFileCol), col(PosIndexCol))
             else Nil
-          tag(logScan(phys).getOrElse(reader.schema(phys).parquet(paths: _*)))
-            .select(sch.fields.map(f =>
-              col(colmap.getOrElse(f.name, f.name)).as(f.name)).toSeq ++
-              extras: _*)
+          tag(LogFileIndex.scan(spark, root, logFiles(group, stats),
+              org.apache.spark.sql.types.StructType(phys),
+              partColsPhysical(group)))
+            .select(sch.fields.zip(phys).map { case (l, p) =>
+              if (p.name == l.name) col(l.name) else col(p.name).as(l.name)
+            }.toSeq ++ extras: _*)
       }
     }
-    withoutPartitionInference(spark) {
-      if (bound.isEmpty) scan(files, keepPos)
-      else {
-        requireOrdinalNames(bound.keys, "DV")
-        val (dvFiles, plain) = files.partition(bound.contains)
-        val filtered = applyDv(spark, baseDir, scan(dvFiles, tagPos = true),
-          dvFiles.map(f => (baseName(f), bound(f))))
-        val dvPart =
-          if (keepPos) filtered else filtered.drop(PosFileCol, PosIndexCol)
-        if (plain.isEmpty) dvPart
-        else scan(plain, keepPos).unionByName(dvPart)
-      }
+    if (bound.isEmpty) scan(files, keepPos)
+    else {
+      requireOrdinalNames(bound.keys, "DV")
+      val (dvFiles, plain) = files.partition(bound.contains)
+      val filtered = applyDv(spark, baseDir, scan(dvFiles, tagPos = true),
+        dvFiles.map(f => (baseName(f), bound(f))))
+      val dvPart =
+        if (keepPos) filtered else filtered.drop(PosFileCol, PosIndexCol)
+      if (plain.isEmpty) dvPart
+      else scan(plain, keepPos).unionByName(dvPart)
     }
   }
 
@@ -2281,8 +2256,8 @@ object TimeTravel {
   private def readSnapshot(spark: SparkSession, baseDir: String,
       snap: Snapshot, files: Seq[String],
       keepPos: Boolean = false): DataFrame =
-    readFiles(spark, baseDir, files, snap.schema, snap.colmap, snap.dvs,
-      keepPos, snap.stats)
+    readFiles(spark, baseDir, files, snap.stats, snap.schema, snap.colmap,
+      snap.dvs, keepPos)
 
   /** `snap`'s files that may hold rows satisfying EVERY conjunct:
     * range-kept by recorded stats ([[rangeKeep]]), then bloom-probed
@@ -2511,9 +2486,9 @@ object TimeTravel {
   }
 
   /** Batch-relation planning view of a resolved version — the
-    * [[graft.sources.GraftVersionedFileIndex]] hook: the snapshot's
-    * file list, its committed schema, and a conjunctive stats-keep
-    * evaluator (same per-conjunct contract as
+    * [[graft.sources.GraftVersionedRelation]] hook: the snapshot as a
+    * log-planned relation, its committed schema, and a conjunctive
+    * stats-keep evaluator (same per-conjunct contract as
     * [[readVersionSkippingAll]], plus one-sided ranges for pushed
     * `>=`/`<=` comparisons). Resolved ONCE at relation construction:
     * every scan of the relation sees the same consistent version
@@ -2521,7 +2496,6 @@ object TimeTravel {
   private[graft] final class ScanPlan(spark: SparkSession,
       baseDir: String, snap: Snapshot,
       val schema: org.apache.spark.sql.types.StructType) {
-    def files: Seq[String] = snap.files
     /** Logical → physical; empty = identity (no renames/drops ever). */
     def colmap: Map[String, String] = snap.colmap
     /** True when any file carries a deletion-vector binding — a plain
@@ -2546,25 +2520,26 @@ object TimeTravel {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else readSnapshot(spark, baseDir, snap, ks)
     }
+    /** The snapshot as a log-planned parquet relation
+      * ([[LogFileIndex]]) — plain snapshots only: no column mapping,
+      * no deletion vectors. `prune` maps a scan's pushed data filters
+      * to the files it keeps. */
+    def relation(prune: Seq[org.apache.spark.sql.catalyst.expressions
+        .Expression] => Seq[String])
+        : org.apache.spark.sql.sources.BaseRelation =
+      LogFileIndex.relation(spark, dataDir(baseDir).toString,
+        logFiles(snap.files, snap.stats), schema,
+        partColsPhysical(snap.files), Some(prune))
     /** Snapshot file sizes for the relation's `sizeInBytes`. */
     def sizeInBytes: Long = snapshotBytes(spark, baseDir, snap)
   }
 
-  /** The summed sizes of `snap`'s files: one `listStatus` per partition
-    * dir, filtered to the snapshot. */
+  /** The summed sizes of `snap`'s files, from the statuses
+    * [[LogFileIndex]] plans its scans with. */
   private def snapshotBytes(spark: SparkSession, baseDir: String,
-      snap: Snapshot): Long = {
-    val fs = hadoopFs(spark, baseDir)
-    snap.files.groupBy(dirOf)
-      .iterator.map { case (dir, fls) =>
-        val wanted = fls.map(baseName).toSet
-        val p = if (dir.isEmpty) dataDir(baseDir)
-          else new Path(dataDir(baseDir), dir)
-        fs.listStatus(p)
-          .filter(st => st.isFile && wanted(st.getPath.getName))
-          .map(_.getLen).sum
-      }.sum
-  }
+      snap: Snapshot): Long =
+    LogFileIndex.statuses(spark, dataDir(baseDir).toString,
+      logFiles(snap.files, snap.stats)).iterator.map(_.getLen).sum
 
   private[graft] def scanPlan(spark: SparkSession, baseDir: String,
       version: Int): ScanPlan = {
@@ -4534,9 +4509,9 @@ object TimeTravel {
     * state — version, file count and bytes, partition column, schema,
     * and every active policy (constraints, bloom index, column
     * mapping) plus the merge-on-read surface (DV/bloom-bound file
-    * counts). Metadata cost: one log resolve + one `listStatus` per
-    * partition dir (sizes come from the dir listings, O(dirs) calls,
-    * no data access). */
+    * counts). Metadata cost: one log resolve; sizes come from the
+    * log's stats (a directory listing only for files recorded without
+    * `!bytes=`/`!mtime=`), no data access. */
   final case class TableDetail(version: Int, numFiles: Int,
       sizeBytes: Long, partitionColumn: String,
       schema: Option[org.apache.spark.sql.types.StructType],
@@ -4610,7 +4585,9 @@ object TimeTravel {
   }
 
   /** Hard-link each (src, dst) pair, falling back to a byte copy when
-    * the filesystem can't link; distributed above the threshold. */
+    * the filesystem can't link; distributed above the threshold. A copy
+    * keeps its source's mtime, so the `!mtime=` stats the clone carries
+    * over stay true. */
   private def linkOrCopyAll(spark: SparkSession, fs: FileSystem,
       pairs: Seq[(String, String)],
       threshold: Int = DistributedFsThreshold): Unit = {
@@ -4638,10 +4615,13 @@ object TimeTravel {
           catch { case _: Exception => false }
         case _ => false
       }
-      if (!linked)
-        org.apache.hadoop.fs.FileUtil.copy(
-          new Path(from).getFileSystem(conf), new Path(from),
+      if (!linked) {
+        val fromFs = new Path(from).getFileSystem(conf)
+        org.apache.hadoop.fs.FileUtil.copy(fromFs, new Path(from),
           f, toPath, false, conf)
+        f.setTimes(toPath,
+          fromFs.getFileStatus(new Path(from)).getModificationTime, -1)
+      }
     }
     if (pairs.size <= threshold)
       pairs.foreach(one(fs.getConf))
@@ -4743,9 +4723,8 @@ object TimeTravel {
       sinceVersion: Int, endVersion: Int = Int.MaxValue): DataFrame = {
     val latest = latestVersion(spark, baseDir)
     val end = if (endVersion == Int.MaxValue) latest else endVersion
-    val addFiles = appendWindowAdds(spark, baseDir, sinceVersion, end)
-      .flatMap(_._2)
-    readAddFiles(spark, baseDir, addFiles, end,
+    readAddFiles(spark, baseDir,
+      appendWindowAdds(spark, baseDir, sinceVersion, end).flatMap(_._2), end,
       s"empty window ($sinceVersion, $end] of $baseDir has no logged " +
         "schema to type an empty result with")
   }
@@ -4797,7 +4776,7 @@ object TimeTravel {
   private[graft] def appendWindowAdds(spark: SparkSession,
       baseDir: String, sinceVersion: Int, endVersion: Int,
       consumerPinnedAt: Option[Int] = None)
-      : Seq[(Int, Seq[String])] = {
+      : Seq[(Int, Seq[AddFile])] = {
     val fs = hadoopFs(spark, baseDir)
     val latest = latestVersion(spark, baseDir)
     require(sinceVersion >= 1 && sinceVersion <= endVersion &&
@@ -4812,6 +4791,7 @@ object TimeTravel {
           "a full readVersion snapshot")
       val lines = readRawLines(fs, deltaPath(baseDir, v))
       val (adds, removes) = addsRemovesFrom(lines)
+      val stats = statsFrom(lines)
       v -> (opFrom(lines) match {
         case Some("append") => adds
         case Some("compact") => Nil // dataChange=false: already delivered
@@ -4829,23 +4809,18 @@ object TimeTravel {
             s"${other.getOrElse("pre-metadata rewrite")} commit: an " +
             "insert-only change feed cannot represent updates or " +
             "deletes — re-read the full version (or snapshotDiff) instead")
-      })
+      }).map(f => AddFile(f, stats.get(f)))
     }
   }
 
-  /** Version `v`'s add files paired with their RECORDED row and byte
-    * counts (the stats payload's `!rows=`/`!bytes=` tokens; None on
-    * records written before they were recorded), in the record's
-    * stable order — the streaming source's row/byte-admission walk.
-    * One metadata read, no data access. */
-  private[graft] def addRowCounts(spark: SparkSession, baseDir: String,
-      v: Int): Seq[(String, (Option[Long], Option[Long]))] = {
-    val fs = hadoopFs(spark, baseDir)
-    val lines = readRawLines(fs, deltaPath(baseDir, v))
-    val stats = statsFrom(lines)
-    addsRemovesFrom(lines)._1
-      .map(f => f -> ((stats.get(f).flatMap(parseRowCount),
-        stats.get(f).flatMap(parseByteCount))))
+  /** An add file with its RECORDED stats payload (None on records
+    * written before stats were recorded): the row and byte counts the
+    * streaming source admits by, and the statuses the read plans with.
+    * No data access. */
+  private[graft] final case class AddFile(path: String,
+      stats: Option[String]) {
+    def rows: Option[Long] = stats.flatMap(statToken(_, "rows"))
+    def bytes: Option[Long] = stats.flatMap(statToken(_, "bytes"))
   }
 
   /** The newest version at or below `fromVersion` whose committed
@@ -4880,7 +4855,7 @@ object TimeTravel {
   /** Read a set of add files under `schemaVersion`'s committed schema
     * and column mapping (an empty set types as an empty frame). */
   private[graft] def readAddFiles(spark: SparkSession, baseDir: String,
-      files: Seq[String], schemaVersion: Int,
+      files: Seq[AddFile], schemaVersion: Int,
       emptyMsg: String): DataFrame = {
     val fs = hadoopFs(spark, baseDir)
     val meta = metaOfRecord(fs, baseDir, schemaVersion)
@@ -4889,7 +4864,9 @@ object TimeTravel {
         throw new IllegalArgumentException(emptyMsg))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    } else readFiles(spark, baseDir, files.sorted, meta.schema, meta.colmap)
+    } else readFiles(spark, baseDir, files.map(_.path).sorted,
+      files.flatMap(a => a.stats.map(a.path -> _)).toMap, meta.schema,
+      meta.colmap)
   }
 
   /** Row-level change-type column every CDC row carries:
@@ -4937,7 +4914,8 @@ object TimeTravel {
     * `rows`/`bytes` None = unknown: admits and exhausts the budget,
     * conservative. */
   private[graft] final case class CdcUnit(path: String, isAdd: Boolean,
-      rows: Option[Long], bytes: Option[Long] = None)
+      rows: Option[Long], bytes: Option[Long] = None,
+      stats: Option[String] = None)
 
   private def parquetRowCount(fs: FileSystem, p: Path): Long = {
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -4967,9 +4945,10 @@ object TimeTravel {
     opFrom(lines) match {
       case Some("append") =>
         val stats = statsFrom(lines)
-        adds.sorted.map(f => CdcUnit(f, isAdd = true,
-          stats.get(f).flatMap(parseRowCount),
-          stats.get(f).flatMap(parseByteCount)))
+        adds.sorted.map { f =>
+          val a = AddFile(f, stats.get(f))
+          CdcUnit(f, isAdd = true, a.rows, a.bytes, a.stats)
+        }
       case None if removes.isEmpty => // pre-#op adds-only: an append
         adds.sorted.map(f => CdcUnit(f, isAdd = true, None))
       case Some("compact") | Some("constraint") | Some("bloomidx") |
@@ -5022,8 +5001,9 @@ object TimeTravel {
           // — reading at-v logical names and realigning by name would
           // NULL-fill every column renamed between v and delivery
           if (addUnits.isEmpty) None
-          else Some(readFiles(spark, baseDir,
-              addUnits.map(_.path).sorted, Some(schema), deliveryColmap)
+          else Some(readFiles(spark, baseDir, addUnits.map(_.path).sorted,
+              addUnits.flatMap(u => u.stats.map(u.path -> _)).toMap,
+              Some(schema), deliveryColmap)
             .withColumn(ChangeTypeCol, lit("insert"))),
           // captured change rows were written under v's LOGICAL names:
           // project them onto the delivery names via the physical names
@@ -5127,7 +5107,7 @@ object TimeTravel {
         case Some("append") | None if removes.isEmpty =>
           if (adds.isEmpty) None
           else Some(readFiles(spark, baseDir, adds.sorted,
-            Some(schema), deliveryColmap)
+            statsFrom(lines), Some(schema), deliveryColmap)
             .withColumn(ChangeTypeCol, lit("insert"))
             .withColumn(CommitVersionCol, lit(v)))
         case Some("compact") => None // dataChange=false

@@ -1,15 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate => CatalystPredicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.BaseRelation
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.TimeTravel
 
@@ -22,29 +15,31 @@ import graft.operators.TimeTravel
   * `RelationProvider` face (reference analogue: the consumer examples
   * in README.md:13-28 are plain declarative reads of the export).
   *
-  * The relation is a [[HadoopFsRelation]] over a LOG-BACKED
-  * [[FileIndex]], NOT a row-producing `buildScan`: Spark's own
-  * FileSourceStrategy plans it, so the scan is the native vectorized
-  * parquet reader with whole-stage codegen, column pruning
-  * (`ReadSchema`), parquet-level `PushedFilters`, AND partition
-  * pruning — everything a hand-rolled RDD relation would forfeit.
+  * The relation is a `HadoopFsRelation` over the LOG-BACKED
+  * [[org.apache.spark.sql.graftshim.LogFileIndex]], NOT a row-producing
+  * `buildScan`: Spark's own FileSourceStrategy plans it, so the scan is
+  * the native vectorized parquet reader with whole-stage codegen,
+  * column pruning (`ReadSchema`), parquet-level `PushedFilters`, AND
+  * partition pruning — everything a hand-rolled RDD relation would
+  * forfeit.
   * What the log adds on top (exactly Delta's TahoeLogFileIndex split):
-  *   - the FILE SET comes from the commit log, never a directory
-  *     listing — stale files from superseded versions are invisible,
-  *     and the chosen version stays frozen for the relation's lifetime
-  *     (a consistent snapshot however many commits land meanwhile);
+  *   - the FILE SET and each file's size and mtime come from the
+  *     commit log, never a directory listing — stale files from
+  *     superseded versions are invisible, and the chosen version stays
+  *     frozen for the relation's lifetime (a consistent snapshot
+  *     however many commits land meanwhile);
   *   - `listFiles` evaluates partition-column predicates against the
-  *     directory values (O(dirs), exact — any predicate shape, not
-  *     just ranges) and turns data-column range/equality conjuncts
-  *     into [[TimeTravel.ColRange]] stats-skipping against the log's per-file
-  *     min/max — files provably disjoint from the predicate are never
-  *     even planned as splits, the same metadata-only pruning
-  *     [[TimeTravel.readVersionSkippingAll]] does imperatively.
+  *     directory values (exact — any predicate shape, not just ranges)
+  *     and hands data-column conjuncts to [[TimeTravel.ScanPlan]]'s
+  *     `kept`: range/equality stats-skipping against the log's
+  *     per-file min/max plus the bloom probe — files provably disjoint
+  *     from the predicate are never even planned as splits, the same
+  *     metadata-only pruning [[TimeTravel.readVersionSkippingAll]]
+  *     does imperatively.
   *
   * At 100 TB: planning cost is one log resolve (O(retained files) in
-  * the driver) plus one `listStatus` per partition directory — never a
-  * recursive listing of superseded data, never a footer read; the
-  * pruned splits then fan out to executors like any parquet scan.
+  * the driver) — never a listing, never a footer read; the pruned
+  * splits then fan out to executors like any parquet scan.
   *
   * Column order note: like every `HadoopFsRelation`, the partition
   * column comes LAST in the relation's schema (data columns first);
@@ -80,14 +75,10 @@ object GraftVersionedRelation {
         // to logical) and deletion-vector bindings (a raw split scan
         // would resurrect deleted rows — the hazard Delta gates behind
         // a reader-version bump).
-        if (plan.colmap.isEmpty && !plan.hasDeletionVectors) {
-          val index = new GraftVersionedFileIndex(spark, baseDir,
-            version, plan)
-          HadoopFsRelation(index, index.partitionSchema,
-            index.dataSchema, bucketSpec = None, new ParquetFileFormat,
-            options = Map.empty)(spark)
-        } else new GraftVersionedMorRelation(spark, baseDir, version,
-          plan)
+        if (plan.colmap.isEmpty && !plan.hasDeletionVectors)
+          plan.relation(filters =>
+            plan.kept(filters.flatMap(TimeTravel.predicateRanges)))
+        else new GraftVersionedMorRelation(spark, baseDir, version, plan)
     }
   }
 
@@ -101,137 +92,8 @@ object GraftVersionedRelation {
       java.sql.Timestamp.valueOf(s.trim).getTime }
 }
 
-/** The log-backed [[FileIndex]]: the resolved `plan` of `version`
-  * (file set + schema, resolved once by the provider); `listFiles`
-  * prunes it per query from the pushed partition and data filters.
-  * Reaches only plain snapshots — [[GraftVersionedRelation.apply]]
-  * routes column-mapped and DV-bound versions to the merge-on-read
-  * relation instead. */
-private[graft] final class GraftVersionedFileIndex(spark: SparkSession,
-    baseDir: String, version: Int, plan: TimeTravel.ScanPlan)
-    extends FileIndex {
-
-  private def dirOf(f: String): String = {
-    val i = f.lastIndexOf('/')
-    if (i < 0) "" else f.substring(0, i)
-  }
-
-  /** The table's partition columns, from the file layout (every data
-    * file lives under `a=v/b=w/…`, the init/append invariant; a
-    * root-level file means the table is unpartitioned). */
-  val partCols: Seq[String] = {
-    val segs = plan.files.head.split('/')
-    segs.iterator.take(segs.length - 1)
-      .map(seg => seg.substring(0, seg.indexOf('='))).toSeq
-  }
-
-  /** Partition columns keep their COMMITTED types (typed layouts:
-    * a DATE or INT partition value casts from its directory text). */
-  override val partitionSchema: StructType =
-    StructType(partCols.map(c =>
-      StructField(c, plan.schema(c).dataType, nullable = false)))
-
-  /** File-content schema: the committed schema minus the partition
-    * columns (which live in directory names, not file data). */
-  val dataSchema: StructType =
-    StructType(plan.schema.fields.filterNot(f => partCols.contains(f.name)))
-
-  private val dataRoot =
-    new Path(new Path(baseDir), "data")
-      .getFileSystem(spark.sessionState.newHadoopConf()) match {
-        case fs => fs.makeQualified(new Path(new Path(baseDir), "data"))
-      }
-
-  override def rootPaths: Seq[Path] = Seq(dataRoot)
-
-  /** One `listStatus` per partition directory, filtered to the
-    * snapshot's files (superseded versions' files share the dirs but
-    * are not in the log's file set) — lazy and cached: computed once
-    * per relation, only when a scan actually plans. */
-  private lazy val statusByFile: Map[String, FileStatus] = {
-    val fs = dataRoot.getFileSystem(spark.sessionState.newHadoopConf())
-    plan.files.groupBy(dirOf)
-      .iterator.flatMap { case (dir, fls) =>
-        val wanted = fls.map(f => f.substring(f.lastIndexOf('/') + 1)).toSet
-        val p = if (dir.isEmpty) dataRoot else new Path(dataRoot, dir)
-        fs.listStatus(p).iterator
-          .filter(st => st.isFile && wanted(st.getPath.getName))
-          .map(st => (if (dir.isEmpty) st.getPath.getName
-            else s"$dir/${st.getPath.getName}") -> st)
-      }.toMap
-  }
-
-  /** Directory text → typed partition value (Catalyst internal form). */
-  private val converters: Seq[String => Any] =
-    partitionSchema.fields.map { f =>
-      f.dataType match {
-        case StringType => (s: String) => UTF8String.fromString(s)
-        case dt => (s: String) =>
-          org.apache.spark.sql.catalyst.expressions.Cast(
-            org.apache.spark.sql.catalyst.expressions.Literal
-              .create(UTF8String.fromString(s), StringType), dt,
-            Some(java.time.ZoneId.systemDefault().getId)).eval(null)
-      }
-    }.toSeq
-
-  private def partitionRow(dir: String): InternalRow =
-    if (partCols.isEmpty) InternalRow.empty
-    else {
-      val segs = dir.split('/')
-      InternalRow.fromSeq(partCols.indices.map { i =>
-        val seg = segs(i)
-        converters(i)(ExternalCatalogUtils.unescapePathName(
-          seg.substring(seg.indexOf('=') + 1)))
-      })
-    }
-
-  override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    // data-column conjuncts → log-stats skipping ([[TimeTravel
-    // .predicateRanges]]; unsupported shapes simply don't prune —
-    // conservative). Partition columns are excluded: their values are
-    // not in file stats, and the directory evaluation below prunes
-    // them exactly, any predicate shape.
-    val kept = plan.kept(dataFilters
-      .flatMap(TimeTravel.predicateRanges)
-      .filterNot(r => partCols.contains(r.col)))
-    // partition-column predicates → exact evaluation per DIRECTORY
-    // tuple (any predicate shape, evaluated once per dir, not per file)
-    val ordinal = partCols.zipWithIndex.toMap
-    val keep: InternalRow => Boolean =
-      if (partitionFilters.isEmpty) _ => true
-      else {
-        val bound = CatalystPredicate.createInterpreted(
-          partitionFilters.reduce(And).transform {
-            case a: AttributeReference =>
-              val i = ordinal.getOrElse(a.name,
-                throw new IllegalStateException(
-                  s"partition filter on non-partition column ${a.name}"))
-              BoundReference(i, partitionSchema.fields(i).dataType,
-                nullable = false)
-          })
-        bound.initialize(0)
-        bound.eval _
-      }
-    kept.groupBy(dirOf).iterator
-      .flatMap { case (dir, fls) =>
-        val row = partitionRow(dir)
-        if (!keep(row)) None
-        else Some(PartitionDirectory(row,
-          fls.flatMap(statusByFile.get).toArray))
-      }.toSeq
-  }
-
-  override def inputFiles: Array[String] =
-    plan.files.map(f => new Path(dataRoot, f).toString).toArray
-
-  override def refresh(): Unit = () // the version is immutable
-
-  override def sizeInBytes: Long = statusByFile.values.map(_.getLen).sum
-}
-
 /** MERGE-ON-READ declarative relation — the read path for snapshot
-  * states a raw-split [[HadoopFsRelation]] cannot represent: versions
+  * states a raw-split `HadoopFsRelation` cannot represent: versions
   * with deletion-vector bindings (positions must anti-join out, or
   * deleted rows resurrect) and versions under an active column mapping
   * (files carry physical names that must project back to the
@@ -255,8 +117,8 @@ private[graft] final class GraftVersionedFileIndex(spark: SparkSession,
   * them above the scan — pruning is a superset optimization, exactly
   * the PushedFilters contract.
   *
-  * At 100 TB: planning is one log resolve plus O(dirs) listings (for
-  * `sizeInBytes`), skipping is metadata-only, and the scan fans out
+  * At 100 TB: planning is one log resolve (`sizeInBytes` sums the
+  * log's file sizes), skipping is metadata-only, and the scan fans out
   * like any parquet read. The relation is the TRANSITIONAL-state
   * reader by design — compaction materializes DVs away and the
   * provider routes back to the codegen fast path. */
@@ -274,9 +136,9 @@ private[graft] final class GraftVersionedMorRelation(spark: SparkSession,
 
   override val schema: StructType = plan.schema
 
-  /** Real bytes (one listing per partition dir, computed once):
-    * keeps the optimizer from broadcasting a large snapshot by
-    * default-size accident. */
+  /** Real bytes (the log's file sizes, summed once): keeps the
+    * optimizer from broadcasting a large snapshot by default-size
+    * accident. */
   override lazy val sizeInBytes: Long = plan.sizeInBytes
 
   /** Skipping is a SUPERSET prune — every filter re-applies above. */
@@ -320,28 +182,30 @@ private[graft] final class GraftVersionedMorRelation(spark: SparkSession,
       case _ => None
     }
 
-  /** The ANALYZED logical plan of this relation's merge-on-read scan,
+  /** The OPTIMIZED logical plan of this relation's merge-on-read scan,
     * file-skipped by `preds` — the [[graft.plans.MorScanRewrite]]
     * hook: the optimizer rule splices this plan (native parquet scans
     * + the DV anti-join, full codegen) in place of the V1 relation,
     * which only remains as the rule-less fallback with its Row
-    * boundary. */
-  /** `cond`: the query's own filter over this relation, remapped onto
+    * boundary.
+    *
+    * `cond`: the query's own filter over this relation, remapped onto
     * the scan's attributes and optimized WITH the subplan — the splice
     * happens in the LATE user-rules batch, after Spark's own pushdown
     * already ran, so the inner optimization is what carries the
     * predicate through the DV anti-join down to the parquet readers.
-    * The subplan must also be the OPTIMIZED plan (not analyzed): the
-    * early batches (hint resolution, subquery cleanup) have already
-    * run on the outer query, and an un-eliminated ResolvedHint would
-    * reach the planner and fail. The subplan holds no MOR relations,
-    * so its own optimization cannot recurse into the rule. */
-  /** `required`: the PARENT's needed columns (None = all) — the splice
-    * runs in the late user-rules batch, AFTER Spark's own ColumnPruning,
-    * so the subplan must carry the projection itself or a narrow query
-    * over a DV-bound version physically reads every column. The select
-    * lands BELOW the inner optimization, which prunes the parquet
-    * ReadSchema down to projection + filter references. */
+    * The subplan must be the OPTIMIZED plan (not analyzed): the early
+    * batches (hint resolution, subquery cleanup) have already run on
+    * the outer query, and an un-eliminated ResolvedHint would reach
+    * the planner and fail. The subplan holds no MOR relations, so its
+    * own optimization cannot recurse into the rule.
+    *
+    * `required`: the PARENT's needed columns (None = all) — the splice
+    * runs AFTER Spark's own ColumnPruning, so the subplan must carry
+    * the projection itself or a narrow query over a DV-bound version
+    * physically reads every column. The select lands BELOW the inner
+    * optimization, which prunes the parquet ReadSchema down to
+    * projection + filter references. */
   private[graft] def logicalScan(preds: Seq[TimeTravel.ColRange],
       cond: Option[org.apache.spark.sql.catalyst.expressions.Expression],
       required: Option[Seq[String]] = None)

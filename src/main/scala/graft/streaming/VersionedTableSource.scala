@@ -147,21 +147,15 @@ class VersionedTableSource(sqlContext: SQLContext, baseDir: String,
       .getOrElse(TimeTravel.pinSchemaVersion(spark, baseDir, pinnedNames,
         TimeTravel.latestVersion(spark, baseDir)))
 
-  /** Committed versions are immutable: their add lists and row counts
-    * cache for the stream's lifetime (one metadata read per version,
-    * however many triggers walk it). */
-  private val addsCache =
-    scala.collection.concurrent.TrieMap.empty[Int, Seq[String]]
-  private val rowsCache = scala.collection.concurrent.TrieMap
-    .empty[Int, Map[String, (Option[Long], Option[Long])]]
-  private def versionAdds(v: Int): Seq[String] =
+  /** Committed versions are immutable: their add lists and recorded
+    * stats cache for the stream's lifetime (one metadata read per
+    * version, however many triggers walk it). */
+  private val addsCache = scala.collection.concurrent.TrieMap
+    .empty[Int, Seq[TimeTravel.AddFile]]
+  private def versionAdds(v: Int): Seq[TimeTravel.AddFile] =
     addsCache.getOrElseUpdate(v,
       TimeTravel.appendWindowAdds(spark, baseDir, v - 1, v,
         Some(pinnedVersion)).head._2)
-  private def versionRows(v: Int)
-      : Map[String, (Option[Long], Option[Long])] =
-    rowsCache.getOrElseUpdate(v,
-      TimeTravel.addRowCounts(spark, baseDir, v).toMap)
   private val cdcUnitsCache = scala.collection.concurrent.TrieMap
     .empty[Int, Seq[TimeTravel.CdcUnit]]
   private def versionCdcUnits(v: Int): Seq[TimeTravel.CdcUnit] =
@@ -174,10 +168,7 @@ class VersionedTableSource(sqlContext: SQLContext, baseDir: String,
     * walk serves row and byte budgets alike. */
   private def unitSizes(v: Int): Seq[(Option[Long], Option[Long])] =
     if (changeFeed) versionCdcUnits(v).map(u => (u.rows, u.bytes))
-    else {
-      val counts = versionRows(v)
-      versionAdds(v).map(f => counts.getOrElse(f, (None, None)))
-    }
+    else versionAdds(v).map(a => (a.rows, a.bytes))
 
   private def posOf(o: OffsetV2): VersionOffset = o match {
     case v: VersionOffset => v
@@ -288,7 +279,7 @@ class VersionedTableSource(sqlContext: SQLContext, baseDir: String,
             pinnedVersion)
         }
       case Some(s) => // an append window (s, e] at FILE granularity
-        val files = Seq.newBuilder[String]
+        val files = Seq.newBuilder[TimeTravel.AddFile]
         if (s.version == e.version) {
           val adds = versionAdds(e.version)
           val from = if (s.complete) adds.size else s.filePos

@@ -172,18 +172,19 @@ class ProtocolSpec extends SparkSpec {
   /** v1's manifest, then every delta in version order, each minus its
     * `#ts=` wall-clock and with the per-write random names normalized:
     * a staged file's token and Spark's job UUID (`T-<i>-part-<n>-U`),
-    * and artifact tokens (`T`). */
+    * artifact tokens (`T`), and each file's `!mtime=` stat (`M`). */
   private def normalizedRecords(t: String): Seq[String] = {
     val log = new java.io.File(s"$t/_graft_log")
     val deltas = log.list().filter(_.endsWith(".delta"))
       .sortBy(_.stripSuffix(".delta").toInt)
     val file = "[0-9a-f]{12}-(\\d+)-part-(\\d+)-[0-9a-f-]{36}".r
     val token = "\\b[0-9a-f]{12}\\b".r
+    val mtime = "!mtime=\\d+".r
     ("1.manifest" +: deltas).toSeq.flatMap { n =>
       val src = scala.io.Source.fromFile(new java.io.File(log, n), "UTF-8")
       try s"== $n" +: src.getLines().filterNot(_.startsWith("#ts="))
-        .map(l => token.replaceAllIn(file.replaceAllIn(l, "T-$1-part-$2-U"),
-          "T")).toList
+        .map(l => token.replaceAllIn(file.replaceAllIn(
+          mtime.replaceAllIn(l, "!mtime=M"), "T-$1-part-$2-U"), "T")).toList
       finally src.close()
     }
   }
