@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.LogFileIndex
+import org.apache.spark.util.SerializableConfiguration
 
 /** VERSIONED copy-on-write table — the minimal Delta-log idea on plain
   * parquet: data files are append-only under `baseDir/data/`, and each
@@ -190,7 +191,7 @@ object TimeTravel {
         if (dirs.length <= threshold)
           dirs.toSeq.flatMap(d => relativeParquetFiles(fs, root, d))
         else {
-          val confW = new SerializableHadoopConf(
+          val confW = new SerializableConfiguration(
             spark.sparkContext.hadoopConfiguration)
           val rootStr = root.toString
           spark.sparkContext
@@ -198,7 +199,7 @@ object TimeTravel {
               math.max(1, math.min(dirs.length / 4, 64)))
             .flatMap { d =>
               val p = new Path(d)
-              relativeParquetFiles(p.getFileSystem(confW.conf),
+              relativeParquetFiles(p.getFileSystem(confW.value),
                 new Path(rootStr), p)
             }.collect().toSeq
         }
@@ -216,14 +217,14 @@ object TimeTravel {
     if (files.size <= threshold)
       files.count(f => fs.delete(new Path(dataDir(baseDir), f), false))
     else {
-      val confW = new SerializableHadoopConf(
+      val confW = new SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration)
       val dataStr = fs.makeQualified(dataDir(baseDir)).toString
       spark.sparkContext
         .parallelize(files, math.max(1, math.min(files.size / 16, 64)))
         .map { f =>
           val p = new Path(s"$dataStr/$f")
-          if (p.getFileSystem(confW.conf).delete(p, false)) 1 else 0
+          if (p.getFileSystem(confW.value).delete(p, false)) 1 else 0
         }.fold(0)(_ + _)
     }
 
@@ -461,12 +462,12 @@ object TimeTravel {
     * essentials: a commit may carry `#txn=<urlenc streamId>:<batchId>`
     * INSIDE its record — atomic with the commit itself, which is the
     * whole point (a side file written after the commit reopens the
-    * crash window it exists to close). An at-least-once writer (a
-    * streaming foreachBatch sink re-delivering a batch after a
-    * crash-restart) asks [[lastCommittedTxn]] whether the batch already
-    * landed and skips it — exactly-once for NON-idempotent commits like
-    * the blind append (the merge sinks are last-write-wins idempotent
-    * and don't need it). */
+    * crash window it exists to close). An at-least-once writer (the
+    * streaming sink re-delivering a batch after a crash-restart) asks
+    * [[lastCommittedTxn]] whether the batch already landed and skips
+    * it — exactly-once for NON-idempotent commits like the blind append
+    * (the merge sinks are last-write-wins idempotent and don't need
+    * it). */
   private def txnLine(txn: (String, Long)): String =
     s"#txn=${java.net.URLEncoder.encode(txn._1, "UTF-8")}:${txn._2}"
 
@@ -1117,22 +1118,6 @@ object TimeTravel {
         st.flatMap(statToken(_, "mtime")))
     }
 
-  /** Hadoop `Configuration` is not `Serializable`; this wrapper ships
-    * it to stats tasks via its own wire format (`write`/`readFields`) —
-    * the standard trick for Hadoop-touching closures. */
-  private class SerializableHadoopConf(
-      @transient var conf: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); conf.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new org.apache.hadoop.conf.Configuration(false)
-      conf.readFields(in)
-    }
-  }
-
   /** Footer reads distribute above this many added files: a normal
     * micro-batch's handful of footers is cheaper on the driver than a
     * job launch, but a backfill-scale commit (thousands of files) must
@@ -1156,13 +1141,13 @@ object TimeTravel {
       }.toMap
     else {
       val confW =
-        new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+        new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
       val root = fs.makeQualified(dataDir(baseDir)).toString
       spark.sparkContext
         .parallelize(adds, math.max(1, math.min(adds.size / 8, 64)))
         .map { f =>
           f -> encodeStatsPayload(
-            footerColumnStats(confW.conf, new Path(s"$root/$f")))
+            footerColumnStats(confW.value, new Path(s"$root/$f")))
         }
         .collect()
         .toMap
@@ -3987,8 +3972,9 @@ object TimeTravel {
     * (one small file alone gains nothing from a rewrite), or any
     * DV-bound file (materialization rides along, whatever the size —
     * the REORG PURGE contract [[compact]] also honors). File sizes
-    * come from one `listStatus` per candidate dir — O(dirs) metadata
-    * calls, no data access before the rewrite itself. Content is
+    * come from the log's `!bytes=` tokens — no filesystem call before
+    * the rewrite itself; only a dir holding a file whose record
+    * predates the token is listed, once. Content is
     * identical by construction (`#op=compact`, dataChange=false to the
     * feeds); older versions keep their original files. */
   def compactSmallFiles(spark: SparkSession, baseDir: String,
@@ -4004,11 +3990,16 @@ object TimeTravel {
     val byDir = prevSnap.files.groupBy(dirOf)
     val doomed = byDir.toSeq.flatMap { case (dir, fls) =>
       val dvHere = fls.filter(prevSnap.dvs.contains)
-      val dirPath = if (dir.isEmpty) dataDir(baseDir)
-        else new Path(dataDir(baseDir), dir)
-      val sizes = fs.listStatus(dirPath).iterator.filter(_.isFile)
-        .map(st => (if (dir.isEmpty) st.getPath.getName
-          else s"$dir/${st.getPath.getName}") -> st.getLen).toMap
+      val logged = fls.flatMap(f => prevSnap.stats.get(f)
+        .flatMap(statToken(_, "bytes")).map(f -> _)).toMap
+      // a record written before `!bytes=` was logged: list the dir once
+      val sizes = if (logged.size == fls.size) logged else {
+        val dirPath = if (dir.isEmpty) dataDir(baseDir)
+          else new Path(dataDir(baseDir), dir)
+        fs.listStatus(dirPath).iterator.filter(_.isFile)
+          .map(st => (if (dir.isEmpty) st.getPath.getName
+            else s"$dir/${st.getPath.getName}") -> st.getLen).toMap
+      }
       val small = fls.filter(f => sizes.get(f).exists(_ < minFileBytes))
       val rewrite = (small ++ dvHere).distinct
       if (small.size >= minSmallFiles || dvHere.nonEmpty) rewrite
@@ -4626,11 +4617,11 @@ object TimeTravel {
     if (pairs.size <= threshold)
       pairs.foreach(one(fs.getConf))
     else {
-      val confW = new SerializableHadoopConf(
+      val confW = new SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration)
       spark.sparkContext
         .parallelize(pairs, math.max(1, math.min(pairs.size / 16, 64)))
-        .foreach(p => one(confW.conf)(p))
+        .foreach(p => one(confW.value)(p))
     }
   }
 

@@ -787,8 +787,9 @@ object ParityQueries {
     * table-create + two genuine merges) drives an Update-mode
     * last-event-per-user aggregation (max over the (ts, event_id,
     * event_type) struct — a total order, ts ties broken by event_id)
-    * into [[graft.streaming.EventsStream.replayToVersioned]], one
-    * [[graft.operators.TimeTravel]] COMMIT per batch — v1 = the first
+    * into the versioned sink ([[graft.streaming.VersionedTableSink]] in
+    * `upsert` mode, via [[graft.streaming.VersionedStream.replayToTable]]),
+    * one [[graft.operators.TimeTravel]] COMMIT per batch — v1 = the first
     * batch's init, v2/v3 = the later batches' copy-on-write upserts. The
     * LATEST version is read back (manifest-pruned, never a directory
     * listing). */
@@ -806,8 +807,9 @@ object ParityQueries {
         col("last.event_id").as("last_event_id"),
         col("last.event_type").as("last_type"),
         pmod(col("user_id"), lit(8L)).cast("string").as("part"))
-    EventsStream.replayToVersioned(agg, tableDir, ck,
-      keyCol = "user_id", partCol = "part", statePartitions = Some(8))
+    graft.streaming.VersionedStream.replayToTable(agg, tableDir, ck,
+      partCol = "part", mode = "upsert", keyCol = Some("user_id"),
+      outputMode = OutputMode.Update(), statePartitions = Some(8))
     TimeTravel.readVersion(spark, tableDir,
         TimeTravel.latestVersion(spark, tableDir))
       .filter(col("user_id") >= 0)
@@ -827,19 +829,20 @@ object ParityQueries {
               ORDER BY ts DESC, event_id DESC) AS rn FROM events)
       WHERE rn = 1"""
 
-  /** Streaming upsert sink ([[streamLastPerUser]], the same versioned
-    * path as q161): the oracle recomputes the final last-write-wins state
-    * from the raw log, so batch sequencing, merge idempotency, and the
-    * aggregation's total order all hash-check. */
+  /** Streaming upsert into the versioned sink ([[streamLastPerUser]],
+    * the same path as q161): the oracle recomputes the final
+    * last-write-wins state from the raw log, so batch sequencing, merge
+    * idempotency, and the aggregation's total order all hash-check. */
   val q136 = Q("q136_stream_upsert", streamLastPerUser,
     Some(lastPerUserOracle))
 
-  /** Streaming ingest into the VERSIONED table ([[streamLastPerUser]]):
-    * the stream's history is time-travelable from manifests, and the
-    * latest version verifies against the from-raw-log last-write-wins
-    * oracle — batch sequencing, per-commit manifest integrity, and the
-    * merge arithmetic all hash-check; an intermediate version leaking
-    * into the final manifest (or a lost commit) shifts rows.
+  /** Streaming ingest into the VERSIONED table through its one sink
+    * ([[streamLastPerUser]]): the stream's history is time-travelable
+    * from manifests, and the latest version verifies against the
+    * from-raw-log last-write-wins oracle — batch sequencing, per-commit
+    * manifest integrity, and the merge arithmetic all hash-check; an
+    * intermediate version leaking into the final manifest (or a lost
+    * commit) shifts rows.
     * StreamingSpec additionally proves the intermediate versions stay
     * readable and a fresh-checkpoint re-replay converges to the same
     * content. */
@@ -847,7 +850,8 @@ object ParityQueries {
     Some(lastPerUserOracle))
 
   /** APPEND-ONLY streaming ingest into the versioned table
-    * ([[graft.streaming.EventsStream.replayToVersionedAppend]] →
+    * ([[graft.streaming.VersionedTableSink]] in `append` mode, via
+    * [[graft.streaming.VersionedStream.replayToTable]] →
     * [[graft.operators.TimeTravel.append]]): the raw event stream lands
     * one blind append COMMIT per micro-batch — no merge, no partition
     * rewrite, per-trigger cost independent of table size (the
@@ -872,7 +876,7 @@ object ParityQueries {
       val src = EventsStream
         .fromParquetDir(spark, tmp, maxFilesPerTrigger = Some(3))
         .withColumn("part", pmod(col("user_id"), lit(8L)).cast("string"))
-      EventsStream.replayToVersionedAppend(src, tableDir, ck,
+      graft.streaming.VersionedStream.replayToTable(src, tableDir, ck,
         partCol = "part")
       val latest = TimeTravel.latestVersion(spark, tableDir)
       val fragmented = TimeTravel.filesAt(spark, tableDir, latest)
@@ -891,15 +895,15 @@ object ParityQueries {
   )
 
   /** DECLARATIVE versioned streaming sink
-    * ([[graft.streaming.VersionedTableSink]] — q164's append-ingest
-    * contract through `writeStream.format("graft-versioned")` instead
-    * of a foreachBatch helper): the raw event stream lands one blind
-    * append COMMIT per micro-batch with the (streamId, batchId) txn
-    * marker inside each record, exactly-once under re-delivery, zero
-    * imperative glue. Hash-checks every event row against the raw
-    * table (a lost or double-delivered batch shifts rows) with the
-    * in-band multi-commit verdict; exactly-once restart recovery and
-    * the upsert mode are VersionedSourceSpec's. */
+    * ([[graft.streaming.VersionedTableSink]], the one sink q164 also
+    * lands through, reached as `writeStream.format("graft-versioned")`):
+    * the raw event stream lands one blind append COMMIT per micro-batch
+    * with the (streamId, batchId) txn marker inside each record,
+    * exactly-once under re-delivery, zero imperative glue. Hash-checks
+    * every event row against the raw table (a lost or double-delivered
+    * batch shifts rows) with the in-band multi-commit verdict;
+    * exactly-once restart recovery and the upsert mode are
+    * VersionedSourceSpec's. */
   val q176 = Q(
     "q176_stream_sink_versioned",
     (spark, dir) => {

@@ -1453,7 +1453,8 @@ object PipelineQueries {
     * feed (`sinceVersion = 1`, two commits per trigger), an Update-mode
     * per-returnflag totals aggregation runs on the stream, and each
     * micro-batch MERGEs as its own commit into a SILVER versioned table
-    * ([[graft.streaming.EventsStream.replayToVersioned]]) — bronze
+    * ([[graft.streaming.VersionedTableSink]] in `upsert` mode, via
+    * [[graft.streaming.VersionedStream.replayToTable]]) — bronze
     * history in, silver history out, both time-travelable, no batch
     * glue anywhere. The silver latest version's totals must equal the
     * batch aggregation of exactly the appended linenumbers (the init
@@ -1476,8 +1477,9 @@ object PipelineQueries {
           sum(col("l_orderkey")).as("sum_orderkey"))
         .select(col("l_returnflag"), col("n_rows"), col("sum_qty"),
           col("sum_orderkey"), col("l_returnflag").as("part"))
-      graft.streaming.EventsStream.replayToVersioned(agg, silver, ck,
-        keyCol = "l_returnflag", partCol = "part",
+      graft.streaming.VersionedStream.replayToTable(agg, silver, ck,
+        partCol = "part", mode = "upsert", keyCol = Some("l_returnflag"),
+        outputMode = org.apache.spark.sql.streaming.OutputMode.Update(),
         statePartitions = Some(8))
       val commits = TimeTravel.latestVersion(spark, silver)
       TimeTravel.readVersion(spark, silver, commits)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -419,8 +417,8 @@ object EventsStream {
     * creation): state-store setup cost is per-partition-per-batch, so a
     * replay with a few thousand keys wants far fewer than the session's
     * shuffle partitions (32→8 halves the replay wall-clock), while a real
-    * deployment sizes it to key cardinality. Session conf is restored
-    * after the stream finishes.
+    * deployment sizes it to key cardinality. The caller's session conf
+    * is restored as soon as the query has started.
     *
     * `noDataBatch = false` skips the trailing empty micro-batch Spark runs
     * after the watermark advances. That batch exists to EMIT results whose
@@ -466,181 +464,42 @@ object EventsStream {
         .outputMode(OutputMode.Append())
     }
 
-  /** One micro-batch's commit cost: foreachBatch wall time on the
-    * driver, and whether the batch actually committed table work
-    * (non-empty) or was skipped. */
-  final case class CommitTiming(batchId: Long, millis: Long,
-      committed: Boolean)
-
-  private def newTimings =
-    new java.util.concurrent.ConcurrentLinkedQueue[CommitTiming]()
-
-  private def timed(q: java.util.concurrent.ConcurrentLinkedQueue[CommitTiming],
-      batchId: Long)(body: => Boolean): Unit = {
-    val t0 = System.nanoTime()
-    val committed = body
-    q.add(CommitTiming(batchId, (System.nanoTime() - t0) / 1000000L,
-      committed))
-    ()
-  }
-
-  /** Streaming ingest as VERSIONED commits
-    * ([[graft.operators.TimeTravel]]): the streaming→lakehouse pattern
-    * where an Update-mode aggregation emits only the keys each batch
-    * changed and every non-empty micro-batch lands as its own
-    * last-write-wins upsert COMMIT under `foreachBatch` — the first batch
-    * inits v1, each later one commits v(n+1), rewriting only the
-    * partitions holding changed keys. The stream's WHOLE HISTORY stays
-    * time-travelable from the per-commit manifests and a reader can pin
-    * a version while ingest continues (the streaming-lakehouse contract
-    * a mutable-directory sink cannot give). The upstream aggregation
-    * carries the TOTAL per-key value, so a replayed trigger (or a
-    * fresh-checkpoint replay against an existing table) re-commits the
-    * same rows — the CONTENT converges identically; only the commit
-    * count reflects the replay, which is exactly what a commit log
-    * should record.
-    *
-    * Returns per-micro-batch COMMIT TELEMETRY — the wall time each
-    * foreachBatch commit took: replay totals alone can't show where a
-    * streaming-lakehouse sink spends its time, and the commit path is
-    * where table-format design flaws (full-listing discovery, manifest
-    * rewrite growth) would surface as per-trigger latency creep.
-    * foreachBatch runs on the driver, so a driver-side queue suffices —
-    * no accumulator needed. */
-  def replayToVersioned(df: DataFrame, baseDir: String,
-      checkpointDir: String, keyCol: String, partCol: String,
-      statePartitions: Option[Int] = None): Seq[CommitTiming] = {
-    val timings = newTimings
-    replay(df, statePartitions, noDataBatch = true) { ws =>
-      ws.outputMode(OutputMode.Update())
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          timed(timings, batchId) {
-            // one materialization per trigger: the commit path's
-            // gate/discovery/write actions all read the checkpointed
-            // blocks instead of re-running the stateful aggregation
-            // (state-store reads included) per action
-            val b = batch.localCheckpoint()
-            if (b.isEmpty) false
-            else {
-              import graft.operators.TimeTravel
-              if (TimeTravel.latestVersion(b.sparkSession, baseDir) == 0)
-                TimeTravel.init(b.sparkSession, baseDir, b, partCol)
-              else
-                TimeTravel.upsert(b.sparkSession, baseDir, b,
-                  keyCol, partCol)
-              true
-            }
-          }
-        }
-    }
-    timings.asScala.toSeq
-  }
-
-  /** Streaming ingest as APPEND-ONLY versioned commits
-    * ([[graft.operators.TimeTravel.append]]): the insert-only twin of
-    * [[replayToVersioned]] for streams that never update keys — the raw
-    * event firehose, the overwhelmingly common ingest shape. Every
-    * non-empty micro-batch lands as a blind append commit: no discovery
-    * join, no partition rewrite, commit cost O(files written) and
-    * INDEPENDENT of table size — where the merge sink pays a
-    * partition-granular copy-on-write per trigger. The price is
-    * append's contract: duplicate keys are upstream's business, and
-    * small files accumulate per partition until
-    * [[graft.operators.TimeTravel.compact]] folds them into a new
-    * commit (history intact).
-    *
-    * Exactly-once: foreachBatch delivery is AT-LEAST-once (a crash
-    * between the table commit and the streaming checkpoint re-delivers
-    * the batch on restart), and a blind append — unlike the
-    * last-write-wins merge sinks — is not idempotent, so each commit
-    * carries its (streamId=checkpointDir, batchId) transaction marker
-    * INSIDE the commit record and re-delivered batches at or below the
-    * log's recorded high-water mark are skipped — the Delta streaming
-    * sink's txn discipline. The watermark is read once at stream start
-    * (recovery time), never on the commit path. */
-  def replayToVersionedAppend(df: DataFrame, baseDir: String,
-      checkpointDir: String, partCol: String,
-      statePartitions: Option[Int] = None): Seq[CommitTiming] = {
-    import graft.operators.TimeTravel
-    val timings = newTimings
-    val spark = df.sparkSession
-    // recovery: highest batchId this (table, stream) pair already
-    // committed — re-delivered batches at/below it are duplicates
-    val committedUpTo = new java.util.concurrent.atomic.AtomicLong(
-      if (new java.io.File(baseDir).exists)
-        TimeTravel.lastCommittedTxn(spark, baseDir, checkpointDir)
-          .getOrElse(-1L)
-      else -1L)
-    replay(df, statePartitions, noDataBatch = true) { ws =>
-      ws.outputMode(OutputMode.Append())
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          timed(timings, batchId) {
-            // NO pre-checkpoint here (unlike the stateful-upstream merge
-            // sinks): an append stream's batch is a stateless scan, so
-            // the emptiness probe is a limit-1 read and append's own
-            // internal checkpoint materializes the rows exactly once
-            if (batch.isEmpty || batchId <= committedUpTo.get()) false
-            else {
-              val txn = Some(checkpointDir -> batchId)
-              if (TimeTravel.latestVersion(batch.sparkSession, baseDir) == 0)
-                TimeTravel.init(batch.sparkSession, baseDir, batch,
-                  partCol, txn)
-              else
-                TimeTravel.append(batch.sparkSession, baseDir, batch,
-                  partCol, txn)
-              committedUpTo.set(batchId)
-              true
-            }
-          }
-        }
-    }
-    timings.asScala.toSeq
-  }
-
-  /** The shared replay harness: conf handling (state sizing, no-data-batch
-    * suppression, state-store provider, restoration) around an
-    * AvailableNow run of whatever sink `configure` sets up. */
-  private def replay(df: DataFrame, statePartitions: Option[Int],
+  /** The shared replay harness: an AvailableNow run of whatever sink
+    * `configure` sets up, under the replay's confs (state sizing,
+    * no-data-batch suppression, state-store provider). They are set on
+    * the caller's session only around `start()`: a streaming query runs
+    * on a clone of its session taken as it starts (`StreamExecution`
+    * clones it), so the run keeps them while the caller's own values
+    * are back before the first batch — another query on the session
+    * never sees the replay's. */
+  private[streaming] def replay(df: DataFrame, statePartitions: Option[Int],
       noDataBatch: Boolean, stateStoreProvider: Option[String] = None)(
       configure: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]
         => org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
     val spark = df.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ssKey = "spark.sql.streaming.stateStore.providerClass"
     // RocksDB commits upload a FULL state snapshot per partition per
     // batch by default; changelog checkpointing writes only the batch's
     // delta (snapshots move to the background maintenance cadence) —
     // the recommended production configuration for the provider, and
     // results are provider-invariant by contract (q122's oracle and
     // StreamingSpec's provider-identity test both pin it).
-    val clKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    val prev = spark.conf.getOption(key)
-    val prevNd = spark.conf.getOption(ndKey)
-    val prevSs = spark.conf.getOption(ssKey)
-    val prevCl = spark.conf.getOption(clKey)
-    statePartitions.foreach(n => spark.conf.set(key, n))
-    if (!noDataBatch) spark.conf.set(ndKey, false)
-    stateStoreProvider.foreach(p => spark.conf.set(ssKey, p))
-    if (stateStoreProvider.contains(RocksDbProvider))
-      spark.conf.set(clKey, true)
-    try {
-      val q = configure(df.writeStream)
+    val confs = Seq(
+      statePartitions.map("spark.sql.shuffle.partitions" -> _.toString),
+      Option.when(!noDataBatch)(
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"),
+      stateStoreProvider.map(
+        "spark.sql.streaming.stateStore.providerClass" -> _),
+      Option.when(stateStoreProvider.contains(RocksDbProvider))(
+        "spark.sql.streaming.stateStore.rocksdb." +
+          "changelogCheckpointing.enabled" -> "true")).flatten
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val q =
+      try configure(df.writeStream)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally {
-      if (statePartitions.isDefined)
-        prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-      if (!noDataBatch)
-        prevNd.fold(spark.conf.unset(ndKey))(v => spark.conf.set(ndKey, v))
-      if (stateStoreProvider.isDefined)
-        prevSs.fold(spark.conf.unset(ssKey))(v => spark.conf.set(ssKey, v))
-      if (stateStoreProvider.contains(RocksDbProvider))
-        prevCl.fold(spark.conf.unset(clKey))(v => spark.conf.set(clKey, v))
-    }
+      finally prev.foreach { case (k, v) =>
+        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    q.awaitTermination()
   }
 }

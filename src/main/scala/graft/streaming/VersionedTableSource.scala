@@ -356,26 +356,31 @@ object VersionOffset {
   }
 }
 
-/** V1 streaming SINK into the versioned table — the declarative twin of
-  * the `foreachBatch` helpers ([[EventsStream.replayToVersionedAppend]]/
-  * [[EventsStream.replayToVersioned]]), so a pipeline writes
-  * `df.writeStream.format("graft-versioned")` with zero imperative glue
+/** V1 streaming SINK into the versioned table — the one path from a
+  * micro-batch to a versioned commit: a pipeline writes
+  * `df.writeStream.format("graft-versioned")` (or, for a bounded
+  * replay, [[VersionedStream.replayToTable]]) with zero imperative glue
   * (the Delta sink shape). Every non-empty micro-batch lands as its own
-  * commit:
+  * commit; an empty one commits nothing, and the first commit inits
+  * the table:
   *   - `mode = append` (default): blind-append commits — no discovery
   *     join, per-trigger cost independent of table size. Exactly-once:
   *     each commit carries a `(streamId, batchId)` txn marker INSIDE
   *     its record, the sink recovers the high-water mark from the log
-  *     at start, and re-delivered batches at or below it are skipped —
-  *     append is not idempotent, so the marker is load-bearing.
+  *     (through the table path's Hadoop `FileSystem`, so `file:` and
+  *     remote paths recover too) at start, and re-delivered batches at
+  *     or below it are skipped — append is not idempotent, so the
+  *     marker is load-bearing.
   *   - `mode = upsert` (`keyCol` required): last-write-wins MERGE
   *     commits for Update-mode aggregations whose state carries per-key
   *     TOTALS — a re-delivered batch re-merges the same rows, so
   *     content converges without a marker (idempotent by construction).
-  * `streamId` defaults to the query's `checkpointLocation`; the batch
+  * `streamId` defaults to the query's `checkpointLocation`. The batch
   * DataFrame is rebuilt from the micro-batch's physical plan
-  * ([[StreamingDataFrame.asBatch]] — the ForeachBatchSink bridge),
-  * since a V1 sink's input cannot be re-planned directly. */
+  * ([[StreamingDataFrame.asBatch]] — what Spark's `ForeachBatchSink`
+  * does too), since a V1 sink's input cannot be re-planned directly,
+  * and the commit runs on that batch's session: the stream's clone,
+  * carrying the confs the query started with. */
 class VersionedTableSink(spark: SparkSession, baseDir: String,
     partCol: String, mode: String, keyCol: Option[String],
     streamId: String) extends Sink {
@@ -396,13 +401,14 @@ class VersionedTableSink(spark: SparkSession, baseDir: String,
     val rebatch = StreamingDataFrame.asBatch(data)
     val batch = if (mode == "append") rebatch else rebatch.localCheckpoint()
     if (batch.isEmpty) return
+    val session = batch.sparkSession
     val txn = if (mode == "append") Some(streamId -> batchId) else None
-    if (TimeTravel.latestVersion(spark, baseDir) == 0)
-      TimeTravel.init(spark, baseDir, batch, partCol, txn)
+    if (TimeTravel.latestVersion(session, baseDir) == 0)
+      TimeTravel.init(session, baseDir, batch, partCol, txn)
     else if (mode == "append")
-      TimeTravel.append(spark, baseDir, batch, partCol, txn)
+      TimeTravel.append(session, baseDir, batch, partCol, txn)
     else
-      TimeTravel.upsert(spark, baseDir, batch, keyCol.get, partCol)
+      TimeTravel.upsert(session, baseDir, batch, keyCol.get, partCol)
     if (mode == "append") committedUpTo.set(batchId)
   }
 
@@ -662,8 +668,8 @@ object VersionedTableSourceProvider {
   }
 }
 
-/** Reader-side convenience mirroring the sink helpers in
-  * [[EventsStream]]. */
+/** Convenience entry points for streaming from and into a versioned
+  * table. */
 object VersionedStream {
 
   /** `readStream` over a versioned table — see [[VersionedTableSource]]
@@ -692,22 +698,24 @@ object VersionedStream {
     r.load()
   }
 
-  /** Replay `df` to completion into a versioned table through the
-    * declarative sink format — see [[VersionedTableSink]] for mode
-    * semantics. */
+  /** Replay `df` to completion into a versioned table through
+    * [[VersionedTableSink]], one commit per non-empty micro-batch — see
+    * there for the `append`/`upsert` modes. Runs on the same bounded
+    * replay harness as the memory and Parquet replays
+    * ([[EventsStream.replayToMemory]]); `statePartitions` sizes a
+    * stateful upstream's shuffle as it does there. */
   def replayToTable(df: DataFrame, baseDir: String, checkpointDir: String,
       partCol: String, mode: String = "append",
       keyCol: Option[String] = None,
-      outputMode: OutputMode = OutputMode.Append()): Unit = {
-    val w = df.writeStream
-      .format(classOf[VersionedTableSourceProvider].getName)
-      .outputMode(outputMode)
-      .option("path", baseDir)
-      .option("partCol", partCol)
-      .option("mode", mode)
-      .option("checkpointLocation", checkpointDir)
-    keyCol.foreach(k => w.option("keyCol", k))
-    w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start().awaitTermination()
-  }
+      outputMode: OutputMode = OutputMode.Append(),
+      statePartitions: Option[Int] = None): Unit =
+    EventsStream.replay(df, statePartitions, noDataBatch = true) { ws =>
+      keyCol.foreach(k => ws.option("keyCol", k))
+      ws.format(classOf[VersionedTableSourceProvider].getName)
+        .outputMode(outputMode)
+        .option("path", baseDir)
+        .option("partCol", partCol)
+        .option("mode", mode)
+        .option("checkpointLocation", checkpointDir)
+    }
 }

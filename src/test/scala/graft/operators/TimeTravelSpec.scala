@@ -835,6 +835,38 @@ class TimeTravelSpec extends SparkSpec {
     assert(appendOpens <= 2, s"append opened its base record $appendOpens times")
   }
 
+  test("compactSmallFiles takes file sizes from the log's !bytes= " +
+      "tokens: no listStatus under data/") {
+    val dir = tmpDir("tt-compact-sizes")
+    TimeTravel.init(spark, dir, (0 until 600).map(i =>
+        (i.toLong, s"p${i % 2}", i * 1.0)).toDF("id", "part", "v")
+      .repartition(1), "part")
+    // two one-row stragglers land in p1 only
+    (0 until 2).foreach { s =>
+      TimeTravel.append(spark, dir,
+        Seq((1000L + s, "p1", 0.0)).toDF("id", "part", "v"), "part")
+    }
+    val prev = TimeTravel.latestVersion(spark, dir)
+    val before = TimeTravel.filesAt(spark, dir, prev).toSet
+    def size(f: String) = new java.io.File(s"$dir/data/$f").length()
+    val thr = before.map(size).max / 2
+    val small = before.filter(size(_) < thr)
+    assert(small.size === 2 && small.forall(_.startsWith("part=p1/")))
+    val (lists, v) = OpenCountingFileSystem.listings(spark, s"$dir/data") {
+      TimeTravel.compactSmallFiles(spark, dir, "part", thr)
+    }
+    assert(lists === 0, s"compactSmallFiles listed $lists times")
+    assert(v === prev + 1)
+    // exactly the undersized files fold, into one new p1 file; the
+    // right-sized files carry over by name
+    val after = TimeTravel.filesAt(spark, dir, v).toSet
+    assert(before -- small subsetOf after)
+    assert((after -- before).toSeq.map(_.takeWhile(_ != '/')) ===
+      Seq("part=p1"))
+    assert(rows(TimeTravel.readVersion(spark, dir, v)) ===
+      rows(TimeTravel.readVersion(spark, dir, prev)))
+  }
+
   test("snapshotDiff across versions from manifests alone matches the applied batches") {
     val dir = stage()
     TimeTravel.upsert(spark, dir,

@@ -458,7 +458,7 @@ class StreamingSpec extends SparkSpec {
     assert(tws.count(_._1 === 1L) === 2)
   }
 
-  test("replayToVersioned: one commit per batch, the latest version equals the batch " +
+  test("replayToTable: one commit per batch, the latest version equals the batch " +
       "last-per-key, and a fresh-checkpoint re-replay converges to the same content") {
     import spark.implicits._
     val srcDir = tmpDir("graft-versioned-src")
@@ -481,24 +481,25 @@ class StreamingSpec extends SparkSpec {
       .select(col("user_id"), col("last.ts").as("last_ts"),
         col("last.event_type").as("last_type"),
         pmod(col("user_id"), lit(2L)).cast("string").as("part"))
+    import graft.operators.TimeTravel
+    val vDir = tmpDir("graft-versioned-table")
+    def upsertReplay(ck: String): Unit = VersionedStream.replayToTable(
+      agg(srcDir), vDir, ck, partCol = "part", mode = "upsert",
+      keyCol = Some("user_id"), outputMode = OutputMode.Update())
+    def appendReplay(dir: String, ck: String): Unit =
+      VersionedStream.replayToTable(
+        EventsStream.fromParquetDir(spark, srcDir, maxFilesPerTrigger = Some(1))
+          .withColumn("part", pmod(col("user_id"), lit(2L)).cast("string")),
+        dir, ck, partCol = "part")
+    def ops(dir: String): Seq[String] =
+      TimeTravel.history(spark, dir).reverse.flatMap(_.op)
     // VERSIONED sink: one commit per micro-batch, and the INTERMEDIATE
     // version stays readable — batch 1's state before user 1's purchase
     // and user 3's arrival
-    import graft.operators.TimeTravel
-    val vDir = tmpDir("graft-versioned-table")
-    val t0 = System.nanoTime()
-    val timings = EventsStream.replayToVersioned(agg(srcDir), vDir,
-      tmpDir("ck1"), keyCol = "user_id", partCol = "part")
-    val wallMs = (System.nanoTime() - t0) / 1000000L
+    upsertReplay(tmpDir("ck1"))
     assert(TimeTravel.latestVersion(spark, vDir) === 2)
-    // commit telemetry: one entry per foreachBatch invocation, exactly
-    // the committing batches flagged, and the measured commit time is a
-    // real, bounded share of the replay wall time
-    assert(timings.count(_.committed) === 2)
-    assert(timings.map(_.batchId).distinct.size === timings.size)
-    assert(timings.forall(_.millis >= 0))
-    assert(timings.filter(_.committed).map(_.millis).sum > 0)
-    assert(timings.map(_.millis).sum <= wallMs)
+    // the log records one commit per non-empty batch: the first inits
+    assert(ops(vDir) === Seq("init", "upsert"))
     def vstate(n: Int): Set[(Long, String)] =
       TimeTravel.readVersion(spark, vDir, n)
         .select("user_id", "last_type").as[(Long, String)].collect().toSet
@@ -508,8 +509,7 @@ class StreamingSpec extends SparkSpec {
     // re-replay the whole source with a FRESH checkpoint against the
     // EXISTING table: every batch re-commits as an upsert, the latest
     // content is unchanged, and the earlier versions stay as they were
-    EventsStream.replayToVersioned(agg(srcDir), vDir, tmpDir("ck2"),
-      keyCol = "user_id", partCol = "part")
+    upsertReplay(tmpDir("ck2"))
     assert(TimeTravel.latestVersion(spark, vDir) > 2)
     assert(vstate(TimeTravel.latestVersion(spark, vDir)) === expected)
     assert(vstate(1) === Set(1L -> "view", 2L -> "click"))
@@ -518,12 +518,8 @@ class StreamingSpec extends SparkSpec {
     // every source row lands exactly once — no merge, no dedup (4 events
     // survive, where the upsert sink keeps 3 last-per-key rows)
     val aDir = tmpDir("graft-append-table")
-    val rawSrc = EventsStream
-      .fromParquetDir(spark, srcDir, maxFilesPerTrigger = Some(1))
-      .withColumn("part", pmod(col("user_id"), lit(2L)).cast("string"))
-    val at = EventsStream.replayToVersionedAppend(rawSrc, aDir,
-      tmpDir("ck4"), partCol = "part")
-    assert(at.count(_.committed) === 2)
+    appendReplay(aDir, tmpDir("ck4"))
+    assert(ops(aDir) === Seq("init", "append"))
     assert(TimeTravel.latestVersion(spark, aDir) === 2)
     assert(TimeTravel.readVersion(spark, aDir, 2).count() === 4)
     assert(TimeTravel.readVersion(spark, aDir, 1).count() === 2) // batch 1 only
@@ -539,9 +535,9 @@ class StreamingSpec extends SparkSpec {
     // CRASH-WINDOW recovery: the table already holds batch 0's commit
     // (it landed, the streaming checkpoint didn't — the at-least-once
     // gap) — the restarted stream must SKIP the re-delivered batch via
-    // the txn watermark, not append it twice
-    val rDir = tmpDir("graft-append-recover")
-    val rck = tmpDir("ck5")
+    // the txn watermark, not append it twice. Once with a plain path,
+    // once with a `file:`-qualified one: the mark is read through the
+    // table path's Hadoop FileSystem, whatever its scheme.
     val b0 = Seq(
         (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "view"),
         (2L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 2L, "click"))
@@ -551,20 +547,22 @@ class StreamingSpec extends SparkSpec {
       .withColumn("value", lit(null).cast("double"))
       .withColumn("props", lit(null).cast("string"))
       .withColumn("part", pmod(col("user_id"), lit(2L)).cast("string"))
-    TimeTravel.init(spark, rDir, b0, "part", txn = Some(rck -> 0L))
-    val rt = EventsStream.replayToVersionedAppend(
-      EventsStream.fromParquetDir(spark, srcDir, maxFilesPerTrigger = Some(1))
-        .withColumn("part", pmod(col("user_id"), lit(2L)).cast("string")),
-      rDir, rck, partCol = "part")
-    assert(rt.count(_.committed) === 1) // batch 0 skipped, batch 1 landed
-    assert(TimeTravel.latestVersion(spark, rDir) === 2)
-    assert(TimeTravel.readVersion(spark, rDir, 2).count() === 4) // no dups
-    assert(TimeTravel.readVersion(spark, rDir, 2)
-      .select("event_id").as[Long].collect().sorted.toSeq
-      === Seq(1L, 2L, 3L, 4L))
+    for (rDir <- Seq(tmpDir("graft-append-recover"),
+        "file:" + tmpDir("graft-append-recover-qualified"))) {
+      val rck = tmpDir("ck5")
+      TimeTravel.init(spark, rDir, b0, "part", txn = Some(rck -> 0L))
+      appendReplay(rDir, rck)
+      // batch 0 skipped, batch 1 landed
+      assert(ops(rDir) === Seq("init", "append"), rDir)
+      assert(TimeTravel.latestVersion(spark, rDir) === 2)
+      assert(TimeTravel.readVersion(spark, rDir, 2).count() === 4) // no dups
+      assert(TimeTravel.readVersion(spark, rDir, 2)
+        .select("event_id").as[Long].collect().sorted.toSeq
+        === Seq(1L, 2L, 3L, 4L))
+    }
   }
 
-  test("replayToVersioned: a stream whose batches are all empty creates no table and flags no commit") {
+  test("replayToTable: a stream whose batches are all empty creates no table and records no commit") {
     import spark.implicits._
     import graft.operators.TimeTravel
     val srcDir = tmpDir("graft-versioned-empty-src")
@@ -577,9 +575,61 @@ class StreamingSpec extends SparkSpec {
       .filter(col("user_id") < 0)
       .withColumn("part", pmod(col("user_id"), lit(2L)).cast("string"))
     val vDir = tmpDir("graft-versioned-empty")
-    val timings = EventsStream.replayToVersioned(none, vDir,
-      tmpDir("ck-empty"), keyCol = "user_id", partCol = "part")
-    assert(timings.nonEmpty && timings.forall(!_.committed))
+    val ck = tmpDir("ck-empty")
+    VersionedStream.replayToTable(none, vDir, ck, partCol = "part",
+      mode = "upsert", keyCol = Some("user_id"),
+      outputMode = OutputMode.Update())
+    // the stream did run its batch; the sink committed nothing
+    assert(new java.io.File(s"$ck/commits/0").exists)
     assert(TimeTravel.latestVersion(spark, vDir) === 0)
+    assert(TimeTravel.history(spark, vDir).isEmpty)
+  }
+
+  test("replay sets its confs only around start(): the query keeps them, " +
+      "the caller has its own back while the query runs") {
+    import spark.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val callerValue = spark.conf.get(key)
+    assert(callerValue != "3")
+    val srcDir = tmpDir("conf-window-src")
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "view"),
+        (2L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 2L, "click"))
+      .toDF("event_id", "ts", "user_id", "event_type")
+      .coalesce(1).write.mode("append").parquet(srcDir)
+    val out = tmpDir("conf-window-out")
+    val ck = tmpDir("conf-window-ck")
+    StreamingSpec.caller = spark
+    // evaluated inside the running micro-batch: waits (bounded) for the
+    // caller's value to come back — it can only if the harness restored
+    // it before awaiting the query
+    val restored = udf { (_: Long) =>
+      StreamingSpec.awaitCallerConf(key, callerValue)
+    }.asNondeterministic()
+    EventsStream.replayToParquet(
+      EventsStream.fromParquetDir(spark, srcDir)
+        .select(col("event_id"), restored(col("event_id")).as("restored")),
+      out, ck, statePartitions = Some(3))
+    assert(spark.conf.get(key) === callerValue)
+    assert(spark.read.parquet(out).select("restored").distinct()
+      .collect().map(_.getBoolean(0)).toSeq === Seq(true))
+    // the query itself ran with the replay's value: batch 0's offset
+    // metadata records the confs the query started with
+    val offsets0 = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(ck, "offsets", "0")), "UTF-8")
+    assert(offsets0.contains("\"" + key + "\":\"3\""), offsets0)
+  }
+}
+
+object StreamingSpec {
+  /** The session a replay was started from, for probes that run inside
+    * the query's tasks (same JVM under `local[...]`). */
+  @volatile var caller: org.apache.spark.sql.SparkSession = _
+
+  /** Whether `key` on [[caller]] reads `expected` within 60 s. */
+  def awaitCallerConf(key: String, expected: String): Boolean = {
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (caller.conf.get(key) != expected && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    caller.conf.get(key) == expected
   }
 }
